@@ -30,6 +30,29 @@ def shuffle_partition_count(spark: SparkSession, default: int = 200) -> int:
         return max(2, int(spark.sparkContext.defaultParallelism))
 
 
+def _has_exchange(plan) -> bool:
+    """Whether the JVM physical ``plan`` holds an exchange node
+    (``Exchange``, ``BroadcastExchange``, ``ReusedExchange``) anywhere
+    in its tree — through AQE wrappers and query stages, cached
+    relations and subqueries. Node names, not plan text: a column
+    name or string literal can spell "Exchange" too."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.endswith("Exchange"):
+            return True
+        # AQE's wrapper and its query stages are leaves that hold
+        # their plan outside children/innerChildren
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 def widen_narrow_input(df, *keys):
     """Conditionally widen a scan-width-bound frame before a
     compute-dense per-row stage (Python fingerprinting, codec decode,
@@ -45,12 +68,10 @@ def widen_narrow_input(df, *keys):
     (``toRdd``), so a frame whose physical plan already contains an
     ``Exchange`` is passed through untouched rather than probed: its
     width is shuffle-determined (not scan-determined), and probing it
-    would silently execute the upstream stages twice."""
+    would silently execute the upstream stages twice. That includes a
+    ``BroadcastExchange``: its build side is a job of its own."""
     npart = max(2, shuffle_partition_count(df.sparkSession))
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-    if "Exchange" in plan:
+    if _has_exchange(df._jdf.queryExecution().executedPlan()):
         return df
     if df.rdd.getNumPartitions() < npart:
         return df.repartition(npart, *keys)

@@ -5,7 +5,11 @@ settings read (``onefs.py:1099-1120``): an event feed with a maximum
 delivery delay and a retention horizon. The engine maps that contract
 onto Structured Streaming over the ``events`` table — max delay ==
 watermark, retention == watermark-driven state eviction — and the
-reference's idempotent sinks (S9) onto ``foreachBatch`` merges.
+reference's idempotent sinks (S9) onto ``foreachBatch`` merges. Every
+such maintainer drains its source through the one
+:func:`~isilon_hadoop_tools_spark.streaming.events.drain`
+(``foreachBatch`` + ``trigger(availableNow)`` + optional checkpoint);
+only the per-batch applier differs.
 """
 
 from isilon_hadoop_tools_spark.streaming.neardup import (

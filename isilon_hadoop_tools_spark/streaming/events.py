@@ -317,6 +317,22 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
+def drain(source: DataFrame, apply_batch, checkpoint: str | None) -> None:
+    """Drain ``source`` through ``apply_batch(batch, batch_id)`` via
+    ``foreachBatch`` with ``trigger(availableNow)`` and block until
+    every available input is consumed — the one writer behind every
+    ``*_stream_into_state`` / ``*_stream_into_snapshots`` maintainer.
+    With a ``checkpoint`` location a restart resumes after the last
+    committed batch; without one every drain replays the whole
+    source, which each applier's own idempotence absorbs."""
+    writer = source.writeStream.foreachBatch(apply_batch).trigger(
+        availableNow=True
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer.start().awaitTermination()
+
+
 def hll_stream_into_state(
     events: DataFrame,
     state: ParquetState,
@@ -345,13 +361,7 @@ def hll_stream_into_state(
         current = state.read(table, schema)
         state.write(table, hll_merge([current, delta]))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 def merge_stream_into_state(
@@ -371,11 +381,7 @@ def merge_stream_into_state(
         current = state.read(table, schema)
         state.write(table, merge_create(current, delta, "event_id"))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 def _marker_gate(current: DataFrame, batch_id: int, schema: str):
@@ -457,13 +463,7 @@ def banded_count_stream_into_state(
         )
         state.write(table, merged.unionByName(markers))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 def cms_stream_into_state(
@@ -528,19 +528,27 @@ def cms_stream_into_state(
             cms_merge([counts, delta]).unionByName(markers),
         )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 CDC_STATE_SCHEMA = (
     "user_id LONG, ts TIMESTAMP, event_id LONG, "
     "event_type STRING, value DOUBLE"
 )
+
+
+def _cdc_latest(df: DataFrame) -> DataFrame:
+    """Per-key latest row under the (ts, event_id) total order — the
+    CDC merge algebra shared by the state writer and the
+    merge-on-read reader. Order-independent and idempotent:
+    ``latest(A ∪ B) == latest(latest(A) ∪ latest(B))``."""
+    order = F.struct(F.col("ts").alias("_t"), F.col("event_id").alias("_tb"))
+    payload = F.struct("ts", "event_id", "event_type", "value")
+    return (
+        df.groupBy("user_id")
+        .agg(F.max_by(payload, order).alias("_p"))
+        .select("user_id", "_p.*")
+    )
 
 
 def cdc_stream_into_state(
@@ -566,29 +574,10 @@ def cdc_stream_into_state(
     """
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        order = F.struct(
-            F.col("ts").alias("_t"), F.col("event_id").alias("_tb")
-        )
-        payload = F.struct("ts", "event_id", "event_type", "value")
-        delta = batch.groupBy("user_id").agg(
-            F.max_by(payload, order).alias("_p")
-        ).select("user_id", "_p.*")
         current = state.read(table, CDC_STATE_SCHEMA)
-        merged = (
-            current.unionByName(delta)
-            .groupBy("user_id")
-            .agg(F.max_by(payload, order).alias("_p"))
-            .select("user_id", "_p.*")
-        )
-        state.write(table, merged)
+        state.write(table, _cdc_latest(current.unionByName(_cdc_latest(batch))))
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 KMV_STATE_SCHEMA = "h LONG, event_id LONG, value DOUBLE"
@@ -638,27 +627,7 @@ def kmv_stream_into_state(
         )
         state.write(table, merged)
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
-
-
-def _cdc_latest(df: DataFrame) -> DataFrame:
-    """Per-key latest row under the (ts, event_id) total order — the
-    CDC merge algebra shared by the state writer and the
-    merge-on-read reader. Order-independent and idempotent:
-    ``latest(A ∪ B) == latest(latest(A) ∪ latest(B))``."""
-    order = F.struct(F.col("ts").alias("_t"), F.col("event_id").alias("_tb"))
-    payload = F.struct("ts", "event_id", "event_type", "value")
-    return (
-        df.groupBy("user_id")
-        .agg(F.max_by(payload, order).alias("_p"))
-        .select("user_id", "_p.*")
-    )
+    drain(events, apply_batch, checkpoint)
 
 
 def cdc_state_from_snapshots(
@@ -667,8 +636,8 @@ def cdc_state_from_snapshots(
     """The CDC state table at ``version`` (default: latest) under the
     merge-on-read discipline: union the :func:`delta_chain` members
     and collapse with the per-key max_by merge. A version whose chain
-    is a single FULL snapshot (a compaction commit, or rewrite mode)
-    is returned as-is — already merged, no aggregate paid."""
+    is a single FULL snapshot (a compaction commit) is returned
+    as-is — already merged, no aggregate paid."""
     from isilon_hadoop_tools_spark.operators.snapshots import (
         delta_chain,
         snapshot_read,
@@ -685,7 +654,6 @@ def cdc_stream_into_snapshots(
     events: DataFrame,
     table_dir: str,
     checkpoint: str | None = None,
-    mode: str = "merge_on_read",
     compact_every: int = 4,
     vacuum_keep: int | None = None,
 ) -> None:
@@ -701,25 +669,16 @@ def cdc_stream_into_snapshots(
     converges, because the per-key (ts, event_id) max_by merge is
     idempotent.
 
-    ``mode`` picks the write amplification trade (ADVICE r14 — the
-    old behavior rewrote the ENTIRE merged state every micro-batch,
-    an O(state × batches) copy-on-write cost with unbounded
-    versions/files):
+    Writes are merge-on-read: each batch commits ONLY its per-key
+    latest rows as a ``kind="delta"`` snapshot — O(batch) written per
+    commit — and every ``compact_every``-th commit folds the chain
+    into a ``kind="full"`` compaction snapshot, so a chain is never
+    longer than ``compact_every`` and the read cost (union + one
+    aggregate) stays bounded. Readers use
+    :func:`cdc_state_from_snapshots`, never a raw ``snapshot_read``
+    of a delta version.
 
-    - ``"merge_on_read"`` (default): each batch commits ONLY its
-      per-key latest rows as a ``kind="delta"`` snapshot — O(batch)
-      written per commit — and every ``compact_every``-th commit
-      folds the chain into a ``kind="full"`` compaction snapshot, so
-      a chain is never longer than ``compact_every`` and the read
-      cost (union + one aggregate) stays bounded. Readers use
-      :func:`cdc_state_from_snapshots`, never a raw
-      ``snapshot_read`` of a delta version.
-    - ``"rewrite"``: the old behavior — every commit is a full
-      snapshot. Reads are a bare ``snapshot_read``; writes are
-      O(state) per batch. Only sensible for small state or rare
-      batches.
-
-    Either way, pair a long-running stream with vacuum: pass
+    Pair a long-running stream with vacuum: pass
     ``vacuum_keep=N`` to expire all but the last N versions after
     each compaction (merge-on-read keeps every kept version's chain
     readable — the vacuum closure), or run ``snapshot_vacuum``
@@ -727,14 +686,8 @@ def cdc_stream_into_snapshots(
     files accrue without bound — that is the documented cost of
     time travel, not a leak.
     """
-    if mode not in ("merge_on_read", "rewrite"):
-        raise ValueError(
-            f"mode must be 'merge_on_read' or 'rewrite'; got {mode!r}"
-        )
     if compact_every < 2:
         raise ValueError(f"compact_every must be >= 2; got {compact_every}")
-    from pyspark.sql.types import StructType
-
     from isilon_hadoop_tools_spark.operators.snapshots import (
         delta_chain,
         latest_version,
@@ -745,17 +698,6 @@ def cdc_stream_into_snapshots(
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         delta = _cdc_latest(batch)
-        if mode == "rewrite":
-            try:
-                current = cdc_state_from_snapshots(spark, table_dir)
-            except FileNotFoundError:
-                current = spark.createDataFrame(
-                    [], StructType.fromDDL(CDC_STATE_SCHEMA)
-                )
-            snapshot_write(
-                _cdc_latest(current.unionByName(delta)), table_dir
-            )
-            return
         base = latest_version(table_dir)
         chain = delta_chain(table_dir) if base is not None else []
         if len(chain) + 1 > compact_every:
@@ -772,13 +714,7 @@ def cdc_stream_into_snapshots(
                 delta, table_dir, kind="delta", base_version=base
             )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 SPRT_STATE_SCHEMA = (
@@ -913,13 +849,7 @@ def sprt_stream_into_state(
         )
 
     src = events.withColumn("_hit", F.col("event_type") == "purchase")
-    writer = src.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(src, apply_batch, checkpoint)
 
 
 def append_stream_into_snapshots(
@@ -948,42 +878,41 @@ def append_stream_into_snapshots(
     """
     from isilon_hadoop_tools_spark.operators.snapshots import (
         latest_version,
-        snapshot_publish,
         snapshot_write,
     )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        wm, wm_version = _latest_batch_watermark(table_dir)
-        # heal a crash between the manifest write and the pointer
-        # swap: the newest append commit is durable but unpublished —
-        # promote it so this commit's chain extends it instead of
-        # silently dropping its rows
-        if wm_version is not None and (
-            latest_version(table_dir) or 0
-        ) < wm_version:
-            snapshot_publish(table_dir, wm_version)
-        if wm is not None and batch_id <= wm:
+        if _batch_committed(table_dir, batch_id):
             return  # replayed micro-batch: already committed
         snapshot_write(
             batch,
             table_dir,
             kind="delta",
             base_version=latest_version(table_dir),
-            meta={
-                "batch_id": int(batch_id),
-                "batch_watermark": int(
-                    batch_id if wm is None else max(batch_id, wm)
-                ),
-            },
+            meta={"batch_id": int(batch_id), "batch_watermark": int(batch_id)},
         )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+    drain(events, apply_batch, checkpoint)
+
+
+def _batch_committed(table_dir: str, batch_id: int) -> bool:
+    """The replay gate of the batch-watermark snapshot streams: True
+    when ``batch_id`` is at or below the recorded watermark (already
+    committed — micro-batch ids are monotonic, so a newly committed
+    batch's own id IS the new watermark). Heals first: when a crash
+    fell between the newest watermark commit's manifest write and its
+    pointer swap, that commit is durable but unpublished — promote it
+    so the next commit's chain extends it instead of silently
+    dropping its rows."""
+    from isilon_hadoop_tools_spark.operators.snapshots import (
+        latest_version,
+        snapshot_publish,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+
+    wm, wm_version = _latest_batch_watermark(table_dir)
+    if wm_version is not None and (latest_version(table_dir) or 0) < wm_version:
+        snapshot_publish(table_dir, wm_version)
+    return wm is not None and batch_id <= wm
 
 
 def _latest_batch_watermark(table_dir: str) -> tuple[int | None, int | None]:
@@ -1046,24 +975,15 @@ def cdc_delete_stream_into_snapshots(
     """
     from isilon_hadoop_tools_spark.operators.snapshots import (
         latest_version,
-        snapshot_publish,
         snapshot_write,
     )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        wm, wm_version = _latest_batch_watermark(table_dir)
-        if wm_version is not None and (
-            latest_version(table_dir) or 0
-        ) < wm_version:
-            # heal a crash between a manifest write and its pointer
-            # swap before extending the chain past it
-            snapshot_publish(table_dir, wm_version)
-        if wm is not None and batch_id <= wm:
+        if _batch_committed(table_dir, batch_id):
             return  # replayed micro-batch: already committed
         winners = _cdc_latest(batch)
         ups = winners.filter(~delete_when)
         dels = winners.filter(delete_when).select("user_id")
-        new_wm = int(batch_id if wm is None else max(batch_id, wm))
         v_delta = snapshot_write(
             ups,
             table_dir,
@@ -1076,16 +996,10 @@ def cdc_delete_stream_into_snapshots(
             table_dir,
             kind="delete",
             base_version=v_delta,
-            meta={"batch_id": int(batch_id), "batch_watermark": new_wm},
+            meta={"batch_id": int(batch_id), "batch_watermark": int(batch_id)},
         )
 
-    writer = events.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, apply_batch, checkpoint)
 
 
 def cdc_state_from_mor_snapshots(

@@ -4,10 +4,13 @@ pairs and MinHash-LSH candidates over a continuously-crawled corpus.
 The production shape: each micro-batch of new documents is
 fingerprinted, matched against a persisted band index, and the
 newly-created near-dup pairs are appended — without ever re-running
-the corpus-wide band self-join. Two instances of one design:
+the corpus-wide band self-join. Three instances of one design, each a
+thin caller of ``_band_index_apply``:
 :func:`simhash_index_apply_batch` (integer fingerprints, bit-slice
-bands, hamming filter) and :func:`minhash_index_apply_batch`
-(signature strings, band-key equality, agreeing-band counts).
+bands, hamming filter), :func:`minhash_index_apply_batch`
+(signature strings, band-key equality, agreeing-band counts) and
+:func:`tagged_index_apply_batch` (per-modality SimHash buckets in
+one index).
 
 State (``ParquetState`` tables; Delta/Iceberg MERGE on a real
 deployment):
@@ -62,6 +65,8 @@ from isilon_hadoop_tools_spark.operators.dedup import (
     simhash,
 )
 from isilon_hadoop_tools_spark.plans.state import ParquetState
+from isilon_hadoop_tools_spark.session import shuffle_partition_count
+from isilon_hadoop_tools_spark.streaming.events import drain
 
 MEMBERS_SCHEMA = "id LONG, fp LONG"
 POSTINGS_SCHEMA = "band_idx INT, band_val LONG, fp LONG"
@@ -70,6 +75,179 @@ PAIRS_SCHEMA = "id_a LONG, id_b LONG, hamming INT"
 SIG_MEMBERS_SCHEMA = "id LONG, sig_key STRING"
 SIG_POSTINGS_SCHEMA = "band INT, band_key STRING, sig_key STRING"
 SIG_PAIRS_SCHEMA = "id_a LONG, id_b LONG, n_bands LONG"
+
+
+def _new_rows(
+    batch: DataFrame, members: DataFrame, keys: list
+) -> DataFrame | None:
+    """The rows of ``batch`` whose ``keys`` are not in ``members`` yet,
+    eagerly checkpointed — batch-sized and consumed by several later
+    steps, so the upstream work must not recompute per consumer — or
+    ``None`` when the batch is empty or already folded in. This
+    anti-join is what makes every member-based applier a no-op on a
+    replayed batch, with or without a stream checkpoint."""
+    new = batch.join(members.select(*keys), keys, "left_anti").localCheckpoint(
+        eager=True
+    )
+    return new if new.take(1) else None
+
+
+def _hamming_within(bound):
+    """Band-index candidate scorer: DISTINCT fingerprint pairs (a
+    re-added posting row must not count twice) whose hamming distance
+    is at most ``bound`` — a literal or a per-row Column."""
+
+    def score(joined: DataFrame, keys: list) -> DataFrame:
+        return (
+            joined.select(*keys)
+            .distinct()
+            .withColumn(
+                "hamming",
+                F.bit_count(F.col("_d").bitwiseXOR(F.col("_o"))).cast("int"),
+            )
+            .filter(F.col("hamming") <= bound)
+        )
+
+    return score
+
+
+def _agreeing_bands(joined: DataFrame, keys: list) -> DataFrame:
+    """Band-index candidate scorer for band KEYS: the number of
+    DISTINCT agreeing bands per signature pair — raw join rows would
+    inflate it when a partial-append crash left duplicate postings."""
+    return joined.groupBy(*keys).agg(F.countDistinct("band").alias("n_bands"))
+
+
+def _band_index_apply(
+    delta: DataFrame,
+    state: ParquetState,
+    label: str,
+    tables: tuple,
+    part: list,
+    fp: str,
+    band_cols: tuple,
+    band_arr,
+    score,
+    merge,
+) -> None:
+    """The one crash-safe band-index fold behind the SimHash, MinHash
+    and tagged appliers (see the module docstring for the design).
+
+    ``delta`` holds the batch's ``(*part, id, fp)`` rows; ``tables``
+    is the ``(name, schema)`` triple of the members, postings and
+    pairs tables; ``part`` the keys every bucket and pair is scoped
+    by (``[]`` or ``["modality"]``); ``band_arr`` the band array over
+    the ``fp`` column whose ``posexplode`` yields ``band_cols``;
+    ``score(joined, keys)`` reduces band-join rows to ``keys`` plus
+    one score column, which ``merge`` (``F.min``/``F.max``) folds per
+    pair into the persisted answer. Every step's jobs carry a
+    ``label`` description; the caller's description is restored on
+    any exit."""
+    (mem_t, mem_s), (post_t, post_s), (pair_t, pair_s) = tables
+    spark = delta.sparkSession
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    # width pin for the delta checkpoint AND the pair merge: without
+    # it the checkpoint materializes at the anti-join's AQE-coalesced
+    # width (1 partition for a micro-batch) and the band fan-out +
+    # candidate stage downstream runs single-task (profiled 0.8 →
+    # 1.9 → 2.3 s across three batches on the unified twin), and
+    # the merge aggregation collapses to one task the same way
+    npart = max(2, shuffle_partition_count(spark))
+    keys = part + [fp]
+    try:
+        sc.setJobDescription(f"{label}: new members")
+        members = state.read(mem_t, mem_s)
+        new_members = _new_rows(delta, members, part + ["id"])
+        if new_members is None:
+            return
+        postings = state.read(post_t, post_s)
+        sc.setJobDescription(f"{label}: delta checkpoint")
+        # the keyed numbered repartition REPLACES the distinct's
+        # exchange (same required distribution, AQE-exempt)
+        delta_fps = (
+            new_members.select(*keys)
+            .repartition(npart, *keys)
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        new_fps = delta_fps.join(
+            postings.filter(F.col(band_cols[0]) == 0).select(*keys),
+            keys,
+            "left_anti",
+        )
+        sc.setJobDescription(f"{label}: postings checkpoint")
+        new_postings = (
+            new_fps.select(*part, F.posexplode(band_arr).alias(*band_cols), fp)
+            .select(*part, F.col(band_cols[0]).cast("int"), band_cols[1], fp)
+            # eager: O(batch) rows, consumed by the candidate join AND
+            # the postings append. Checkpointing the whole postings
+            # union instead was an O(index) materialization per batch
+            # that grew with the stream (profiled 0.7 → 1.4 → 2.4 s
+            # across three batches); the union stays lazy and the
+            # index side streams straight from its parquet scan.
+            .localCheckpoint(eager=True)
+        )
+        all_postings = postings.unionByName(new_postings)
+        # pigeonhole candidates: the batch's distinct fingerprints x
+        # the full index on (band, band value) — includes fp == fp
+        # (identical fingerprints agree on every band)
+        joined = (
+            delta_fps.select(
+                *part,
+                F.col(fp).alias("_d"),
+                F.posexplode(band_arr).alias(*band_cols),
+            )
+            .join(all_postings, part + list(band_cols))
+            .select(*part, "_d", F.col(fp).alias("_o"), band_cols[0])
+        )
+        cand = score(joined, part + ["_d", "_o"])
+        score_col = cand.columns[-1]
+        merged_members = members.unionByName(new_members)
+        pairs = (
+            cand.join(
+                new_members.select(
+                    *part, F.col(fp).alias("_d"), F.col("id").alias("_ida")
+                ),
+                part + ["_d"],
+            )
+            .join(
+                merged_members.select(
+                    *part, F.col(fp).alias("_o"), F.col("id").alias("_idb")
+                ),
+                part + ["_o"],
+            )
+            .select(
+                *part,
+                F.least("_ida", "_idb").alias("id_a"),
+                F.greatest("_ida", "_idb").alias("id_b"),
+                score_col,
+            )
+            # drops self-pairs; a both-new pair arrives once per
+            # direction with the SAME symmetric score, so the merge
+            # groupBy collapses it — a distinct() here was a second
+            # full exchange of the pair rows for nothing
+            .filter(F.col("id_a") < F.col("id_b"))
+        )
+        current = state.read(pair_t, pair_s)
+        sc.setJobDescription(f"{label}: pairs merge write")
+        state.write(
+            pair_t,
+            current.unionByName(pairs)
+            .groupBy(*part, "id_a", "id_b")
+            .agg(merge(score_col).alias(score_col)),
+            partitions=npart,
+        )
+        # index tables APPEND their delta — O(batch) writes per batch,
+        # not an O(corpus) rewrite (swap-on-write would make total
+        # write work quadratic in the stream length). Members land
+        # last: they are the batch's commit point.
+        sc.setJobDescription(f"{label}: postings append")
+        state.append(post_t, new_postings)
+        sc.setJobDescription(f"{label}: members append")
+        state.append(mem_t, new_members)
+    finally:
+        sc.setJobDescription(prior)
 
 
 def simhash_index_apply_batch(
@@ -85,123 +263,24 @@ def simhash_index_apply_batch(
     append the newly-detected near-dup pairs (see module docstring)."""
     if max_hamming >= bands:
         raise ValueError("completeness requires max_hamming < bands")
-    delta = simhash(batch, text_col, id_col, bits).select(
-        "id", F.col("simhash").alias("fp")
-    )
-    members = state.read("fp_members", MEMBERS_SCHEMA)
-    # eager localCheckpoint: batch-sized, consumed by the candidate
-    # expansion AND the members merge — must not recompute the
-    # fingerprint aggregation per consumer
-    new_members = delta.join(
-        members.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)
-    if not new_members.take(1):
-        return  # replayed or empty batch: nothing to fold in
-    postings = state.read("band_postings", POSTINGS_SCHEMA)
-    # keyed numbered repartition REPLACES the distinct's exchange
-    # (same required distribution, AQE-exempt): without it the
-    # checkpoint materializes at the anti-join's AQE-coalesced width
-    # (1 partition for a micro-batch) and the band fan-out + hamming
-    # candidate stage downstream runs single-task — profiled 0.8 →
-    # 1.9 → 2.3 s across three batches on the unified twin.
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    _npart = max(2, shuffle_partition_count(batch.sparkSession))
-    delta_fps = (
-        new_members.select("fp")
-        .repartition(_npart, "fp")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    new_fps = delta_fps.join(
-        postings.filter(F.col("band_idx") == 0).select("fp"), "fp", "left_anti"
-    )
-    new_postings = (
-        new_fps.select(
-            F.posexplode(band_slice_array(F.col("fp"), bits, bands)).alias(
-                "band_idx", "band_val"
-            ),
-            "fp",
-        )
-        .select(F.col("band_idx").cast("int"), "band_val", "fp")
-        # eager: O(batch) rows, consumed by the candidate join AND the
-        # postings append. The earlier form checkpointed the WHOLE
-        # postings union instead — an O(index) materialization per
-        # batch that grew with the stream (profiled 0.7 → 1.4 → 2.4 s
-        # across three batches); the union below is lazy now and the
-        # index side streams straight from its parquet scan.
-        .localCheckpoint(eager=True)
-    )
-    all_postings = postings.unionByName(new_postings)
-    # pigeonhole candidates: batch's distinct fps x the full index,
-    # keyed on (band slice index, slice value) — includes the
-    # fp==fp case (identical fingerprints agree on every band)
-    delta_banded = delta_fps.select(
-        F.col("fp").alias("fp_d"),
-        F.posexplode(band_slice_array(F.col("fp"), bits, bands)).alias(
-            "band_idx", "band_val"
+    _band_index_apply(
+        simhash(batch, text_col, id_col, bits).select(
+            "id", F.col("simhash").alias("fp")
         ),
+        state,
+        "simhash_index",
+        (
+            ("fp_members", MEMBERS_SCHEMA),
+            ("band_postings", POSTINGS_SCHEMA),
+            ("near_pairs", PAIRS_SCHEMA),
+        ),
+        part=[],
+        fp="fp",
+        band_cols=("band_idx", "band_val"),
+        band_arr=band_slice_array(F.col("fp"), bits, bands),
+        score=_hamming_within(max_hamming),
+        merge=F.min,
     )
-    cand = (
-        delta_banded.join(all_postings, ["band_idx", "band_val"])
-        .select("fp_d", F.col("fp").alias("fp_o"))
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("fp_d").bitwiseXOR(F.col("fp_o"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    merged_members = members.unionByName(new_members)
-    pairs = (
-        cand.join(
-            new_members.select(F.col("fp").alias("fp_d"), F.col("id").alias("_ida")),
-            "fp_d",
-        )
-        .join(
-            merged_members.select(
-                F.col("fp").alias("fp_o"), F.col("id").alias("_idb")
-            ),
-            "fp_o",
-        )
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "hamming",
-        )
-        # drops self-pairs; the double emission of both-new pairs
-        # (x from the batch side, y from the index side and vice
-        # versa) carries the SAME symmetric hamming both ways, so the
-        # min-merge groupBy below collapses it — a distinct() here
-        # was a second full exchange of the pair rows for nothing
-        # (profiled as an extra AQE stage per batch, with the map
-        # side coalesced to 1 task on later batches)
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    current = state.read("near_pairs", PAIRS_SCHEMA)
-    # wide write: coalesce(1) would collapse the merge aggregation
-    # itself to one task (profiled as multi-second single-task jobs
-    # on the later batches); passing the plan's shuffle width keeps
-    # the groupBy stage parallel at the cost of more (swap-replaced,
-    # never accumulating) state files.
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    state.write(
-        "near_pairs",
-        current.unionByName(pairs)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("hamming").cast("int").alias("hamming")),
-        partitions=max(2, shuffle_partition_count(batch.sparkSession)),
-    )
-    # index tables APPEND their delta — O(batch) writes per batch,
-    # not an O(corpus) rewrite (swap-on-write would make total write
-    # work quadratic in the stream length). Partial-append crash
-    # windows are covered: the members anti-join re-adds only missing
-    # ids, the postings anti-join re-adds only fps missing band 0,
-    # and candidate generation dedups (fp_d, fp_o) before the
-    # hamming filter so re-added posting rows cannot double-count.
-    state.append("band_postings", new_postings)
-    state.append("fp_members", new_members)
 
 
 def simhash_stream_into_state(
@@ -219,9 +298,11 @@ def simhash_stream_into_state(
     ``trigger(availableNow)`` — the streaming twin of the batch
     ``simhash_near_pairs``, replay-proof with or without a
     checkpoint (the members anti-join makes every batch idempotent)."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        simhash_index_apply_batch(
+    # the applier is looked up at batch time, not bound here, so a
+    # rebinding of the module attribute (tracing) sees every batch
+    drain(
+        docs,
+        lambda batch, _batch_id: simhash_index_apply_batch(
             batch,
             state,
             text_col=text_col,
@@ -229,13 +310,9 @@ def simhash_stream_into_state(
             bits=bits,
             max_hamming=max_hamming,
             bands=bands,
-        )
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+        ),
+        checkpoint,
+    )
 
 
 def minhash_index_apply_batch(
@@ -263,95 +340,22 @@ def minhash_index_apply_batch(
     x, y arrives — the earlier signature is in the postings by then,
     and agreeing bands join key-for-key).
     """
-    delta = minhash_sig_keys(batch, text_col, id_col, num_hashes, bands, k)
-    members = state.read("sig_members", SIG_MEMBERS_SCHEMA)
-    new_members = delta.join(
-        members.select("id"), "id", "left_anti"
-    ).localCheckpoint(eager=True)
-    if not new_members.take(1):
-        return  # replayed or empty batch
-    postings = state.read("sig_postings", SIG_POSTINGS_SCHEMA)
-    # width-pinned delta checkpoint — see simhash_index_apply_batch
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    _npart = max(2, shuffle_partition_count(batch.sparkSession))
-    delta_sigs = (
-        new_members.select("sig_key")
-        .repartition(_npart, "sig_key")
-        .distinct()
-        .localCheckpoint(eager=True)
+    _band_index_apply(
+        minhash_sig_keys(batch, text_col, id_col, num_hashes, bands, k),
+        state,
+        "minhash_index",
+        (
+            ("sig_members", SIG_MEMBERS_SCHEMA),
+            ("sig_postings", SIG_POSTINGS_SCHEMA),
+            ("lsh_pairs", SIG_PAIRS_SCHEMA),
+        ),
+        part=[],
+        fp="sig_key",
+        band_cols=("band", "band_key"),
+        band_arr=F.split("sig_key", r"\|"),
+        score=_agreeing_bands,
+        merge=F.max,
     )
-    new_sigs = delta_sigs.join(
-        postings.filter(F.col("band") == 0).select("sig_key"),
-        "sig_key",
-        "left_anti",
-    )
-    new_postings = (
-        new_sigs.select(
-            F.posexplode(F.split("sig_key", r"\|")).alias("band", "band_key"),
-            "sig_key",
-        )
-        .select(F.col("band").cast("int"), "band_key", "sig_key")
-        # eager O(batch) checkpoint; the index union stays lazy (see
-        # simhash_index_apply_batch — the old O(index)-per-batch
-        # union checkpoint grew with the stream)
-        .localCheckpoint(eager=True)
-    )
-    all_postings = postings.unionByName(new_postings)
-    delta_banded = delta_sigs.select(
-        F.col("sig_key").alias("sig_d"),
-        F.posexplode(F.split("sig_key", r"\|")).alias("band", "band_key"),
-    )
-    # candidate signature pairs; the collision count IS the number of
-    # agreeing bands (band keys join key-for-key), including the
-    # sig==sig case where every band agrees
-    cand = (
-        delta_banded.join(all_postings, ["band", "band_key"])
-        .select("sig_d", F.col("sig_key").alias("sig_o"), "band")
-        .groupBy("sig_d", "sig_o")
-        # DISTINCT bands, not raw join rows: a partial-append crash
-        # can leave duplicate posting rows for a signature, and raw
-        # counting would inflate n_bands
-        .agg(F.countDistinct("band").alias("n_bands"))
-    )
-    merged_members = members.unionByName(new_members)
-    pairs = (
-        cand.join(
-            new_members.select(
-                F.col("sig_key").alias("sig_d"), F.col("id").alias("_ida")
-            ),
-            "sig_d",
-        )
-        .join(
-            merged_members.select(
-                F.col("sig_key").alias("sig_o"), F.col("id").alias("_idb")
-            ),
-            "sig_o",
-        )
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "n_bands",
-        )
-        # both-new pairs arrive once per direction with the SAME
-        # n_bands (band agreement is symmetric), so the max-merge
-        # groupBy below collapses them — no distinct() exchange here
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    current = state.read("lsh_pairs", SIG_PAIRS_SCHEMA)
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    state.write(
-        "lsh_pairs",
-        current.unionByName(pairs)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("n_bands").alias("n_bands")),
-        # wide write — see simhash_index_apply_batch
-        partitions=max(2, shuffle_partition_count(batch.sparkSession)),
-    )
-    # O(delta) index appends — see simhash_index_apply_batch
-    state.append("sig_postings", new_postings)
-    state.append("sig_members", new_members)
 
 
 def minhash_stream_into_state(
@@ -369,9 +373,9 @@ def minhash_stream_into_state(
     ``trigger(availableNow)`` — replay-proof with or without a
     checkpoint, the streaming twin of the batch LSH candidate
     generation."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        minhash_index_apply_batch(
+    drain(
+        docs,
+        lambda batch, _batch_id: minhash_index_apply_batch(
             batch,
             state,
             text_col=text_col,
@@ -379,13 +383,9 @@ def minhash_stream_into_state(
             num_hashes=num_hashes,
             bands=bands,
             k=k,
-        )
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
+        ),
+        checkpoint,
+    )
 
 
 IVF_MEMBERS_SCHEMA = "vid LONG"
@@ -419,9 +419,10 @@ def ivf_index_apply_batch(
     )
 
     members = state.read("ivf_members", IVF_MEMBERS_SCHEMA)
-    qv = quantize_vectors(batch, vec_col, id_col, scale)
-    new = qv.join(members, "vid", "left_anti").localCheckpoint(eager=True)
-    if not new.take(1):
+    new = _new_rows(
+        quantize_vectors(batch, vec_col, id_col, scale), members, ["vid"]
+    )
+    if new is None:
         return  # replayed or empty batch
     assign = kmeans_assign(new, centroids).select(
         F.col("list_id").cast("int"), "vid", "dist"
@@ -446,19 +447,13 @@ def ivf_stream_into_state(
     """Drain a vector stream into the IVF inverted-list state with
     ``foreachBatch`` + ``availableNow`` (see
     :func:`ivf_index_apply_batch`)."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        ivf_index_apply_batch(
+    drain(
+        vecs,
+        lambda batch, _batch_id: ivf_index_apply_batch(
             batch, state, centroids, vec_col, id_col, scale
-        )
-
-    writer = vecs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 TAGGED_MEMBERS_SCHEMA = "modality STRING, id LONG, fp LONG"
@@ -511,112 +506,24 @@ def tagged_index_apply_batch(
     # IS NOT NULL filter on its keys, but this posting build has no
     # such join, and an implicit dependence on optimizer inference is
     # exactly what let a NULL-tag row previously fail whole batches.
-    delta = fps.filter(F.col("modality").isNotNull()).select(
-        "modality", "id", F.col("fhash").alias("fp")
+    _band_index_apply(
+        fps.filter(F.col("modality").isNotNull()).select(
+            "modality", "id", F.col("fhash").alias("fp")
+        ),
+        state,
+        "tagged_index",
+        (
+            ("tfp_members", TAGGED_MEMBERS_SCHEMA),
+            ("tband_postings", TAGGED_POSTINGS_SCHEMA),
+            ("tnear_pairs", TAGGED_PAIRS_SCHEMA),
+        ),
+        part=["modality"],
+        fp="fp",
+        band_cols=("band_idx", "band_val"),
+        band_arr=tagged_band_slice_array(F.col("fp"), F.col("modality"), params),
+        score=_hamming_within(max_h_expr),
+        merge=F.min,
     )
-    sc = fps.sparkSession.sparkContext
-    members = state.read("tfp_members", TAGGED_MEMBERS_SCHEMA)
-    sc.setJobDescription("tagged_index: new_members checkpoint")
-    new_members = delta.join(
-        members.select("modality", "id"), ["modality", "id"], "left_anti"
-    ).localCheckpoint(eager=True)
-    sc.setJobDescription("tagged_index: empty-batch probe")
-    if not new_members.take(1):
-        sc.setJobDescription(None)
-        return  # replayed or empty batch
-    postings = state.read("tband_postings", TAGGED_POSTINGS_SCHEMA)
-    # width-pinned delta checkpoint — see simhash_index_apply_batch
-    from isilon_hadoop_tools_spark.session import shuffle_partition_count
-
-    _npart = max(2, shuffle_partition_count(fps.sparkSession))
-    sc.setJobDescription("tagged_index: delta_fps checkpoint")
-    delta_fps = (
-        new_members.select("modality", "fp")
-        .repartition(_npart, "modality", "fp")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    new_fps = delta_fps.join(
-        postings.filter(F.col("band_idx") == 0).select("modality", "fp"),
-        ["modality", "fp"],
-        "left_anti",
-    )
-    band_arr = tagged_band_slice_array(
-        F.col("fp"), F.col("modality"), params
-    )
-    sc.setJobDescription("tagged_index: new_postings checkpoint")
-    new_postings = (
-        new_fps.select(
-            "modality",
-            F.posexplode(band_arr).alias("band_idx", "band_val"),
-            "fp",
-        )
-        .select(
-            "modality", F.col("band_idx").cast("int"), "band_val", "fp"
-        )
-        # eager O(batch) checkpoint; the index union stays lazy (see
-        # simhash_index_apply_batch — the old O(index)-per-batch
-        # union checkpoint grew with the stream)
-        .localCheckpoint(eager=True)
-    )
-    all_postings = postings.unionByName(new_postings)
-    delta_banded = delta_fps.select(
-        "modality",
-        F.col("fp").alias("fp_d"),
-        F.posexplode(
-            tagged_band_slice_array(F.col("fp"), F.col("modality"), params)
-        ).alias("band_idx", "band_val"),
-    )
-    cand = (
-        delta_banded.join(all_postings, ["modality", "band_idx", "band_val"])
-        .select("modality", "fp_d", F.col("fp").alias("fp_o"))
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("fp_d").bitwiseXOR(F.col("fp_o"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_h_expr)
-    )
-    merged_members = members.unionByName(new_members)
-    pairs = (
-        cand.join(
-            new_members.select(
-                "modality", F.col("fp").alias("fp_d"), F.col("id").alias("_ida")
-            ),
-            ["modality", "fp_d"],
-        )
-        .join(
-            merged_members.select(
-                "modality", F.col("fp").alias("fp_o"), F.col("id").alias("_idb")
-            ),
-            ["modality", "fp_o"],
-        )
-        .select(
-            "modality",
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "hamming",
-        )
-        # both-new double emission carries the same symmetric
-        # hamming, so the min-merge groupBy collapses it — see
-        # simhash_index_apply_batch
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    current = state.read("tnear_pairs", TAGGED_PAIRS_SCHEMA)
-    sc.setJobDescription("tagged_index: pairs merge write")
-    state.write(
-        "tnear_pairs",
-        current.unionByName(pairs)
-        .groupBy("modality", "id_a", "id_b")
-        .agg(F.min("hamming").cast("int").alias("hamming")),
-        # wide write — see simhash_index_apply_batch
-        partitions=max(2, shuffle_partition_count(fps.sparkSession)),
-    )
-    sc.setJobDescription("tagged_index: postings append")
-    state.append("tband_postings", new_postings)
-    sc.setJobDescription("tagged_index: members append")
-    state.append("tfp_members", new_members)
-    sc.setJobDescription(None)
 
 
 def tagged_stream_into_state(
@@ -633,17 +540,13 @@ def tagged_stream_into_state(
     maintenance machinery, mirroring the batch split between the
     fingerprint operators and ``tagged_hamming_band_pairs``) and
     folded in by :func:`tagged_index_apply_batch`."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        tagged_index_apply_batch(fingerprint_fn(batch), state, params)
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+    drain(
+        docs,
+        lambda batch, _batch_id: tagged_index_apply_batch(
+            fingerprint_fn(batch), state, params
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 SFX_MEMBERS_SCHEMA = "id LONG"
@@ -714,11 +617,10 @@ def suffix_index_apply_batch(
     batch = docs.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     )
-    members = state.read("sfx_members", SFX_MEMBERS_SCHEMA)
-    new_docs = batch.join(members, "id", "left_anti").localCheckpoint(
-        eager=True
+    new_docs = _new_rows(
+        batch, state.read("sfx_members", SFX_MEMBERS_SCHEMA), ["id"]
     )
-    if not new_docs.take(1):
+    if new_docs is None:
         return  # replayed or empty batch
     _toks_new, grams_new = _suffix_grams(new_docs, "text", "id", min_len)
     grams_new = grams_new.localCheckpoint(eager=True)
@@ -801,24 +703,18 @@ def suffix_stream_into_state(
     ``trigger(availableNow)`` — replay-proof with or without a
     checkpoint, the streaming twin of the batch exact-substring
     dedup."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        suffix_index_apply_batch(
+    drain(
+        docs,
+        lambda batch, _batch_id: suffix_index_apply_batch(
             batch,
             state,
             min_len=min_len,
             max_match_len=max_match_len,
             text_col=text_col,
             id_col=id_col,
-        )
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 DC_MEMBERS_SCHEMA = "id LONG"
@@ -865,11 +761,8 @@ def domain_caps_apply_batch(
         F.col(id_col).alias("id"),
         registrable_domain_expr(host_expr(url_col)).alias("domain"),
     )
-    members = state.read("dc_members", DC_MEMBERS_SCHEMA)
-    new_docs = batch.join(members, "id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    if not new_docs.take(1):
+    new_docs = _new_rows(batch, state.read("dc_members", DC_MEMBERS_SCHEMA), ["id"])
+    if new_docs is None:
         return  # replayed or empty batch
     new_ids = new_docs.select("id")
     docs_raw = state.read("dc_docs", DC_DOCS_SCHEMA)
@@ -919,19 +812,13 @@ def domain_caps_stream_into_state(
     :func:`domain_caps_apply_batch` via ``foreachBatch`` with
     ``trigger(availableNow)`` — replay-proof with or without a
     checkpoint, the streaming twin of the batch per-domain cap."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        domain_caps_apply_batch(
+    drain(
+        docs,
+        lambda batch, _batch_id: domain_caps_apply_batch(
             batch, state, cap=cap, url_col=url_col, id_col=id_col
-        )
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 UK_MEMBERS_SCHEMA = "id LONG"
@@ -964,11 +851,8 @@ def url_keep_one_apply_batch(
         F.col(id_col).alias("id"),
         canonical_url_expr(url_col).alias("canon_url"),
     )
-    members = state.read("uk_members", UK_MEMBERS_SCHEMA)
-    new_docs = batch.join(members, "id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    if not new_docs.take(1):
+    new_docs = _new_rows(batch, state.read("uk_members", UK_MEMBERS_SCHEMA), ["id"])
+    if new_docs is None:
         return  # replayed or empty batch
     new_ids = new_docs.select("id")
     docs_raw = state.read("uk_docs", UK_DOCS_SCHEMA)
@@ -1009,19 +893,13 @@ def url_keep_one_stream_into_state(
     """Drain a document stream through
     :func:`url_keep_one_apply_batch` via ``foreachBatch`` with
     ``trigger(availableNow)``."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        url_keep_one_apply_batch(
+    drain(
+        docs,
+        lambda batch, _batch_id: url_keep_one_apply_batch(
             batch, state, url_col=url_col, id_col=id_col
-        )
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 PP_MEMBERS_SCHEMA = "id LONG"
@@ -1061,13 +939,12 @@ def paragraph_index_apply_batch(
     reads exclude the replaying ids so a partial paras append cannot
     double-count an occurrence.
     """
-    members = state.read("pp_members", PP_MEMBERS_SCHEMA)
-    new_docs = (
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        .join(members, "id", "left_anti")
-        .localCheckpoint(eager=True)
+    new_docs = _new_rows(
+        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
+        state.read("pp_members", PP_MEMBERS_SCHEMA),
+        ["id"],
     )
-    if not new_docs.take(1):
+    if new_docs is None:
         return  # replayed or empty batch
     new_ids = new_docs.select("id")
     new_paras = new_docs.select(
@@ -1153,19 +1030,13 @@ def paragraph_stream_into_state(
     :func:`paragraph_index_apply_batch` via ``foreachBatch`` with
     ``trigger(availableNow)`` — replay-proof with or without a
     checkpoint, the streaming twin of CCNet paragraph dedup."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        paragraph_index_apply_batch(
+    drain(
+        docs,
+        lambda batch, _batch_id: paragraph_index_apply_batch(
             batch, state, sep=sep, text_col=text_col, id_col=id_col
-        )
-
-    writer = docs.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 CP_MEMBERS_SCHEMA = "partition STRING, file LONG"
@@ -1214,12 +1085,9 @@ def compaction_apply_batch(
         F.col(file_col).cast("long").alias("file"),
         F.col(size_col).cast("long").alias("size_bytes"),
     )
-    members = state.read("cp_members", CP_MEMBERS_SCHEMA)
     key = ["partition", "file"]
-    new_files = batch.join(members, key, "left_anti").localCheckpoint(
-        eager=True
-    )
-    if not new_files.take(1):
+    new_files = _new_rows(batch, state.read("cp_members", CP_MEMBERS_SCHEMA), key)
+    if new_files is None:
         return  # replayed or empty batch
     files_raw = state.read("cp_files", CP_FILES_SCHEMA)
     old_files = files_raw.join(new_files.select(*key), key, "left_anti")
@@ -1258,24 +1126,18 @@ def compaction_stream_into_state(
     :func:`compaction_apply_batch` via ``foreachBatch`` with
     ``trigger(availableNow)`` — replay-proof with or without a
     checkpoint, the streaming twin of the batch compaction planner."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        compaction_apply_batch(
+    drain(
+        files,
+        lambda batch, _batch_id: compaction_apply_batch(
             batch,
             state,
             target_bytes=target_bytes,
             partition_col=partition_col,
             file_col=file_col,
             size_col=size_col,
-        )
-
-    writer = files.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()
 
 
 BLOOM_BITS_SCHEMA = "bit INT"
@@ -1332,17 +1194,11 @@ def bloom_stream_into_state(
     :func:`bloom_index_apply_batch` via ``foreachBatch`` with
     ``trigger(availableNow)`` — replay-proof with or without a
     checkpoint (the set-bit union is idempotent)."""
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        bloom_index_apply_batch(
+    drain(
+        keys,
+        lambda batch, _batch_id: bloom_index_apply_batch(
             batch, state, key_col,
             m_bits=m_bits, k_hashes=k_hashes, seed_base=seed_base,
-        )
-
-    writer = keys.writeStream.foreachBatch(apply_batch).trigger(
-        availableNow=True
+        ),
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.awaitTermination()

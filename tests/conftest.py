@@ -38,19 +38,37 @@ import pyarrow.parquet as pq  # noqa: E402
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
 
+def write_batch(dirpath, name, columns):
+    """Write ``columns`` (name -> pyarrow array) as one parquet file:
+    one micro-batch under ``maxFilesPerTrigger=1``. The file source
+    orders batches by mod-time, hence the pause."""
+    pq.write_table(pa.table(columns), os.path.join(dirpath, name))
+    time.sleep(0.05)
+
+
+def file_stream(spark, schema, path, files_per_trigger=1):
+    """Parquet file-source stream over ``path``, by default one file
+    per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(path)
+    )
+
+
 def write_event_batch(dirpath, name, rows):
     """rows: (event_id, ts, event_type, value). One file == one
     micro-batch under maxFilesPerTrigger=1 (mod-time ordered)."""
-    table = pa.table(
+    write_batch(
+        dirpath,
+        name,
         {
             "event_id": pa.array([r[0] for r in rows], pa.int64()),
             "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
             "event_type": pa.array([r[2] for r in rows], pa.string()),
             "value": pa.array([float(r[3]) for r in rows], pa.float64()),
-        }
+        },
     )
-    pq.write_table(table, os.path.join(dirpath, name))
-    time.sleep(0.05)
 
 
 @pytest.fixture()

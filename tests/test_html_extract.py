@@ -109,6 +109,14 @@ def test_narrow_input_widens_with_exactly_one_exchange(spark):
     assert "ArrowEvalPython" not in s and "BatchEvalPython" not in s
     # result survives the widen
     assert out.count() == 1
+    # the widen's exchange probe reads plan NODES: a literal spelling
+    # "Exchange" does not block it, a real (narrow) shuffle does
+    from isilon_hadoop_tools_spark.session import widen_narrow_input
+
+    tagged = df.withColumn("tag", F.lit("Exchange"))
+    assert widen_narrow_input(tagged, "doc_id") is not tagged
+    shuffled = df.repartition(1, "doc_id")
+    assert widen_narrow_input(shuffled, "doc_id") is shuffled
 
 
 def test_html_links_extraction_and_invisible_anchors(spark):

@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from conftest import T0
+from conftest import T0, file_stream, write_batch
 from isilon_hadoop_tools_spark.plans.state import ParquetState
 from isilon_hadoop_tools_spark.streaming.events import (
     dedup_within_watermark,
@@ -21,11 +22,7 @@ from isilon_hadoop_tools_spark.streaming.events import (
 
 def _read_stream(spark, d, files_per_trigger=1):
     schema = "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(d)
-    )
+    return file_stream(spark, schema, d, files_per_trigger)
 
 
 def test_multi_batch_rollup_drops_late_rows(spark, stream_dir):
@@ -138,9 +135,6 @@ def test_sliding_rollup_each_event_in_two_windows(spark, stream_dir):
 def test_stream_static_join_enriches_and_matches_batch(spark, tmp_path):
     import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from isilon_hadoop_tools_spark.streaming.events import (
         static_enrich_rollup_stream,
     )
@@ -154,16 +148,15 @@ def test_stream_static_join_enriches_and_matches_batch(spark, tmp_path):
         (3, T0 + 65 * m, 11, 3.0),
         (4, T0, 99, 9.0),  # user 99 missing from the dim: dropped
     ]
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "value": pa.array([r[3] for r in rows], pa.float64()),
-            }
-        ),
-        os.path.join(d, "b1.parquet"),
+    write_batch(
+        d,
+        "b1.parquet",
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "value": pa.array([r[3] for r in rows], pa.float64()),
+        },
     )
     dim = spark.createDataFrame(
         [(10, 7), (11, 8)], "c_custkey long, c_nationkey long"
@@ -190,17 +183,7 @@ def test_stream_static_join_enriches_and_matches_batch(spark, tmp_path):
 
 
 def _write_kv_batch(dirpath, name, ids):
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table({"user_id": pa.array(ids, pa.int64())}),
-        os.path.join(dirpath, name),
-    )
-    time.sleep(0.05)
+    write_batch(dirpath, name, {"user_id": pa.array(ids, pa.int64())})
 
 
 def _cms_counts(state):
@@ -228,17 +211,15 @@ def _drain_cms(spark, in_dir, state, ckpt=None):
         cms_stream_into_state,
     )
 
-    stream = (
-        spark.readStream.schema("user_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    cms_stream_into_state(
+        file_stream(spark, "user_id LONG", in_dir),
+        state,
+        key="user_id",
+        checkpoint=ckpt,
     )
-    cms_stream_into_state(stream, state, key="user_id", checkpoint=ckpt)
 
 
 def test_cms_stream_multibatch_equals_batch_and_replay_noop(spark, tmp_path):
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
-
     in_dir = str(tmp_path / "in")
     (tmp_path / "in").mkdir()
     batches = [[1, 2, 2, 3], [2, 3, 3, 9], [9, 9, 1, 7]]
@@ -269,8 +250,6 @@ def test_cms_stream_multibatch_equals_batch_and_replay_noop(spark, tmp_path):
 def test_cms_stream_checkpointed_restart_resumes_exactly_once(
     spark, tmp_path
 ):
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
-
     in_dir = str(tmp_path / "in")
     (tmp_path / "in").mkdir()
     ckpt = str(tmp_path / "ckpt")
@@ -303,7 +282,6 @@ def test_cms_stream_legacy_sparse_markers_absorbed_into_horizon(
     row_id=-1 markers only, no horizon row) must (a) still be
     replay-proof and (b) compact to one horizon row on the first new
     commit — the upgrade path for long-lived streams."""
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.operators.sketches import cms_table
 
     schema = "row_id LONG, bucket LONG, cnt LONG"
@@ -347,12 +325,6 @@ def test_cdc_stream_out_of_order_batches_and_replay(spark, tmp_path):
     and a tombstone for key 8 arrive later: the (ts, id) max algebra
     must keep key 7's first-arrived newest value, tombstone key 8,
     and be unchanged by a full re-drain."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.events import (
         CDC_STATE_SCHEMA,
         cdc_stream_into_state,
@@ -368,31 +340,23 @@ def test_cdc_stream_out_of_order_batches_and_replay(spark, tmp_path):
     ]
     in_dir = str(tmp_path / "in")
     (tmp_path / "in").mkdir()
-    import os
-    import time
-
     for i, rows in enumerate(batches):
-        pq.write_table(
-            pa.table(
-                {
-                    "user_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "event_id": pa.array([r[2] for r in rows], pa.int64()),
-                    "event_type": pa.array([r[3] for r in rows]),
-                    "value": pa.array([r[4] for r in rows], pa.float64()),
-                }
-            ),
-            os.path.join(in_dir, f"b{i}.parquet"),
+        write_batch(
+            in_dir,
+            f"b{i}.parquet",
+            {
+                "user_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+                "event_id": pa.array([r[2] for r in rows], pa.int64()),
+                "event_type": pa.array([r[3] for r in rows]),
+                "value": pa.array([r[4] for r in rows], pa.float64()),
+            },
         )
-        time.sleep(0.05)
     state = ParquetState(spark, str(tmp_path / "state"))
     for _ in range(2):
-        stream = (
-            spark.readStream.schema(CDC_STATE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        cdc_stream_into_state(
+            file_stream(spark, CDC_STATE_SCHEMA, in_dir), state
         )
-        cdc_stream_into_state(stream, state)
     rows = {
         r["user_id"]: r
         for r in state.read("cdc_state", CDC_STATE_SCHEMA).collect()
@@ -402,46 +366,40 @@ def test_cdc_stream_out_of_order_batches_and_replay(spark, tmp_path):
     assert len(rows) == 2  # one state row per key, log never kept
 
 
+def _write_kmv_batch(dirpath, name, ids):
+    write_batch(
+        dirpath,
+        name,
+        {
+            "event_id": pa.array(ids, pa.int64()),
+            "value": pa.array([float(x) for x in ids], pa.float64()),
+        },
+    )
+
+
 def test_kmv_stream_multibatch_merge_property_and_replay(spark, tmp_path):
     """Three micro-batches then a full re-drain: the final k-row
     sample equals the batch bottom-k of all ids, proving both the
     bottom-k-of-union merge property and replay idempotence."""
     import hashlib
 
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.events import (
         KMV_STATE_SCHEMA,
         kmv_stream_into_state,
     )
 
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     in_dir = str(tmp_path / "in")
     (tmp_path / "in").mkdir()
     batches = [list(range(0, 40)), list(range(40, 70)), list(range(70, 90))]
     for i, ids in enumerate(batches):
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(ids, pa.int64()),
-                    "value": pa.array([float(x) for x in ids], pa.float64()),
-                }
-            ),
-            os.path.join(in_dir, f"b{i}.parquet"),
-        )
-        time.sleep(0.05)
+        _write_kmv_batch(in_dir, f"b{i}.parquet", ids)
     state = ParquetState(spark, str(tmp_path / "state"))
     for _ in range(2):
-        stream = (
-            spark.readStream.schema("event_id LONG, value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        kmv_stream_into_state(
+            file_stream(spark, "event_id LONG, value DOUBLE", in_dir),
+            state,
+            k=16,
         )
-        kmv_stream_into_state(stream, state, k=16)
     got = sorted(
         r["event_id"]
         for r in state.read("kmv_sample", KMV_STATE_SCHEMA).collect()
@@ -464,7 +422,6 @@ def test_kmv_stream_checkpointed_restart(spark, tmp_path):
     sample still equals the batch bottom-k over everything."""
     import hashlib
 
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.events import (
         KMV_STATE_SCHEMA,
         kmv_stream_into_state,
@@ -476,34 +433,16 @@ def test_kmv_stream_checkpointed_restart(spark, tmp_path):
     state = ParquetState(spark, str(tmp_path / "state"))
 
     def drain():
-        stream = (
-            spark.readStream.schema("event_id LONG, value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        kmv_stream_into_state(
+            file_stream(spark, "event_id LONG, value DOUBLE", in_dir),
+            state,
+            k=8,
+            checkpoint=ckpt,
         )
-        kmv_stream_into_state(stream, state, k=8, checkpoint=ckpt)
 
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def write(name, ids):
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(ids, pa.int64()),
-                    "value": pa.array([float(x) for x in ids], pa.float64()),
-                }
-            ),
-            os.path.join(in_dir, name),
-        )
-        time.sleep(0.05)
-
-    write("b0.parquet", list(range(0, 30)))
+    _write_kmv_batch(in_dir, "b0.parquet", list(range(0, 30)))
     drain()
-    write("b1.parquet", list(range(30, 55)))
+    _write_kmv_batch(in_dir, "b1.parquet", list(range(30, 55)))
     drain()
     got = sorted(
         r["event_id"]
@@ -528,7 +467,6 @@ def test_banded_count_stream_checkpointed_restart_and_compaction(
     discipline: checkpointed restart ingests only new files, a full
     no-checkpoint re-drain is a no-op, and markers stay compacted to
     one horizon row."""
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.events import (
         banded_count_stream_into_state,
     )
@@ -540,26 +478,15 @@ def test_banded_count_stream_checkpointed_restart_and_compaction(
     state = ParquetState(spark, str(tmp_path / "state"))
 
     def _write(name, vals):
-        import os
-        import time
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.table({"value": pa.array(vals, pa.float64())}),
-            os.path.join(in_dir, name),
-        )
-        time.sleep(0.05)
+        write_batch(in_dir, name, {"value": pa.array(vals, pa.float64())})
 
     def _drain(ck=None):
-        stream = (
-            spark.readStream.schema("value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         banded_count_stream_into_state(
-            stream, state, "value", breaks=[10, 20], checkpoint=ck
+            file_stream(spark, "value DOUBLE", in_dir),
+            state,
+            "value",
+            breaks=[10, 20],
+            checkpoint=ck,
         )
 
     def counts():
@@ -589,13 +516,10 @@ def test_sprt_stream_latches_across_batches_and_replays(spark, tmp_path):
     """EA36s: the crossing can happen mid-stream (batch 2 of 3), the
     decision latches (batch 3 changes nothing), and a full re-drain
     without checkpoint is a no-op via the batch-id guard."""
-    import datetime as dt
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.events import (
         SPRT_STATE_SCHEMA,
         sprt_stream_into_state,
@@ -635,12 +559,8 @@ def test_sprt_stream_latches_across_batches_and_replays(spark, tmp_path):
     write("b3.parquet", [(t0 + 3 * s, 4, "view"), (t0 + 4 * s, 5, "view")], 3)
 
     def stream():
-        return (
-            spark.readStream.schema(
-                "ts timestamp, event_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
+        return file_stream(
+            spark, "ts timestamp, event_id long, event_type string", d
         )
 
     state = ParquetState(spark, str(tmp_path / "state"))

@@ -5,17 +5,23 @@ restarts (checkpointed or not), and treat replays as no-ops."""
 from __future__ import annotations
 
 import os
-import time
+from typing import Callable, NamedTuple
 
 import pyarrow as pa
-import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 
+from conftest import file_stream, write_batch
 from isilon_hadoop_tools_spark.operators import dedup
 from isilon_hadoop_tools_spark.plans.state import ParquetState
 from isilon_hadoop_tools_spark.streaming.neardup import (
     PAIRS_SCHEMA,
+    SIG_PAIRS_SCHEMA,
+    minhash_index_apply_batch,
+    minhash_stream_into_state,
     simhash_index_apply_batch,
     simhash_stream_into_state,
+    tagged_index_apply_batch,
 )
 
 DOCS_SCHEMA = "doc_id LONG, text STRING"
@@ -32,30 +38,14 @@ BATCHES = [
 
 
 def _write_doc_batch(dirpath: str, name: str, rows) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": pa.array([r[1] for r in rows], pa.string()),
-            }
-        ),
-        os.path.join(dirpath, name),
+    write_batch(
+        dirpath,
+        name,
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows], pa.string()),
+        },
     )
-    time.sleep(0.05)  # stable mod-time (= micro-batch) order
-
-
-def _all_docs(spark):
-    rows = [r for b in BATCHES for r in b]
-    return spark.createDataFrame(rows, DOCS_SCHEMA)
-
-
-def _batch_truth(spark):
-    return {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_near_pairs(
-            _all_docs(spark), "text", "doc_id", max_hamming=3
-        ).collect()
-    }
 
 
 def _pairs(state: ParquetState):
@@ -65,92 +55,26 @@ def _pairs(state: ParquetState):
     }
 
 
-def _drain(spark, in_dir: str, state: ParquetState, ckpt: str | None = None):
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    simhash_stream_into_state(
-        stream, state, text_col="text", id_col="doc_id", checkpoint=ckpt
-    )
-
-
-def test_apply_batch_incremental_equals_batch(spark, tmp_path):
-    # fold the batches in one by one as plain DataFrames: after each
-    # fold the pair state equals the batch answer over the prefix
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for rows in BATCHES:
-        seen.extend(rows)
-        simhash_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA), state
-        )
-        want = {
-            (r["id_a"], r["id_b"]): r["hamming"]
-            for r in dedup.simhash_near_pairs(
-                spark.createDataFrame(seen, DOCS_SCHEMA),
-                "text",
-                "doc_id",
-                max_hamming=3,
-            ).collect()
-        }
-        assert _pairs(state) == want
-    # cross-batch exact dups must be present with hamming 0
-    got = _pairs(state)
-    assert got[(1, 4)] == 0 and got[(1, 6)] == 0 and got[(4, 6)] == 0
-
-
-def test_apply_batch_replay_is_noop(spark, tmp_path):
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for rows in BATCHES:
-        simhash_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA), state
-        )
-    before = _pairs(state)
-    # replay every batch (simulates an uncheckpointed second drain or
-    # a crash-recovery re-delivery): state must not change
-    for rows in BATCHES:
-        simhash_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA), state
-        )
-    assert _pairs(state) == before == _batch_truth(spark)
-
-
-def test_stream_drain_equals_batch_and_restarts(spark, tmp_path):
-    # staged reveal across three checkpointed restarts, then an idle
-    # restart, then a full uncheckpointed replay: every stage of the
-    # recovery story converges to the batch answer
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    ckpt = str(tmp_path / "ckpt")
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for stage, rows in enumerate(BATCHES):
-        _write_doc_batch(in_dir, f"b{stage}.parquet", rows)
-        _drain(spark, in_dir, state, ckpt)
-    truth = _batch_truth(spark)
-    assert _pairs(state) == truth
-    # idle restart: no new files, no state change
-    _drain(spark, in_dir, state, ckpt)
-    assert _pairs(state) == truth
-    # uncheckpointed replay over ALL files: anti-join makes it a no-op
-    _drain(spark, in_dir, state, ckpt=None)
-    assert _pairs(state) == truth
-
-
-# ---- MinHash-LSH streaming maintenance (the L4 twin) ----
-
-
 def _lsh_pairs(state: ParquetState):
-    from isilon_hadoop_tools_spark.streaming.neardup import SIG_PAIRS_SCHEMA
-
     return {
         (r["id_a"], r["id_b"]): r["n_bands"]
         for r in state.read("lsh_pairs", SIG_PAIRS_SCHEMA).collect()
     }
 
 
-def _lsh_batch_truth(spark, rows):
+def _simhash_truth(spark, rows):
+    return {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in dedup.simhash_near_pairs(
+            spark.createDataFrame(rows, DOCS_SCHEMA),
+            "text",
+            "doc_id",
+            max_hamming=3,
+        ).collect()
+    }
+
+
+def _lsh_truth(spark, rows):
     return {
         (r["id_a"], r["id_b"]): r["n_bands"]
         for r in dedup.minhash_lsh_pairs(
@@ -163,132 +87,24 @@ def _lsh_batch_truth(spark, rows):
     }
 
 
-def test_minhash_apply_batch_incremental_equals_batch(spark, tmp_path):
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        minhash_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for rows in BATCHES:
-        seen.extend(rows)
-        minhash_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA),
-            state,
-            num_hashes=8,
-            bands=4,
-        )
-        assert _lsh_pairs(state) == _lsh_batch_truth(spark, seen)
-    # cross-batch exact dups agree on every band
-    got = _lsh_pairs(state)
-    assert got[(1, 4)] == 4 and got[(1, 6)] == 4 and got[(4, 6)] == 4
-
-
-def test_minhash_apply_batch_replay_is_noop(spark, tmp_path):
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        minhash_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for _ in range(2):  # second sweep replays every batch
-        for rows in BATCHES:
-            minhash_index_apply_batch(
-                spark.createDataFrame(rows, DOCS_SCHEMA),
-                state,
-                num_hashes=8,
-                bands=4,
-            )
-    all_rows = [r for b in BATCHES for r in b]
-    assert _lsh_pairs(state) == _lsh_batch_truth(spark, all_rows)
-
-
-def test_minhash_stream_drain_equals_batch_and_restarts(spark, tmp_path):
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        minhash_stream_into_state,
-    )
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    ckpt = str(tmp_path / "ckpt")
-    state = ParquetState(spark, str(tmp_path / "state"))
-
-    def drain(ck):
-        stream = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        minhash_stream_into_state(
-            stream, state, num_hashes=8, bands=4, checkpoint=ck
-        )
-
-    for stage, rows in enumerate(BATCHES):
-        _write_doc_batch(in_dir, f"b{stage}.parquet", rows)
-        drain(ckpt)
-    truth = _lsh_batch_truth(spark, [r for b in BATCHES for r in b])
-    assert _lsh_pairs(state) == truth
-    drain(ckpt)  # idle restart
-    assert _lsh_pairs(state) == truth
-    drain(None)  # uncheckpointed full replay
-    assert _lsh_pairs(state) == truth
-
-
-# ---- partial-append crash windows (the O(delta) index writes) ----
-
-
-def test_simhash_partial_posting_append_does_not_corrupt(spark, tmp_path):
-    # simulate a crash mid-postings-append: bands 1..3 of doc 1's
-    # fingerprint landed but band 0 did not — the replay re-adds ALL
-    # bands (anti-join keys on band 0), leaving duplicate posting
-    # rows for bands 1..3, and the pair state must still equal the
-    # batch answer (candidates dedup before the hamming filter)
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.operators.dedup import (
-        band_slice_array,
-        simhash,
-    )
-    from isilon_hadoop_tools_spark.streaming.neardup import POSTINGS_SCHEMA
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    first = spark.createDataFrame(BATCHES[0], DOCS_SCHEMA)
-    partial = (
-        simhash(first, "text", "doc_id", 32)
+def _simhash_partial_postings(first):
+    # bands 1..3 of the batch's fingerprints, band 0 missing
+    return (
+        dedup.simhash(first, "text", "doc_id", 32)
         .select(
-            F.posexplode(band_slice_array(F.col("simhash"), 32, 4)).alias(
-                "band_idx", "band_val"
-            ),
+            F.posexplode(
+                dedup.band_slice_array(F.col("simhash"), 32, 4)
+            ).alias("band_idx", "band_val"),
             F.col("simhash").alias("fp"),
         )
         .filter(F.col("band_idx") > 0)
         .select(F.col("band_idx").cast("int"), "band_val", "fp")
     )
-    state.append("band_postings", partial)
-    for rows in BATCHES:
-        simhash_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA), state
-        )
-    assert _pairs(state) == _batch_truth(spark)
-    # the re-add left duplicates for bands 1..3; distinct rows match
-    # a clean run's posting set
-    posts = state.read("band_postings", POSTINGS_SCHEMA)
-    assert posts.distinct().count() < posts.count()
 
 
-def test_minhash_partial_posting_append_does_not_inflate_bands(
-    spark, tmp_path
-):
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.operators.dedup import minhash_sig_keys
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        minhash_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    first = spark.createDataFrame(BATCHES[0], DOCS_SCHEMA)
-    partial = (
-        minhash_sig_keys(first, "text", "doc_id", 8, 4)
+def _lsh_partial_postings(first):
+    return (
+        dedup.minhash_sig_keys(first, "text", "doc_id", 8, 4)
         .select(
             F.posexplode(F.split("sig_key", r"\|")).alias("band", "band_key"),
             "sig_key",
@@ -296,17 +112,170 @@ def test_minhash_partial_posting_append_does_not_inflate_bands(
         .filter(F.col("band") > 0)
         .select(F.col("band").cast("int"), "band_key", "sig_key")
     )
-    state.append("sig_postings", partial)
+
+
+class _BandIndex(NamedTuple):
+    """One band-index applier under the shared contract below."""
+
+    apply: Callable  # (batch, state) -> None
+    stream: Callable  # (stream, state, checkpoint) -> None
+    pairs: Callable  # state -> {(id_a, id_b): score}
+    truth: Callable  # (spark, rows) -> the batch answer over rows
+    postings: str
+    partial_postings: Callable  # first batch -> postings minus band 0
+    exact_dup: int  # the score of an exact-duplicate pair
+
+
+SIMHASH = _BandIndex(
+    apply=lambda batch, state: simhash_index_apply_batch(batch, state),
+    stream=lambda stream, state, ckpt: simhash_stream_into_state(
+        stream, state, text_col="text", id_col="doc_id", checkpoint=ckpt
+    ),
+    pairs=_pairs,
+    truth=_simhash_truth,
+    postings="band_postings",
+    partial_postings=_simhash_partial_postings,
+    exact_dup=0,
+)
+MINHASH = _BandIndex(
+    apply=lambda batch, state: minhash_index_apply_batch(
+        batch, state, num_hashes=8, bands=4
+    ),
+    stream=lambda stream, state, ckpt: minhash_stream_into_state(
+        stream, state, num_hashes=8, bands=4, checkpoint=ckpt
+    ),
+    pairs=_lsh_pairs,
+    truth=_lsh_truth,
+    postings="sig_postings",
+    partial_postings=_lsh_partial_postings,
+    exact_dup=4,  # exact dups agree on every band
+)
+ALL_ROWS = [r for b in BATCHES for r in b]
+
+
+def _fold_every_prefix_then_replay(spark, tmp_path, idx: _BandIndex):
+    # fold the batches in one by one as plain DataFrames: after each
+    # fold the pair state equals the batch answer over the prefix;
+    # then replay every batch (an uncheckpointed second drain or a
+    # crash-recovery re-delivery): the state must not change
+    state = ParquetState(spark, str(tmp_path / "state"))
+    seen = []
     for rows in BATCHES:
-        minhash_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA),
-            state,
-            num_hashes=8,
-            bands=4,
-        )
-    # duplicate posting rows exist, but n_bands counts stay exact
-    all_rows = [r for b in BATCHES for r in b]
-    assert _lsh_pairs(state) == _lsh_batch_truth(spark, all_rows)
+        seen.extend(rows)
+        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
+        assert idx.pairs(state) == idx.truth(spark, seen)
+    got = idx.pairs(state)
+    # cross-batch exact dups must be present with the exact-dup score
+    assert got[(1, 4)] == got[(1, 6)] == got[(4, 6)] == idx.exact_dup
+    for rows in BATCHES:
+        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
+    assert idx.pairs(state) == got
+
+
+def _drain_restarts(spark, tmp_path, idx: _BandIndex):
+    # staged reveal across three checkpointed restarts, then an idle
+    # restart, then a full uncheckpointed replay: every stage of the
+    # recovery story converges to the batch answer
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    ckpt = str(tmp_path / "ckpt")
+    state = ParquetState(spark, str(tmp_path / "state"))
+
+    def drain(ck):
+        idx.stream(file_stream(spark, DOCS_SCHEMA, in_dir), state, ck)
+
+    for stage, rows in enumerate(BATCHES):
+        _write_doc_batch(in_dir, f"b{stage}.parquet", rows)
+        drain(ckpt)
+    truth = idx.truth(spark, ALL_ROWS)
+    assert idx.pairs(state) == truth
+    drain(ckpt)  # idle restart: no new files, no state change
+    assert idx.pairs(state) == truth
+    drain(None)  # uncheckpointed replay: the anti-join makes it a no-op
+    assert idx.pairs(state) == truth
+
+
+def _partial_posting_append(spark, tmp_path, idx: _BandIndex):
+    # simulate a crash mid-postings-append: bands 1..3 of the first
+    # batch's fingerprints landed but band 0 did not — the replay
+    # re-adds ALL bands (the anti-join keys on band 0), leaving
+    # duplicate posting rows for bands 1..3, and the pair state must
+    # still equal the batch answer (candidates count DISTINCT
+    # fingerprint pairs / bands)
+    state = ParquetState(spark, str(tmp_path / "state"))
+    first = spark.createDataFrame(BATCHES[0], DOCS_SCHEMA)
+    state.append(idx.postings, idx.partial_postings(first))
+    for rows in BATCHES:
+        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
+    assert idx.pairs(state) == idx.truth(spark, ALL_ROWS)
+    posts = state.read(idx.postings)
+    assert posts.distinct().count() < posts.count()
+
+
+def test_apply_batch_incremental_equals_batch(spark, tmp_path):
+    _fold_every_prefix_then_replay(spark, tmp_path, SIMHASH)
+
+
+def test_minhash_apply_batch_incremental_equals_batch(spark, tmp_path):
+    _fold_every_prefix_then_replay(spark, tmp_path, MINHASH)
+
+
+def test_stream_drain_equals_batch_and_restarts(spark, tmp_path):
+    _drain_restarts(spark, tmp_path, SIMHASH)
+
+
+def test_minhash_stream_drain_equals_batch_and_restarts(spark, tmp_path):
+    _drain_restarts(spark, tmp_path, MINHASH)
+
+
+def test_simhash_partial_posting_append_does_not_corrupt(spark, tmp_path):
+    _partial_posting_append(spark, tmp_path, SIMHASH)
+
+
+def test_minhash_partial_posting_append_does_not_inflate_bands(
+    spark, tmp_path
+):
+    _partial_posting_append(spark, tmp_path, MINHASH)
+
+
+@pytest.mark.parametrize("applier", ["simhash", "minhash", "tagged"])
+def test_band_index_restores_job_description_on_error(
+    spark, tmp_path, monkeypatch, applier
+):
+    # a write failing mid-batch must not leak the applier's step label
+    # onto the caller's later jobs
+    docs = spark.createDataFrame(BATCHES[0], DOCS_SCHEMA)
+    call, postings = {
+        "simhash": (lambda st: SIMHASH.apply(docs, st), SIMHASH.postings),
+        "minhash": (lambda st: MINHASH.apply(docs, st), MINHASH.postings),
+        "tagged": (
+            lambda st: tagged_index_apply_batch(
+                spark.createDataFrame(
+                    [("t", 1, 0b0001), ("t", 2, 0b0011)],
+                    "modality STRING, id LONG, fhash LONG",
+                ),
+                st,
+                {"t": (12, 2, 4)},
+            ),
+            "tband_postings",
+        ),
+    }[applier]
+    append = ParquetState.append
+
+    def failing_append(self, table, df):
+        if table == postings:
+            raise RuntimeError("injected append failure")
+        return append(self, table, df)
+
+    monkeypatch.setattr(ParquetState, "append", failing_append)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    try:
+        with pytest.raises(RuntimeError, match="injected append failure"):
+            call(ParquetState(spark, str(tmp_path / "state")))
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+    finally:
+        sc.setJobDescription(None)
 
 
 # ---------------------------------------------------------------------
@@ -315,18 +284,17 @@ def test_minhash_partial_posting_append_does_not_inflate_bands(
 
 
 def _write_vec_batch(dirpath: str, name: str, rows) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-                "embedding": pa.array(
-                    [r[1] for r in rows], pa.list_(pa.float32())
-                ),
-            }
-        ),
-        os.path.join(dirpath, name),
+    write_batch(
+        dirpath,
+        name,
+        {
+            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+        },
     )
-    time.sleep(0.05)
+
+
+VEC_SCHEMA = "vec_id LONG, embedding ARRAY<FLOAT>"
 
 
 def test_ivf_stream_matches_batch_assignment_and_replay_noop(
@@ -337,7 +305,6 @@ def test_ivf_stream_matches_batch_assignment_and_replay_noop(
         kmeans_train,
         quantize_vectors,
     )
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.neardup import (
         IVF_POSTINGS_SCHEMA,
         ivf_stream_into_state,
@@ -364,12 +331,7 @@ def test_ivf_stream_matches_batch_assignment_and_replay_noop(
     }
     state = ParquetState(spark, str(tmp_path / "state"))
     for _ in range(2):  # second drain must be a replay no-op
-        stream = (
-            spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        ivf_stream_into_state(stream, state, cents)
+        ivf_stream_into_state(file_stream(spark, VEC_SCHEMA, in_dir), state, cents)
     got = {
         r["vid"]: (r["list_id"], r["dist"])
         for r in state.read("ivf_postings", IVF_POSTINGS_SCHEMA).collect()
@@ -390,7 +352,6 @@ def test_ivf_stream_checkpointed_restart_ingests_only_new(spark, tmp_path):
         kmeans_train,
         quantize_vectors,
     )
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.neardup import (
         IVF_POSTINGS_SCHEMA,
         ivf_stream_into_state,
@@ -411,12 +372,9 @@ def test_ivf_stream_checkpointed_restart_ingests_only_new(spark, tmp_path):
     state = ParquetState(spark, str(tmp_path / "state"))
 
     def drain():
-        stream = (
-            spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        ivf_stream_into_state(
+            file_stream(spark, VEC_SCHEMA, in_dir), state, cents, checkpoint=ckpt
         )
-        ivf_stream_into_state(stream, state, cents, checkpoint=ckpt)
 
     _write_vec_batch(in_dir, "b0.parquet", b0)
     drain()
@@ -500,10 +458,8 @@ def test_tagged_index_stream_null_tag_dropped_not_fatal(spark, tmp_path):
     keeps NULL keys) has no band join to infer an IS NOT NULL filter
     from — so the guard must accept NULL tags explicitly. Non-null
     UNKNOWN tags must still fail loudly."""
-    import pytest
     from isilon_hadoop_tools_spark.streaming.neardup import (
         TAGGED_PAIRS_SCHEMA,
-        tagged_index_apply_batch,
     )
 
     params = {"t": (12, 2, 4)}
@@ -683,11 +639,7 @@ def test_suffix_stream_drain_twice_equals_batch(spark, tmp_path):
     state = ParquetState(spark, str(tmp_path / "state"))
     schema = spark.read.parquet(os.path.join(src, "b0.parquet")).schema
     for _ in range(2):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "b*.parquet"))
-        )
+        stream = file_stream(spark, schema, os.path.join(src, "b*.parquet"))
         suffix_stream_into_state(stream, state, min_len=4)
     all_rows = [r for b in _SFX_BATCHES for r in b]
     assert _sfx_state_spans(state) == _sfx_batch_answer(spark, all_rows)
@@ -1167,17 +1119,10 @@ def test_bloom_index_stream_converges_and_stays_bounded(spark, tmp_path):
     to the batch-built bitmap; the state is bounded by m_bits rows
     regardless of key volume; the maintained bitmap prefilters a
     probe to the exact semi-join result."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
     from isilon_hadoop_tools_spark.operators.skew import (
         bloom_build_bits,
         bloom_probe_cond,
     )
-    from isilon_hadoop_tools_spark.plans.state import ParquetState
     from isilon_hadoop_tools_spark.streaming.neardup import (
         BLOOM_BITS_SCHEMA,
         bloom_stream_into_state,
@@ -1186,20 +1131,16 @@ def test_bloom_index_stream_converges_and_stays_bounded(spark, tmp_path):
     d = str(tmp_path / "keys")
     os.makedirs(d)
     for b in range(3):
-        pq.write_table(
-            pa.table({"k": pa.array(
-                [b * 100 + i * 7 for i in range(40)], pa.int64()
-            )}),
-            os.path.join(d, f"b{b}.parquet"),
+        write_batch(
+            d,
+            f"b{b}.parquet",
+            {"k": pa.array([b * 100 + i * 7 for i in range(40)], pa.int64())},
         )
     state = ParquetState(spark, str(tmp_path / "state"))
     for _ in range(2):  # replay without checkpoint: must converge
-        stream = (
-            spark.readStream.schema("k long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
+        bloom_stream_into_state(
+            file_stream(spark, "k long", d), state, "k", m_bits=256
         )
-        bloom_stream_into_state(stream, state, "k", m_bits=256)
     got = {r["bit"] for r in
            state.read("bloom_bits", BLOOM_BITS_SCHEMA).collect()}
     want = bloom_build_bits(

@@ -17,14 +17,12 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import time
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
-from conftest import T0
+from conftest import T0, file_stream, write_batch
 from isilon_hadoop_tools_spark.streaming.events import (
     dedup_within_watermark,
     hourly_rollup_stream,
@@ -73,29 +71,22 @@ BATCHES = [
 
 
 def _write_batch(dirpath: str, name: str, rows) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows], pa.string()),
-                "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            }
-        ),
-        os.path.join(dirpath, name),
+    write_batch(
+        dirpath,
+        name,
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
+        },
     )
-    time.sleep(0.05)  # keep mod-time (= micro-batch) order stable
 
 
 def _drain(spark, build, in_dir: str, ckpt: str, out_dir: str) -> None:
-    ev = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     q = (
-        build(ev)
+        build(file_stream(spark, SCHEMA, in_dir))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)

@@ -10,6 +10,7 @@ queries. Usage::
 
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 import time
@@ -23,14 +24,24 @@ from isilon_hadoop_tools_spark.session import get_session  # noqa: E402
 WARMUP_SF_DIR = "/root/testdata/sf0.001"
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 2
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1])
+def parse_args(argv: list[str]) -> tuple[str, list[str], int]:
+    """``(sf_dir, query names, reps)`` from the usage line above; the
+    optional leading ``sf_dir`` is told apart from query names by its
+    ``/``. ``--reps`` takes ``N`` or ``=N``, anywhere on the line."""
+    p = argparse.ArgumentParser(
+        usage="%(prog)s [sf_dir] query [query ...] [--reps N]"
+    )
+    p.add_argument("args", nargs="+")
+    p.add_argument("--reps", type=int, default=2)
+    ns = p.parse_intermixed_args(argv)
+    args = ns.args
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.1"
     names = [a for a in args if "/" not in a]
+    return sf_dir, names, ns.reps
+
+
+def main() -> int:
+    sf_dir, names, reps = parse_args(sys.argv[1:])
     spark = get_session("time_queries")
     registry = suite.queries()
     out: dict[str, dict] = {}
