@@ -153,11 +153,9 @@ MINHASH = _BandIndex(
 ALL_ROWS = [r for b in BATCHES for r in b]
 
 
-def _fold_every_prefix_then_replay(spark, tmp_path, idx: _BandIndex):
+def _fold_every_prefix(spark, tmp_path, idx: _BandIndex):
     # fold the batches in one by one as plain DataFrames: after each
-    # fold the pair state equals the batch answer over the prefix;
-    # then replay every batch (an uncheckpointed second drain or a
-    # crash-recovery re-delivery): the state must not change
+    # fold the pair state equals the batch answer over the prefix
     state = ParquetState(spark, str(tmp_path / "state"))
     seen = []
     for rows in BATCHES:
@@ -167,9 +165,19 @@ def _fold_every_prefix_then_replay(spark, tmp_path, idx: _BandIndex):
     got = idx.pairs(state)
     # cross-batch exact dups must be present with the exact-dup score
     assert got[(1, 4)] == got[(1, 6)] == got[(4, 6)] == idx.exact_dup
+
+
+def _replay_is_noop(spark, tmp_path, idx: _BandIndex):
+    # replay every batch after folding them all (an uncheckpointed
+    # second drain or a crash-recovery re-delivery): the state must
+    # not change
+    state = ParquetState(spark, str(tmp_path / "state"))
     for rows in BATCHES:
         idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
-    assert idx.pairs(state) == got
+    before = idx.pairs(state)
+    for rows in BATCHES:
+        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
+    assert idx.pairs(state) == before == idx.truth(spark, ALL_ROWS)
 
 
 def _drain_restarts(spark, tmp_path, idx: _BandIndex):
@@ -213,11 +221,19 @@ def _partial_posting_append(spark, tmp_path, idx: _BandIndex):
 
 
 def test_apply_batch_incremental_equals_batch(spark, tmp_path):
-    _fold_every_prefix_then_replay(spark, tmp_path, SIMHASH)
+    _fold_every_prefix(spark, tmp_path, SIMHASH)
+
+
+def test_apply_batch_replay_is_noop(spark, tmp_path):
+    _replay_is_noop(spark, tmp_path, SIMHASH)
 
 
 def test_minhash_apply_batch_incremental_equals_batch(spark, tmp_path):
-    _fold_every_prefix_then_replay(spark, tmp_path, MINHASH)
+    _fold_every_prefix(spark, tmp_path, MINHASH)
+
+
+def test_minhash_apply_batch_replay_is_noop(spark, tmp_path):
+    _replay_is_noop(spark, tmp_path, MINHASH)
 
 
 def test_stream_drain_equals_batch_and_restarts(spark, tmp_path):
