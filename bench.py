@@ -329,23 +329,14 @@ def run_query(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
-def main() -> int:
-    machine_start = _machine_state()
-    spark = get_session("bench")
-    registry = suite.queries()
-    names = [n for n in HEADLINE if n in registry]
-
-    # Warmup: run every query once at the smoke scale so plan compile
-    # + whole-stage-codegen class generation happen before the clock.
-    for name in names:
-        run_query(registry[name], spark, WARMUP_SF_DIR)
-
-    # Python-worker pool warmup: the smoke-scale runs spawn only a few
-    # pandas_udf workers (few partitions), so the first sf0.1-sized
-    # Arrow stage would otherwise pay 32 process forks + numpy/pandas
-    # imports inside the timed window. A resident cluster job has a
-    # warm worker pool (spark.python.worker.reuse), so fork cost is
-    # one-time, not steady-state.
+def warm_python_workers(spark) -> None:
+    """Fill the Python-worker pool before any timed run: the
+    smoke-scale warmup spawns only a few pandas_udf workers (few
+    partitions), so the first sf0.1-sized Arrow stage would otherwise
+    pay a process fork per core + numpy/pandas imports inside the
+    timed window. A resident cluster job has a warm worker pool
+    (spark.python.worker.reuse), so fork cost is one-time, not
+    steady-state."""
     import pandas as _pd
 
     def _noop(batches):
@@ -357,6 +348,20 @@ def main() -> int:
     spark.range(0, 1024, 1, 64).mapInPandas(_noop, "x long").write.format(
         "noop"
     ).mode("overwrite").save()
+
+
+def main() -> int:
+    machine_start = _machine_state()
+    spark = get_session("bench")
+    registry = suite.queries()
+    names = [n for n in HEADLINE if n in registry]
+
+    # Warmup: run every query once at the smoke scale so plan compile
+    # + whole-stage-codegen class generation happen before the clock.
+    for name in names:
+        run_query(registry[name], spark, WARMUP_SF_DIR)
+
+    warm_python_workers(spark)
 
     # Min-of-N: rep r of every query runs before rep r+1 of any query,
     # so a transient machine-load spike hits at most one rep per query

@@ -21,8 +21,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from isilon_hadoop_tools_spark.sources.local import local_df
-
 
 def _dot(a, b):
     return F.aggregate(

@@ -1,20 +1,19 @@
 """The engine's oracle-checked query suite, as a package.
 
-Split from the original single-file suite.py (VERDICT r10 ask 7) into
-per-family modules with an UNCHANGED external surface: REGISTRY,
-query, queries(), oracle_sql(), the ordering helpers, and the table
-cache all live in ._shared and are re-exported here; the family
-modules register their @query functions on import, and
-_enforce_registration_order() then restores the original interleaved
-registration order from the canonical list (the driver window's
-fallback tie-break depends on it).
+The public surface is REGISTRY, query, queries(), oracle_sql(),
+CACHE_TABLES and QuerySpec, which live in ._shared together with the
+ordering helpers and the table cache (import those from ._shared).
+Each family module registers its @query functions on import, and
+_shared._enforce_registration_order() then restores the canonical
+interleaved registration order, which breaks ties in the driver
+window's least-recently-verified ordering.
 
 Family import order is fixed: dedup must precede multimodal (the
 unified-index oracle composes REGISTRY oracle strings of dedup-family
 queries at import time).
 """
 
-from isilon_hadoop_tools_spark.suite._shared import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite import _shared
 from isilon_hadoop_tools_spark.suite._shared import (  # noqa: F401
     CACHE_TABLES,
     REGISTRY,
@@ -23,165 +22,17 @@ from isilon_hadoop_tools_spark.suite._shared import (  # noqa: F401
     queries,
     query,
 )
-from isilon_hadoop_tools_spark.suite._shared import (  # noqa: F401
-    _ANN_K,
-    _ANN_QUERIES,
-    _ANN_SCORE_RANK_SQL,
-    _BLOOM_PROBE,
-    _BLOOM_PROBE_MASK,
-    _BM25_TERMS,
-    _CACHEABLE_SF,
-    _CANONICAL_ORDER,
-    _CHUNK_SIZE,
-    _CHUNK_STRIDE,
-    _CMS_D,
-    _CMS_SEED,
-    _CMS_TOP,
-    _CMS_W,
-    _CORR_COLS,
-    _COS_DUP_THRESHOLD,
-    _DECONTAMINATE_ORACLE,
-    _DIR_SUFFIX,
-    _DUP_SPAN_N,
-    _EMA_ALPHA,
-    _ERR_COLS,
-    _ERR_CTX,
-    _ERR_SCHEMA,
-    _ERR_VALID_SQL,
-    _HIST_BINS,
-    _HIST_HI,
-    _HIST_LO,
-    _HLL_B,
-    _HLL_M,
-    _HLL_REG_SQL,
-    _HOURLY_ROLLUP_ORACLE,
-    _JPEG_MAGIC,
-    _KMV_K,
-    _MG_K,
-    _MINHASH_SIGS_SQL,
-    _MODALITY_ORACLES,
-    _NGRAM_MAX_DF,
-    _PAYLOAD_SQL,
-    _PERM_CHMOD,
-    _PERM_CHMOD_CHOWN,
-    _PERM_CHOWN,
-    _PERM_FOREIGN,
-    _PERM_MISSING,
-    _PERM_ROOT,
-    _PIVOT_TYPES,
-    _PNG_MAGIC,
-    _PPM_TARGET,
-    _PRE_GROUP,
-    _PRE_USER,
-    _PROBE_USERS,
-    _PROFILE_COLS,
-    _PROFILE_NUMERIC,
-    _PSI_BREAKS,
-    _PS_KEY_SQL,
-    _QTY_BANDS,
-    _R02_DRIVER_GREEN,
-    _R04_DRIVER_GREEN,
-    _RECON_DRIFTED,
-    _RECON_MISSING,
-    _RECON_STRAY,
-    _REPETITION_SQL,
-    _SCRATCH,
-    _SESSION_GAP_SEC,
-    _SFX,
-    _SHINGLE_SQL,
-    _SIMHASH_SQL,
-    _STOPWORDS,
-    _STOPWORDS_SQL,
-    _STRAY_USERS,
-    _TABLE_CACHE,
-    _TAKEN_UIDS,
-    _WELL_VERIFIED_TAIL,
-    _actual_perm_rows,
-    _actual_user_rows,
-    _allocation_oracle,
-    _alpha_sql,
-    _apply_identities_oracle,
-    _audio_near_dups_oracle,
-    _bloom_key_hash,
-    _bloom_zone_oracle,
-    _bmp_payload_df,
-    _bmp_payload_from,
-    _bpe_apply_oracle,
-    _bpe_cte_chain,
-    _bpe_oracle,
-    _cos_dup_oracle,
-    _driver_last_green,
-    _enforce_registration_order,
-    _err_body,
-    _error_seed_rows,
-    _fresh_state,
-    _gif_bmp_twin_payload_df,
-    _gif_payload_df,
-    _jpeg_payload_df,
-    _hll_overlap_oracle,
-    _ivf_ann_oracle,
-    _ivf_pq_oracle,
-    _kcore_oracle,
-    _kmeans_cte_chain,
-    _kmeans_oracle,
-    _lang_id_oracle,
-    _lang_score_sql,
-    _le_hex,
-    _lpa_oracle,
-    _lsh_ann_oracle,
-    _lsh_cand_cte,
-    _lsh_multiprobe_oracle,
-    _minhash_params_sql,
-    _ordered_names,
-    _pagerank_oracle,
-    _partsupp,
-    _payload_df,
-    _pboot_oracle,
-    _png_payload_df,
-    _pool_int_sql,
-    _power_iter_oracle,
-    _ppm_payload_df,
-    _pq_adc_oracle,
-    _pq_oracle,
-    _profile_oracle,
-    _quality_oracle,
-    _rendered_py,
-    _script_oracle,
-    _semantic_dedup_oracle,
-    _sql_rendered,
-    _t,
-    _uid_lookup_oracle,
-    _unified_near_dups_oracle,
-    _unigram_lm_oracle,
-    _users_cte,
-    _wav_long_payload_df,
-    _wav_payload_df,
-    _wordpiece_oracle,
-    _y4m_payload_df,
-    _zone_stats_sql,
-    _zorder_terms,
-)
-from isilon_hadoop_tools_spark.suite import (  # noqa: E402,F401 — registration side effects
-    provisioning_queries,
-    tpch_queries,
-    events_queries,
-    docs_queries,
-    dedup_queries,
-    ann_queries,
-    multimodal_queries,
-    analytics_queries,
-)
 
-# Legacy attribute surface: the single-file module exposed every query
-# function as `suite.<name>` (used by __spark_entry__.entry and ad-hoc
-# tooling) — re-export the family modules' public names.
-from isilon_hadoop_tools_spark.suite.provisioning_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.tpch_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.events_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.docs_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.dedup_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.ann_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.multimodal_queries import *  # noqa: E402,F401,F403
-from isilon_hadoop_tools_spark.suite.analytics_queries import *  # noqa: E402,F401,F403
+# Importing the family modules registers their queries; the star
+# imports keep every query function reachable as `suite.<name>` (used
+# by __spark_entry__.entry and ad-hoc tooling).
+from isilon_hadoop_tools_spark.suite.provisioning_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.tpch_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.events_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.docs_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.dedup_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.ann_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.multimodal_queries import *  # noqa: F401,F403
+from isilon_hadoop_tools_spark.suite.analytics_queries import *  # noqa: F401,F403
 
-_enforce_registration_order()
+_shared._enforce_registration_order()

@@ -12,30 +12,17 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from isilon_hadoop_tools_spark.functions.hashing import (
-    FINGERPRINT64_SQL,
     stable_hash32,
     stable_hash32_sql,
 )
-from isilon_hadoop_tools_spark.functions.octal import to_octal
-from isilon_hadoop_tools_spark.functions.text import (
-    bpe_token_count,
-    punct_ratio,
-    stopword_ratio,
-    token_count,
-)
-from isilon_hadoop_tools_spark.operators import dedup, similarity
+from isilon_hadoop_tools_spark.operators import similarity
 from isilon_hadoop_tools_spark.session import shuffle_partition_count
-from isilon_hadoop_tools_spark.operators.allocate_ids import allocate_ids
-from isilon_hadoop_tools_spark.operators.guards import dangling_references
-from isilon_hadoop_tools_spark.operators.reconcile import reconcile
-from isilon_hadoop_tools_spark.operators.topk import topk_per_group
 from isilon_hadoop_tools_spark.oracle import values_cte
-from isilon_hadoop_tools_spark.sources import catalogs, cluster, tpch
-from isilon_hadoop_tools_spark.sources.local import local_df
+from isilon_hadoop_tools_spark.sources import catalogs, tpch
 
 
 @dataclass
@@ -2882,154 +2869,6 @@ def _quality_oracle(
     return "".join(parts)
 
 
-# Historical driver-green sets, kept only as the ordering fallback for
-# checkouts without CORRECTNESS_r*.json files (fresh clones, CI): the
-# live ordering below parses the driver's own per-round results.
-_R02_DRIVER_GREEN = frozenset(
-    {
-        "q1_pricing_summary",
-        "q3_top_revenue_orders",
-        "q5_local_supplier_volume",
-        "customers_without_orders",
-        "urgent_orders_with_heavy_items",
-        "top3_orders_per_customer",
-        "customer_order_gaps",
-        "nations_customers_only",
-        "nations_customers_and_suppliers",
-        "agg_surface_stats",
-        "lineitem_rollup",
-        "lineitem_cube",
-        "customer_trailing_revenue",
-        "lineitem_grouping_sets",
-        "realm_spn_reconcile",
-        "cluster_node_revision",
-        "pool_addresses",
-        "zone_hdfs_root",
-        "settings_as_map_entries",
-        "identity_suffix_all_tables",
-        "uid_lookup_probe",
-        "orders_format_roundtrip",
-        "identity_users_cdh",
-        "identity_groups_cdp",
-        "identity_memberships_hdp",
-        "identity_proxy_users_cdp",
-        "directories_cdh_suffixed",
-        "uid_allocation_cdh",
-        "referential_integrity_cdh",
-        "reconcile_users_cdh",
-        "delete_orphan_users",
-        "update_hdfs_settings",
-        "apply_identities_cdh",
-        "apply_identities_rerun_delta",
-        "apply_directories_cdh",
-        "directory_permissions_drift",
-        "identity_script_cdh",
-        "events_hourly_rollup",
-        "events_dedup_first",
-        "error_classification",
-        "error_matchers",
-        "events_asof_latest_order",
-        "events_props_parsed",
-        "events_user_ema",
-        "events_hourly_rollup_stream",
-        "events_sliding_rollup_stream",
-        "events_dedup_first_stream",
-        "events_sessionized",
-        "events_stream_stream_join",
-        "events_salted_type_counts",
-    }
-)
-
-
-# Queries driver-green in CORRECTNESS_r04.json (the r03/r04 window
-# checked the complement of the r02 set; these 48 exclude the two
-# in-window reds, embedding_quantize_int8 / events_foreach_batch_state,
-# which must sort to the very front until they earn a green row).
-_R04_DRIVER_GREEN = frozenset(
-    {
-        "orders_partitioned_pruning",
-        "doc_token_stats",
-        "doc_lang_quality",
-        "doc_lang_id",
-        "doc_repetition_stats",
-        "doc_train_split",
-        "doc_stratified_sample",
-        "doc_pack_chunks",
-        "doc_redact_pii",
-        "corpus_decontaminate",
-        "doc_truncate_tokens",
-        "embedding_kmeans_assign",
-        "doc_tfidf_topk",
-        "corpus_curation_funnel",
-        "q14_promo_revenue",
-        "q6_forecast_revenue",
-        "q4_order_priority",
-        "q7_nation_volume",
-        "q10_returned_items",
-        "q13_customer_distribution",
-        "q15_top_supplier",
-        "q17_small_quantity_revenue",
-        "q18_large_volume_customers",
-        "q19_bracket_revenue",
-        "q22_dormant_customers",
-        "q2_min_cost_supplier",
-        "q11_important_stock",
-        "q16_supplier_part_counts",
-        "q20_excess_stock_suppliers",
-        "q8_market_share",
-        "q9_product_type_profit",
-        "q12_late_shipment_priority",
-        "q21_waiting_suppliers",
-        "dedup_exact_docs",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_signatures",
-        "dedup_minhash_lsh_candidates",
-        "dedup_keep_one",
-        "doc_winnow_fingerprints",
-        "simhash_docs",
-        "simhash_hamming_pairs",
-        "dedup_embedding_cosine",
-        "orders_price_bands",
-        "multimodal_metadata",
-        "multimodal_binary_dedup",
-        "multimodal_decode_stub",
-        "multimodal_frame_sample",
-        "ann_brute_force_cosine",
-    }
-)
-
-
-# r02-green queries with the strongest repeat evidence (judge-verified
-# every round since): sacrificed to positions just past the driver's
-# ~50-query window so every weaker query fits inside it.
-_WELL_VERIFIED_TAIL = frozenset(
-    {
-        "q1_pricing_summary",
-        "q3_top_revenue_orders",
-        "q5_local_supplier_volume",
-        "customers_without_orders",
-        "agg_surface_stats",
-        "lineitem_rollup",
-        "lineitem_cube",
-        "lineitem_grouping_sets",
-        "customer_trailing_revenue",
-        "top3_orders_per_customer",
-        "customer_order_gaps",
-        "nations_customers_only",
-        "nations_customers_and_suppliers",
-        "settings_as_map_entries",
-        "zone_hdfs_root",
-        "uid_lookup_probe",
-        "orders_format_roundtrip",
-        "identity_suffix_all_tables",
-        "identity_users_cdh",
-        "identity_groups_cdp",
-        "identity_memberships_hdp",
-        "identity_proxy_users_cdp",
-    }
-)
-
-
 def _driver_last_green() -> dict[str, int]:
     """Map query name -> most recent round with a green driver row,
     parsed from the ``CORRECTNESS_r*.json`` files the driver drops at
@@ -3038,7 +2877,6 @@ def _driver_last_green() -> dict[str, int]:
     Red rows do not count: a query that failed its last check keeps
     its older (or absent) green round and sorts back to the front."""
     import json
-    import re as _re
 
     # repo root: this file sits at isilon_hadoop_tools_spark/suite/
     root = Path(__file__).resolve().parents[2]
@@ -3074,23 +2912,10 @@ def _ordered_names() -> list[str]:
     deterministic round-robin — every query re-earns a driver row at
     least every ceil(n/50) rounds, new/red/never-checked queries jump
     to the front, and a regression cannot hide outside the window for
-    more than two rounds. Falls back to the static r02/r04 snapshot
-    ordering when no CORRECTNESS files are present (fresh clone)."""
-    names = list(REGISTRY)
+    more than two rounds."""
     last = _driver_last_green()
-    if last:
-        return sorted(names, key=lambda n: (last.get(n, -1), names.index(n)))
-
-    def rank(n: str) -> int:
-        if n not in _R02_DRIVER_GREEN and n not in _R04_DRIVER_GREEN:
-            return 0
-        if n in _WELL_VERIFIED_TAIL:
-            return 2
-        if n in _R02_DRIVER_GREEN:
-            return 1
-        return 3
-
-    return sorted(names, key=lambda n: (rank(n), names.index(n)))
+    # stable sort: ties keep registration (_CANONICAL_ORDER) order
+    return sorted(REGISTRY, key=lambda n: last.get(n, -1))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -6,10 +6,6 @@ centrally by the package __init__ via _CANONICAL_ORDER."""
 from __future__ import annotations
 
 import os
-import re as _re
-from dataclasses import dataclass
-from pathlib import Path
-from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -19,56 +15,15 @@ from isilon_hadoop_tools_spark.functions.hashing import (
     stable_hash32,
     stable_hash32_sql,
 )
-from isilon_hadoop_tools_spark.functions.octal import to_octal
-from isilon_hadoop_tools_spark.functions.text import (
-    bpe_token_count,
-    punct_ratio,
-    stopword_ratio,
-    token_count,
-)
-from isilon_hadoop_tools_spark.operators import dedup, similarity
-from isilon_hadoop_tools_spark.operators.allocate_ids import allocate_ids
-from isilon_hadoop_tools_spark.operators.guards import dangling_references
-from isilon_hadoop_tools_spark.operators.reconcile import reconcile
-from isilon_hadoop_tools_spark.operators.topk import topk_per_group
-from isilon_hadoop_tools_spark.oracle import values_cte
-from isilon_hadoop_tools_spark.sources import catalogs, cluster, tpch
-from isilon_hadoop_tools_spark.sources.local import local_df
 
-from isilon_hadoop_tools_spark.suite._shared import (  # noqa: F401
-    CACHE_TABLES,
-    PARTSUPP_SQL,
-    Q11_NATION,
-    Q1_CUTOFF,
-    Q20_NATION,
-    Q7_NATION_A,
-    Q7_NATION_B,
-    Q8_NATION,
-    QuerySpec,
+from isilon_hadoop_tools_spark.suite._shared import (
     REGISTRY,
-    _ANN_K,
-    _ANN_QUERIES,
-    _ANN_SCORE_RANK_SQL,
     _BLOOM_PROBE,
-    _BLOOM_PROBE_MASK,
-    _BM25_TERMS,
-    _CACHEABLE_SF,
-    _CHUNK_SIZE,
-    _CHUNK_STRIDE,
     _CMS_D,
     _CMS_SEED,
     _CMS_TOP,
     _CMS_W,
-    _CORR_COLS,
-    _COS_DUP_THRESHOLD,
-    _DECONTAMINATE_ORACLE,
-    _DIR_SUFFIX,
-    _DUP_SPAN_N,
     _EMA_ALPHA,
-    _ERR_COLS,
-    _ERR_CTX,
-    _ERR_SCHEMA,
-    _ERR_VALID_SQL,
     _HIST_BINS,
     _HIST_HI,
     _HIST_LO,
@@ -76,113 +31,21 @@ from isilon_hadoop_tools_spark.suite._shared import (  # noqa: F401
     _HLL_M,
     _HLL_REG_SQL,
     _HOURLY_ROLLUP_ORACLE,
-    _JPEG_MAGIC,
     _KMV_K,
-    _MG_K,
-    _MINHASH_SIGS_SQL,
-    _MODALITY_ORACLES,
-    _NGRAM_MAX_DF,
-    _PAYLOAD_SQL,
-    _PERM_CHMOD,
-    _PERM_CHMOD_CHOWN,
-    _PERM_CHOWN,
-    _PERM_FOREIGN,
-    _PERM_MISSING,
-    _PERM_ROOT,
     _PIVOT_TYPES,
-    _PNG_MAGIC,
-    _PPM_TARGET,
-    _PRE_GROUP,
-    _PRE_USER,
-    _PROBE_USERS,
-    _PROFILE_COLS,
-    _PROFILE_NUMERIC,
     _PSI_BREAKS,
-    _PS_KEY_SQL,
-    _QTY_BANDS,
-    _R02_DRIVER_GREEN,
-    _R04_DRIVER_GREEN,
-    _RECON_DRIFTED,
-    _RECON_MISSING,
-    _RECON_STRAY,
-    _REPETITION_SQL,
     _SCRATCH,
     _SESSION_GAP_SEC,
-    _SFX,
-    _SHINGLE_SQL,
-    _SIMHASH_SQL,
-    _STOPWORDS,
-    _STOPWORDS_SQL,
-    _STRAY_USERS,
-    _TABLE_CACHE,
-    _TAKEN_UIDS,
-    _WELL_VERIFIED_TAIL,
-    _actual_perm_rows,
-    _actual_user_rows,
-    _allocation_oracle,
     _alpha_sql,
-    _apply_identities_oracle,
-    _audio_near_dups_oracle,
-    _bloom_key_hash,
     _bloom_zone_oracle,
-    _bmp_payload_df,
-    _bmp_payload_from,
-    _bpe_apply_oracle,
-    _bpe_cte_chain,
-    _bpe_oracle,
-    _cos_dup_oracle,
-    _driver_last_green,
-    _err_body,
-    _error_seed_rows,
     _fresh_state,
-    _gif_bmp_twin_payload_df,
-    _gif_payload_df,
     _hll_overlap_oracle,
-    _ivf_ann_oracle,
-    _ivf_pq_oracle,
-    _kcore_oracle,
-    _kmeans_cte_chain,
-    _kmeans_oracle,
-    _lang_id_oracle,
-    _lang_score_sql,
-    _le_hex,
-    _lpa_oracle,
-    _lsh_ann_oracle,
-    _lsh_cand_cte,
-    _lsh_multiprobe_oracle,
-    _minhash_params_sql,
-    _ordered_names,
-    _pagerank_oracle,
-    _partsupp,
-    _payload_df,
     _pboot_oracle,
-    _png_payload_df,
-    _pool_int_sql,
-    _power_iter_oracle,
-    _ppm_payload_df,
-    _pq_adc_oracle,
-    _pq_oracle,
-    _profile_oracle,
-    _quality_oracle,
-    _rendered_py,
-    _script_oracle,
-    _semantic_dedup_oracle,
-    _sql_rendered,
     _t,
-    _uid_lookup_oracle,
-    _unified_near_dups_oracle,
-    _unigram_lm_oracle,
-    _users_cte,
-    _wav_long_payload_df,
-    _wav_payload_df,
-    _wordpiece_oracle,
-    _y4m_payload_df,
     _hilbert_chain,
     _hilbert_stats_sql,
     _zone_stats_sql,
     _zorder_terms,
-    oracle_sql,
-    queries,
     query,
 )
 

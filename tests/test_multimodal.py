@@ -1001,3 +1001,35 @@ def test_jpeg_png_cross_codec_identical_ahash(spark):
           for r in M.png_ahash(pdf, "payload", "doc_id").collect()}
     assert jh == ph
     assert jh[1] == jh[2] != jh[3]
+
+
+def test_hash_recall_query_evaluates_id_prefix_sample(spark, monkeypatch):
+    # the recall eval's truth pass is quadratic and refuses large
+    # inputs, so the suite query evaluates a doc_id prefix; with the
+    # prefix cut below the smoke table it must equal the eval run
+    # directly on the prefix's hashes
+    from conftest import SMOKE_SF_DIR
+
+    from isilon_hadoop_tools_spark.operators.dedup import hamming_recall_eval
+    from isilon_hadoop_tools_spark.suite import multimodal_queries as mq
+    from isilon_hadoop_tools_spark.suite._shared import _bmp_payload_df
+
+    monkeypatch.setattr(mq, "_BANDING_EVAL_DOCS", 120)
+    payloads = _bmp_payload_df(spark, SMOKE_SF_DIR)
+    hashes = (
+        M.bmp_ahash(payloads, "payload", "doc_id")
+        .select("doc_id", "ahash")
+        .join(
+            M.bmp_dhash(payloads, "payload", "doc_id").select(
+                "doc_id", "dhash"
+            ),
+            "doc_id",
+        )
+        .filter(F.col("doc_id") < 120)
+    )
+    assert hashes.count() == 120  # of the smoke table's 500 docs
+    want = hamming_recall_eval(
+        hashes, "doc_id", ["ahash", "dhash"], bits=36, max_hamming=8, bands=6
+    ).collect()
+    got = mq.multimodal_hash_recall(spark, SMOKE_SF_DIR).collect()
+    assert got == want

@@ -31,7 +31,7 @@ def _no_table_cache(spark):
     old = _shared.CACHE_TABLES
     _shared.CACHE_TABLES = False
     spark.catalog.clearCache()
-    suite._TABLE_CACHE.clear()
+    _shared._TABLE_CACHE.clear()
     yield
     _shared.CACHE_TABLES = old
 

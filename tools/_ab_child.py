@@ -6,6 +6,9 @@ Reads the query list from $AB_QUERIES (JSON list), reps from $AB_REPS,
 times each query min-of-reps at $SPARK_GRAFT_SF_DIR after the same
 warmup discipline as bench.py (plan/codegen warmup at the smoke scale,
 pandas-worker pool warmup), and prints one ``ABRESULT {...}`` line.
+The worker-pool warmup is a copy of ``bench.warm_python_workers``,
+not a call: this runner also executes against past trees whose
+bench.py predates that function.
 """
 
 from __future__ import annotations

@@ -127,12 +127,13 @@ def gate_freshness_stale(max_age: int | None = None) -> list[str]:
     trusting a stale green. Queries with no driver row at all are new
     (they sort to the window's front next round) and are exempt."""
     from isilon_hadoop_tools_spark import suite
+    from isilon_hadoop_tools_spark.suite import _shared
 
     if max_age is None:
         # full rotation cycle + 1 round of slack for window jitter
         # (the driver window is "~50", not exactly 50)
         max_age = -(-len(suite.REGISTRY) // 50) + 1
-    last = suite._driver_last_green()
+    last = _shared._driver_last_green()
     if not last:
         return []
     current = max(last.values())

@@ -1,7 +1,8 @@
 """Time a list of suite queries end-to-end with the noop sink.
 
-Same methodology as bench.py (plan+codegen warmup at sf0.001, then
-timed reps at the target SF, min reported) but for an arbitrary query
+Same methodology as bench.py (plan+codegen warmup at sf0.001 and the
+Python-worker pool warmup, then timed reps at the target SF, min
+reported) but for an arbitrary query
 list — the paired A/B measurement harness for rotation (non-headline)
 queries. Usage::
 
@@ -18,6 +19,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import bench  # noqa: E402
 from isilon_hadoop_tools_spark import suite  # noqa: E402
 from isilon_hadoop_tools_spark.session import get_session  # noqa: E402
 
@@ -49,6 +51,8 @@ def main() -> int:
         fn = registry[name]
         spark.sparkContext.setJobDescription(f"warmup {name}")
         fn(spark, WARMUP_SF_DIR).write.format("noop").mode("overwrite").save()
+        # per query: Spark reaps Python workers idle for a minute
+        bench.warm_python_workers(spark)
         obs = []
         for r in range(reps):
             spark.sparkContext.setJobDescription(f"timed {name} rep{r}")
