@@ -6,7 +6,9 @@ Runs each headline query from the oracle-checked suite against
 
     {"metric": "suite_wall_sec", "value": N, "unit": "sec",
      "queries": {<top-25 slowest>: min_sec, ...},
-     "families": {"tpch": sec, "events": sec, ...}, "sf": 0.1}
+     "families": {"tpch": sec, "events": sec, ...}, "sf": 0.1,
+     "master": "local[4]", "default_parallelism": 4,
+     "shuffle_partitions": 4}
 
 STDOUT CONTRACT: the driver captures only the LAST 2000 characters of
 stdout and parses the final line as JSON, so the printed line must
@@ -62,7 +64,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from isilon_hadoop_tools_spark import suite  # noqa: E402
-from isilon_hadoop_tools_spark.session import get_session  # noqa: E402
+from isilon_hadoop_tools_spark.session import (  # noqa: E402
+    get_session,
+    shuffle_partition_count,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARMUP_SF_DIR = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
@@ -329,6 +334,18 @@ def run_query(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
+def session_facts(spark) -> dict:
+    """The session the timings ran on, stated on the stdout line and in
+    the sidecar: a scaling result then explains itself (a session left
+    at ``local[32]`` on a 4-core box times very differently)."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": shuffle_partition_count(spark),
+    }
+
+
 def warm_python_workers(spark) -> None:
     """Fill the Python-worker pool before any timed run: the
     smoke-scale warmup spawns only a few pandas_udf workers (few
@@ -353,6 +370,7 @@ def warm_python_workers(spark) -> None:
 def main() -> int:
     machine_start = _machine_state()
     spark = get_session("bench")
+    session = session_facts(spark)
     registry = suite.queries()
     names = [n for n in HEADLINE if n in registry]
 
@@ -420,6 +438,7 @@ def main() -> int:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "sf": sf,
+                **session,
                 "run_idx": run_idx,
                 "queries": timings,
                 "reps": reps,
@@ -448,6 +467,7 @@ def main() -> int:
             "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "sf": sf,
+            **session,
             "families": families,
             "queries": top,
             "n_queries": len(timings),

@@ -186,7 +186,9 @@ def _actual_user_rows() -> list[tuple[str, str]]:
     return sorted(rows)
 
 
-_SCRATCH = "/root/repo/.scratch"
+# state and stream-source dirs live in this checkout's .scratch, so two
+# trees (a past commit under A/B, a second gate) never share them
+_SCRATCH = str(Path(__file__).resolve().parents[2] / ".scratch")
 
 
 def _fresh_state(spark: SparkSession, name: str):

@@ -83,3 +83,27 @@ def test_dry_run_subprocess(script, dist, tmp_path):
         cwd=REPO,
         timeout=600,
     )
+
+
+def test_suite_scratch_follows_the_checkout(tmp_path):
+    # a second tree (a past commit under A/B, another gate) must keep
+    # its suite state dirs under its own root, not under this one's
+    import shutil
+
+    shutil.copytree(
+        REPO / "isilon_hadoop_tools_spark",
+        tmp_path / "isilon_hadoop_tools_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    out = subprocess.check_output(
+        [
+            sys.executable,
+            "-c",
+            "from isilon_hadoop_tools_spark.suite import _shared; "
+            "print(_shared._SCRATCH)",
+        ],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(tmp_path)},
+        text=True,
+    )
+    assert Path(out.strip()) == tmp_path.resolve() / ".scratch"

@@ -35,6 +35,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import bench  # noqa: E402
 from isilon_hadoop_tools_spark import suite  # noqa: E402
 from isilon_hadoop_tools_spark.session import get_session  # noqa: E402
 
@@ -62,12 +63,7 @@ DEFAULT = (
 
 
 def timed(fn, spark, sf_dir: str, reps: int = 2) -> float:
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return min(bench.run_query(fn, spark, sf_dir) for _ in range(reps))
 
 
 MULTIPLES = (1, 2, 4, 8, 10)
@@ -174,6 +170,12 @@ def curvature() -> int:
 
     spark = get_session("curvature_probe")
     scratch = Path(__file__).resolve().parent.parent / ".scratch" / "curvature"
+
+    def wall(build) -> float:
+        """Seconds to build ``build()`` and noop-write it, as bench.py
+        times a query."""
+        return bench.run_query(lambda *_: build(), spark, None)
+
     multiples = _multiples()
     cmax = max(multiples)
     # corpus-copy scaffolding is only needed by the documents/
@@ -209,21 +211,17 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        dedup.ngram_jaccard_pairs(
+        return wall(lambda: dedup.ngram_jaccard_pairs(
             d, "text", "doc_id", k=3, threshold=0.2, max_df=1000
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_semdedup(c: int) -> float:
         e = spark.read.parquet(str(scratch / "embeddings")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        semantic_dedup(
+        return wall(lambda: semantic_dedup(
             e, "embedding", "vec_id", k=8 * c, iters=3, threshold=0.9
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_prefix(c: int) -> float:
         # the prefix-filtered EXACT Jaccard join (L2b): copies carry
@@ -234,11 +232,9 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        dedup.prefix_filter_jaccard_pairs(
+        return wall(lambda: dedup.prefix_filter_jaccard_pairs(
             d, "text", "doc_id", k=3, threshold=0.1
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_suffix(c: int) -> float:
         # suffix-array substring dedup (L29d): copies carry disjoint
@@ -253,11 +249,7 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        suffix_dup_spans(d, "text", "doc_id", min_len=10).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return time.perf_counter() - t0
+        return wall(lambda: suffix_dup_spans(d, "text", "doc_id", min_len=10))
 
     def run_quality(c: int) -> float:
         # quality-classifier training (L58): 3 GD rounds, each one
@@ -271,11 +263,9 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        quality_classifier_train(
+        return wall(lambda: quality_classifier_train(
             d, "text", "doc_id", F.pmod(F.col("doc_id"), F.lit(2)) == 0
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_keepone(c: int) -> float:
         # connected-components keep-one (L8): bench rotation flagged
@@ -289,11 +279,9 @@ def curvature() -> int:
         pairs = dedup.ngram_jaccard_pairs(
             d, "text", "doc_id", k=3, threshold=0.2, max_df=1000
         )
-        t0 = time.perf_counter()
-        dedup.connected_components(
+        return wall(lambda: dedup.connected_components(
             d.select(F.col("doc_id").alias("id")), pairs
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_suffix_boiler(c: int) -> float:
         # ADVERSARIAL suffix probe: ONE short phrase repeated ~10^4·c
@@ -317,11 +305,7 @@ def curvature() -> int:
                 F.format_string("tail%d x y z", F.col("id")),
             ).alias("text"),
         )
-        t0 = time.perf_counter()
-        suffix_dup_spans(docs, "text", "doc_id", min_len=10).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return time.perf_counter() - t0
+        return wall(lambda: suffix_dup_spans(docs, "text", "doc_id", min_len=10))
 
     def run_ks(c: int) -> float:
         # exact KS drift (EA29c): a CONTINUOUS-valued column, so the
@@ -334,11 +318,9 @@ def curvature() -> int:
             F.pmod(F.col("id") * 2654435761, F.lit(2**31)).alias("v"),
             (F.pmod(F.col("id"), F.lit(3)) == 0).alias("_b"),
         )
-        t0 = time.perf_counter()
-        ks_drift(
+        return wall(lambda: ks_drift(
             df, "v", F.col("_b"), ~F.col("_b")
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_mw(c: int) -> float:
         # exact Mann-Whitney U (EA29d): same continuous-value stress
@@ -351,11 +333,9 @@ def curvature() -> int:
             F.pmod(F.col("id") * 2654435761, F.lit(2**31)).alias("v"),
             (F.pmod(F.col("id"), F.lit(3)) == 0).alias("_b"),
         )
-        t0 = time.perf_counter()
-        mann_whitney_u(
+        return wall(lambda: mann_whitney_u(
             df, "v", F.col("_b"), ~F.col("_b")
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_cvm(c: int) -> float:
         # exact Cramér–von Mises (EA29g): same continuous-value
@@ -366,11 +346,9 @@ def curvature() -> int:
             F.pmod(F.col("id") * 2654435761, F.lit(2**31)).alias("v"),
             (F.pmod(F.col("id"), F.lit(3)) == 0).alias("_b"),
         )
-        t0 = time.perf_counter()
-        cvm_drift(
+        return wall(lambda: cvm_drift(
             df, "v", F.col("_b"), ~F.col("_b")
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_semdedup_mega(c: int) -> float:
         # ADVERSARIAL mega-cluster probe: k held FIXED at 8 while rows
@@ -386,8 +364,7 @@ def curvature() -> int:
         e = spark.read.parquet(str(scratch / "embeddings")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        _sd(
+        return wall(lambda: _sd(
             e,
             "embedding",
             "vec_id",
@@ -395,8 +372,7 @@ def curvature() -> int:
             iters=3,
             threshold=0.9,
             max_cluster_rows=512,
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_kmeans(c: int) -> float:
         # k-means training + assignment (L28): k scales with corpus
@@ -408,11 +384,9 @@ def curvature() -> int:
         e = spark.read.parquet(str(scratch / "embeddings")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        kmeans_iterate(
+        return wall(lambda: kmeans_iterate(
             e, "embedding", "vec_id", k=8 * c, iters=3
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_kn(c: int) -> float:
         # interpolated Kneser-Ney scoring (L70): four count
@@ -428,11 +402,7 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        kn_perplexity_buckets(d, "text", "doc_id").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return time.perf_counter() - t0
+        return wall(lambda: kn_perplexity_buckets(d, "text", "doc_id"))
 
     def run_binary(c: int) -> float:
         # binary-quantization ANN (L11c): the Hamming candidate scan
@@ -447,11 +417,7 @@ def curvature() -> int:
             F.col("copy") < c
         )
         q = e.filter(F.col("vec_id") < 5)
-        t0 = time.perf_counter()
-        binary_hamming_topk(e, q, k=10, rerank=40).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return time.perf_counter() - t0
+        return wall(lambda: binary_hamming_topk(e, q, k=10, rerank=40))
 
     def run_ivf_pq(c: int, rerank_k=None) -> float:
         # IVF-PQ (L44b/L44c, headline #3/#4): probe-fanout-driven —
@@ -468,13 +434,11 @@ def curvature() -> int:
         e = spark.read.parquet(str(scratch / "embeddings")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        ivf_pq_topk(
+        return wall(lambda: ivf_pq_topk(
             e, "embedding", "vec_id", n_queries=5, topk=10,
             n_lists=4, n_probe=2, coarse_iters=2, m=4, k=8, pq_iters=2,
             rerank_k=rerank_k,
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_ivf_pq_rerank(c: int) -> float:
         return run_ivf_pq(c, rerank_k=40)
@@ -499,8 +463,7 @@ def curvature() -> int:
             F.pmod(F.col("id") * 2654435761, F.lit(7)).alias("f1"),
             F.pmod(F.col("id") * 40503, F.lit(11)).alias("f2"),
         )
-        t0 = time.perf_counter()
-        fellegi_sunter_em(
+        return wall(lambda: fellegi_sunter_em(
             df,
             "rid",
             "blk",
@@ -508,8 +471,7 @@ def curvature() -> int:
             iters=2,
             max_block_rows=1000,
             over_budget="subsample",
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_phrase(c: int) -> float:
         # L79 positional phrase search: per-term posting lists are
@@ -524,11 +486,9 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        phrase_search(
+        return wall(lambda: phrase_search(
             d, "text", "doc_id", "slow hash batch"
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_novelty(c: int) -> float:
         # L80 gram novelty: reference grams and candidate grams both
@@ -541,12 +501,10 @@ def curvature() -> int:
         d = spark.read.parquet(str(scratch / "documents")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        gram_novelty(
+        return wall(lambda: gram_novelty(
             d, "text", "doc_id",
             F.pmod(F.col("doc_id"), F.lit(10)) == 0, n=3,
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_jl(c: int) -> float:
         # L56 JL distortion eval: corpus grows linearly (orthogonal
@@ -560,11 +518,9 @@ def curvature() -> int:
         e = spark.read.parquet(str(scratch / "embeddings")).filter(
             F.col("copy") < c
         )
-        t0 = time.perf_counter()
-        jl_distortion_eval(
+        return wall(lambda: jl_distortion_eval(
             e, "embedding", "vec_id", n_queries=10, out_dim=16, in_dim=64
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_hilbert_write(c: int) -> float:
         # SC8e Hilbert layout write: two-phase global rank + one
@@ -589,8 +545,7 @@ def curvature() -> int:
         mod = F.pmod(F.col("_minute"), F.lit(256))
         out_dir = str(scratch / f"hilbert_{c}")
         shutil.rmtree(out_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        layout_write_footer_stats(
+        dt = wall(lambda: layout_write_footer_stats(
             ev,
             hilbert_key([ubucket, mod], bits=8),
             "event_id",
@@ -599,8 +554,7 @@ def curvature() -> int:
             rows_per_file=1024,
             lo=90,
             hi=140,
-        ).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        ))
         shutil.rmtree(out_dir, ignore_errors=True)
         return dt
 
@@ -651,11 +605,9 @@ def curvature() -> int:
         hashes = jpg.select("doc_id", "ahash").unionByName(
             png.select("doc_id", "ahash")
         )
-        t0 = time.perf_counter()
-        hamming_band_pairs(
+        return wall(lambda: hamming_band_pairs(
             hashes, "ahash", "doc_id", bits=36, max_hamming=4, bands=6
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_web_curation(c: int) -> float:
         # L65 web-curation capstone: canonical groups stay 24 by the
@@ -675,12 +627,10 @@ def curvature() -> int:
         urls = _url_dedup_fixture(d.select("doc_id")).join(
             d.select("doc_id", "text"), "doc_id"
         )
-        t0 = time.perf_counter()
-        web_curation_pipeline(
+        return wall(lambda: web_curation_pipeline(
             urls, "url", "text", "doc_id", cap=5,
             is_eval=F.pmod(F.col("id"), F.lit(97)) == 0, n=3,
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        ))
 
     def run_inc_join(c: int) -> float:
         # EA34 incremental join maintenance: both deltas and bases
@@ -699,13 +649,9 @@ def curvature() -> int:
         )
         a_old, a_delta = a.filter("k % 7 <> 0"), a.filter("k % 7 = 0")
         b_old, b_delta = b.filter("pb % 5 <> 0"), b.filter("pb % 5 = 0")
-        t0 = time.perf_counter()
-        incremental_join_delta(
+        return wall(lambda: incremental_join_delta(
             a_old, a_delta, b_old, b_delta, "k"
-        ).groupBy("pa").count().write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+        ).groupBy("pa").count())
 
     def run_bloom_semi(c: int) -> float:
         # SC11 Bloom semi-join: the bitmap build is constant-size (500
@@ -719,11 +665,7 @@ def curvature() -> int:
             F.col("id").alias("k"), (F.col("id") * 3).alias("payload")
         )
         small = spark.range(500).select((F.col("id") * 101).alias("sk"))
-        t0 = time.perf_counter()
-        bloom_semi_join(big, small, "k", "sk").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+        return wall(lambda: bloom_semi_join(big, small, "k", "sk"))
 
     def run_snapshot_merge(c: int) -> float:
         # SC10f MERGE INTO is copy-on-write: O(table) per commit BY
@@ -779,11 +721,7 @@ def curvature() -> int:
             ),
         )
         pages = d.select("doc_id", page.alias("html"))
-        t0 = time.perf_counter()
-        html_extract(pages, "doc_id", "html").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+        return wall(lambda: html_extract(pages, "doc_id", "html"))
 
     only = {a for a in sys.argv[1:] if not a.startswith("--")}
     bad = 0
@@ -875,9 +813,7 @@ def main() -> int:
     bad = 0
     for name in names:
         fn = suite.REGISTRY[name].spark
-        fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
+        bench.run_query(fn, spark, bench.WARMUP_SF_DIR)  # plan/codegen warmup
         t_small = timed(fn, spark, "/root/testdata/sf0.01")
         t_big = timed(fn, spark, "/root/testdata/sf0.1")
         ratio = t_big / t_small if t_small > 0 else float("inf")
