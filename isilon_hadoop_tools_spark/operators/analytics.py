@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from isilon_hadoop_tools_spark.functions.litmap import lit_map
 from isilon_hadoop_tools_spark.session import shuffle_partition_count
+from isilon_hadoop_tools_spark.sources.local import local_df
 
 
 def sessionize(
@@ -823,9 +824,7 @@ def equidepth_histogram(
         # empty (or all-NULL) input: percentile yields NULL — return
         # an empty result with the output schema instead of crashing
         spark = df.sparkSession
-        return spark.createDataFrame(
-            [], "bucket long, n long, lo double, hi double"
-        )
+        return local_df(spark, [], "bucket long, n long, lo double, hi double")
     # half-AWAY-from-zero edge rounding, matching the DuckDB oracle's
     # round() on DOUBLE (the engine the twin runs on) — Python round()
     # is half-to-even and would diverge on exact .5 ties. NOTE: this
@@ -2903,8 +2902,8 @@ def fellegi_sunter_em(
         .localCheckpoint(eager=False)
     )
     spark = df.sparkSession
-    params = spark.createDataFrame(
-        [tuple([p0] + [m0] * k + [u0] * k)],
+    params = local_df(
+        spark, [tuple([p0] + [m0] * k + [u0] * k)],
         ", ".join(
             ["p DOUBLE"]
             + [f"m{i + 1} DOUBLE" for i in range(k)]

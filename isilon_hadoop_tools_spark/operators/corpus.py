@@ -29,6 +29,7 @@ from isilon_hadoop_tools_spark.functions.hashing import (
 )
 from isilon_hadoop_tools_spark.functions.litmap import lit_long_map, lit_map
 from isilon_hadoop_tools_spark.functions.text import tokens
+from isilon_hadoop_tools_spark.sources.local import local_df
 
 
 def repetition_stats(
@@ -1376,8 +1377,8 @@ def bpe_train(
     cur = vocab.select(
         "w", "n", F.split("w", "").alias("syms")
     ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        _bpe_rounds(cur, rounds),
+    return local_df(
+        spark, _bpe_rounds(cur, rounds),
         "merge_round int, lhs string, rhs string, pair_count long",
     )
 
@@ -1480,8 +1481,8 @@ def byte_bpe_train(
     cur = vocab.select(
         "w", "n", _byte_syms(F.col("w")).alias("syms")
     ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        _bpe_rounds(cur, rounds),
+    return local_df(
+        spark, _bpe_rounds(cur, rounds),
         "merge_round int, lhs string, rhs string, pair_count long",
     )
 
@@ -1753,9 +1754,7 @@ def unigram_lm_train(
         df, text_col, max_piece_len, n_seed_multi, em_rounds, scale
     )
     total = sum(counts.values())
-    out = spark.createDataFrame(
-        sorted(counts.items()), "piece string, count long"
-    )
+    out = local_df(spark, sorted(counts.items()), "piece string, count long")
     w_rank = Window.orderBy(F.col("count").desc(), "piece")
     return out.select(
         "piece",
@@ -2010,8 +2009,8 @@ def wordpiece_train(
         cur = cur.select(
             "w", "n", _bpe_merge_expr(F.col("syms"), lhs, rhs).alias("syms")
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges,
+    return local_df(
+        spark, merges,
         "merge_round int, lhs string, rhs string, pair_count long,"
         " score_q long",
     )
@@ -2191,8 +2190,8 @@ def quality_classifier_train(
         df, text_col, id_col, label, n_buckets, rounds, lr_num, lr_den,
         scale,
     )
-    return df.sparkSession.createDataFrame(
-        sorted(w.items()), "feature_id int, weight long"
+    return local_df(
+        df.sparkSession, sorted(w.items()), "feature_id int, weight long"
     )
 
 
@@ -3239,8 +3238,8 @@ def lang_classifier_train(
     w = _lang_gd(
         feats, langs, df.count(), n_buckets, rounds, lr_num, lr_den, scale
     )
-    return df.sparkSession.createDataFrame(
-        [(lg, j, v) for (lg, j), v in sorted(w.items())],
+    return local_df(
+        df.sparkSession, [(lg, j, v) for (lg, j), v in sorted(w.items())],
         "lang string, feature_id int, weight long",
     )
 

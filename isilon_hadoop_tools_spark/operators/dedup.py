@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from isilon_hadoop_tools_spark.functions.hashing import fingerprint64, stable_hash32
 from isilon_hadoop_tools_spark.functions.text import tokens
+from isilon_hadoop_tools_spark.sources.local import local_df
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1731,8 +1732,8 @@ def lsh_plan(spark, n_hashes: int = 16, grid_steps: int = 20):
             s = i / grid_steps
             p = 1.0 - (1.0 - s**r) ** b
             rows.append((b, r, r6(s), r6(p), r6(t50)))
-    return spark.createDataFrame(
-        rows,
+    return local_df(
+        spark, rows,
         "bands int, rows_per_band int, s double, p_candidate double,"
         " t50 double",
     )

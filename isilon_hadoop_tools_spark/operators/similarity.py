@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from isilon_hadoop_tools_spark.sources.local import local_df
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -602,8 +604,8 @@ def _kmeans_assign_join(
     map-side partial aggregation. Same (vid, qv, list_id, dist)
     contract and (dist, list_id) tie-break as the literal form."""
     spark = vecs.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(lid), [int(v) for v in c]) for lid, c in cents],
+    cdf = local_df(
+        spark, [(int(lid), [int(v) for v in c]) for lid, c in cents],
         "list_id int, c array<bigint>",
     )
     dist = F.aggregate(
@@ -1118,7 +1120,8 @@ def _pq_assign(
     (dist, list_id) tie-break and map-side partial aggregation — the
     multi-subspace twin of ``_kmeans_assign_join``."""
     spark = vecs.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_df(
+        spark,
         [
             (s, lid, [int(v) for v in c])
             for (s, lid), c in sorted(books.items())
@@ -1210,8 +1213,8 @@ def pq_adc_topk(
 
 
 def _pq_adc_rank(spark, all_codes, lut_rows, topk: int) -> DataFrame:
-    lut = spark.createDataFrame(
-        lut_rows, "query_id long, subspace int, code int, pdist long"
+    lut = local_df(
+        spark, lut_rows, "query_id long, subspace int, code int, pdist long"
     )
     scored = (
         all_codes.join(F.broadcast(lut), ["subspace", "code"])
@@ -1262,8 +1265,8 @@ def label_centroid_probe(
     )
     first = df.select(vec_col).first()
     if first is None:
-        return df.sparkSession.createDataFrame(
-            [], "label INT, pred_label INT, n LONG"
+        return local_df(
+            df.sparkSession, [], "label INT, pred_label INT, n LONG"
         )
     dim = len(first[0])
     upd = (
@@ -1325,8 +1328,8 @@ def label_separation_stats(
     )
     first = df.select(vec_col).first()
     if first is None:
-        return df.sparkSession.createDataFrame(
-            [],
+        return local_df(
+            df.sparkSession, [],
             "label INT, n LONG, mean_intra_sq DOUBLE, "
             "nearest_other_label INT, inter_sq LONG",
         )
@@ -1363,7 +1366,8 @@ def label_separation_stats(
         near[lab] = best  # None when only one class exists
     spark = df.sparkSession
     cent_df = F.broadcast(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [(lab, c) for lab, c in cents], "label INT, c ARRAY<BIGINT>"
         )
     )
@@ -1384,7 +1388,8 @@ def label_separation_stats(
         )
     )
     near_df = F.broadcast(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [
                 (
                     lab,
@@ -1557,8 +1562,8 @@ def power_iteration_top_pc(
                 v = [-y for y in v]
             break
     spark = vecs.sparkSession
-    return spark.createDataFrame(
-        [(i, int(c)) for i, c in enumerate(v)], "dim INT, loading LONG"
+    return local_df(
+        spark, [(i, int(c)) for i, c in enumerate(v)], "dim INT, loading LONG"
     )
 
 
@@ -1634,8 +1639,8 @@ def ivf_pq_topk(
     vecs = quantize_vectors(df, vec_col, id_col, scale).persist()
     try:
         coarse = kmeans_train(vecs, n_lists, coarse_iters)
-        cdf = spark.createDataFrame(
-            [(int(lid), [int(v) for v in c]) for lid, c in coarse],
+        cdf = local_df(
+            spark, [(int(lid), [int(v) for v in c]) for lid, c in coarse],
             "clist int, c array<bigint>",
         )
         # residual table: (vid, clist, rv) — one broadcast join; rv
@@ -1697,8 +1702,8 @@ def ivf_pq_topk(
                             (a - b) ** 2 for a, b in zip(sl, pc)
                         )
                         lut_rows.append((qid, clist, s, code, pdist))
-            lut = spark.createDataFrame(
-                lut_rows,
+            lut = local_df(
+                spark, lut_rows,
                 "query_id long, clist int, subspace int, code int,"
                 " pdist long",
             )
@@ -1729,8 +1734,8 @@ def ivf_pq_topk(
                     .filter(F.col("arank") <= rerank_k)
                     .select("query_id", "neighbor_id")
                 )
-                qdf = spark.createDataFrame(
-                    qrows, "query_id long, qqv array<bigint>"
+                qdf = local_df(
+                    spark, qrows, "query_id long, qqv array<bigint>"
                 )
                 exact = (
                     cands.join(

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from isilon_hadoop_tools_spark.sources.local import local_df
+
 
 def salted_join(
     left: DataFrame,
@@ -477,8 +479,8 @@ def compaction_execute(
         int(files_written),
         bool(files_written == n_files_after),
     )
-    return spark.createDataFrame(
-        [row],
+    return local_df(
+        spark, [row],
         "n_rows LONG, checksum_before LONG, checksum_after LONG,"
         " checksums_match BOOLEAN, n_files_before LONG,"
         " n_files_after LONG, files_written LONG,"
@@ -584,8 +586,8 @@ def layout_write_footer_stats(
                 want == (n, mn, mx),
             )
         )
-    return spark.createDataFrame(
-        sorted(rows),
+    return local_df(
+        spark, sorted(rows),
         "zone LONG, n_rows LONG, mn LONG, mx LONG,"
         " scanned BOOLEAN, footer_ok BOOLEAN",
     )

@@ -64,6 +64,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from isilon_hadoop_tools_spark.sources.local import local_df
+
 _MANIFESTS = "_manifests"
 _POINTER = "_LATEST"
 _POINTERS = "_pointers"
@@ -824,8 +826,8 @@ def snapshot_read(
     if not m["files"]:
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(m["schema"]))
+        return local_df(
+            spark, [], StructType.fromJson(json.loads(m["schema"]))
         )
     return _read_files(spark, table / m["data_dir"], m["files"])
 
@@ -1224,8 +1226,8 @@ def snapshot_history(
                 all((data_dir / rel).is_file() for rel in m["files"]),
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_df(
+        spark, rows,
         "version LONG, n_files LONG, n_rows LONG, checksum LONG,"
         " is_latest BOOLEAN, readable BOOLEAN",
     )

@@ -46,11 +46,12 @@ class ParquetState:
     def read(self, table: str, schema: T.StructType | str | None = None) -> DataFrame:
         """Current state of ``table``; empty DataFrame if never written.
 
-        The never-written branch is an empty ``LocalRelation`` (not
-        ``createDataFrame([], …)``, whose ExistingRDD leaf has unknown
-        stats — it blocks broadcast planning and empty-relation
-        propagation for every consumer downstream). Reading a
-        never-written table requires ``schema`` for that branch.
+        The never-written branch is ``local_df(spark, [], schema)``:
+        an empty Arrow-built ``LocalRelation`` with the declared
+        schema, nullability included, whose zero-row size lets
+        Catalyst broadcast it and propagate the empty relation through
+        every consumer downstream. Reading a never-written table
+        requires ``schema`` for that branch.
         """
         if self.exists(table):
             return self.spark.read.parquet(self._path(table))

@@ -1,37 +1,38 @@
-"""Driver-literal DataFrames as JVM ``LocalRelation``s.
+"""Driver-held rows as JVM ``LocalRelation``s, shipped through Arrow.
 
-``spark.createDataFrame(rows, schema)`` over Python tuples plans as a
-``Scan ExistingRDD``: every job touching it round-trips through
-pickled partitions and Python workers — ~0.5 s of pure overhead per
-job in local mode, and a non-prunable, non-foldable leaf at scale.
 Seed catalogs are *literals* (reference ``identities.py:350-538``,
-``directories.py:115-240``), so the engine renders them as SQL
-``VALUES``, which Catalyst keeps as a ``LocalTableScan``: no Python
-workers, broadcastable for free, and constant-foldable.
+``directories.py:115-240``), and many operators end in a small
+driver-computed result: k-means centroids, PQ codebooks and LUTs,
+classifier weights, snapshot manifests, stream state rows. All of them
+become frames through :func:`local_df`, the one way the engine turns
+Python rows into a DataFrame.
+
+It packs the rows into a ``pyarrow.Table`` against the declared schema
+and hands that to ``spark.createDataFrame``, which ships the table to
+the JVM as Arrow batches and plans it as a ``LocalTableScan`` (also
+with ``spark.sql.execution.arrow.pyspark.enabled=false``). The two
+alternatives each cost more:
+
+* ``createDataFrame(list, schema)`` plans as a ``Scan ExistingRDD``:
+  every job that touches the frame round-trips pickled partitions
+  through Python workers (~0.3-0.5 s per job in local mode) behind a
+  leaf Catalyst can neither fold nor size.
+* SQL ``VALUES`` text with per-column ``CAST``s also plans as a
+  ``LocalTableScan``, but parsing and analysing the literals grows
+  with the data (about 0.5 s for 256 × 64 bigints), and it loses
+  ``createDataFrame``'s checks: it accepts ``None`` in a non-null
+  column, silently casts ``'7'`` into an INT column, and makes every
+  column of an empty frame nullable.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def _sql_literal(v: object) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, (bytes, bytearray)):
-        return "X'" + bytes(v).hex() + "'"
-    if isinstance(v, (list, tuple)):
-        return "ARRAY(" + ", ".join(_sql_literal(x) for x in v) + ")"
-    raise TypeError(f"unsupported literal type for local_df: {type(v)!r}")
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _struct(schema: T.StructType | str) -> T.StructType:
@@ -48,27 +49,26 @@ def local_df(
     rows: Iterable[Sequence[object]],
     schema: T.StructType | str,
 ) -> DataFrame:
-    """``createDataFrame`` twin that plans as a ``LocalTableScan``.
+    """``createDataFrame(rows, schema)`` that plans as a ``LocalTableScan``.
 
-    Rows are rendered as ``VALUES`` tuples and cast column-by-column to
-    the declared types, so the result schema matches
-    ``createDataFrame``'s exactly (e.g. INT stays INT, not BIGINT).
+    Each column is converted with ``pyarrow.array`` at its declared
+    Arrow type, so a value of the wrong type raises (``'7'`` in an INT
+    column) and the schema comes back exactly as declared, nullability
+    included, also for an empty frame. The table's fields are nullable;
+    ``createDataFrame`` casts it to the declared schema, which raises
+    on ``None`` in a non-null column.
     """
     struct = _struct(schema)
-    casts = ", ".join(
-        f"CAST(_c{i} AS {f.dataType.simpleString()}) AS `{f.name}`"
-        for i, f in enumerate(struct.fields)
+    rows = list(rows)
+    width = len(struct.fields)
+    if any(len(row) != width for row in rows):
+        raise ValueError(f"every row must have {width} values: {struct}")
+    columns = zip(*rows) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=field.type)
+            for col, field in zip(columns, to_arrow_schema(struct))
+        ],
+        names=struct.names,
     )
-    names = ", ".join(f"_c{i}" for i in range(len(struct.fields)))
-    tuples = [
-        "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
-    ]
-    if not tuples:
-        nulls = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
-            for f in struct.fields
-        )
-        return spark.sql(f"SELECT {nulls} WHERE FALSE")
-    return spark.sql(
-        f"SELECT {casts} FROM VALUES {', '.join(tuples)} AS _t({names})"
-    )
+    return spark.createDataFrame(table, struct)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from isilon_hadoop_tools_spark.plans.sinks import merge_create
 from isilon_hadoop_tools_spark.plans.state import ParquetState
 from isilon_hadoop_tools_spark.sources import tpch
+from isilon_hadoop_tools_spark.sources.local import local_df
 
 DEFAULT_WATERMARK = "1 day"
 
@@ -412,7 +413,8 @@ def _marker_gate(current: DataFrame, batch_id: int, schema: str):
     while horizon + 1 in sparse:
         horizon += 1
         sparse.discard(horizon)
-    return current.sparkSession.createDataFrame(
+    return local_df(
+        current.sparkSession,
         [(-2, horizon, 1)] + [(-1, b, 1) for b in sorted(sparse)],
         schema,
     )
@@ -778,7 +780,8 @@ def sprt_stream_into_state(
             # latched: record the consumed batch id, nothing else
             state.write(
                 table,
-                spark.createDataFrame(
+                local_df(
+                    spark,
                     [
                         (
                             batch_id,
@@ -845,7 +848,7 @@ def sprt_stream_into_state(
                 None,
             )
         state.write(
-            table, spark.createDataFrame([new], SPRT_STATE_SCHEMA)
+            table, local_df(spark, [new], SPRT_STATE_SCHEMA)
         )
 
     src = events.withColumn("_hit", F.col("event_type") == "purchase")

@@ -682,7 +682,7 @@ def lineitem_quantity_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     form a user writes when bands live in a table). The post-join
     aggregation takes map-side partials on the 5 band keys."""
     li = _t(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(_QTY_BANDS, "band string, lo int, hi int")
+    bands = local_df(spark, _QTY_BANDS, "band string, lo int, hi int")
     return (
         li.join(
             F.broadcast(bands),

@@ -15,6 +15,7 @@ from isilon_hadoop_tools_spark.functions.hashing import (
     stable_hash32,
     stable_hash32_sql,
 )
+from isilon_hadoop_tools_spark.sources.local import local_df
 
 from isilon_hadoop_tools_spark.suite._shared import (
     REGISTRY,
@@ -3317,7 +3318,8 @@ def events_snapshot_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").between(lo, hi))
         .count()
     )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(total), int(len(_kept)), int(pruned_n), pruned_n == full_n)],
         "n_files_total LONG, files_scanned LONG, n_rows_match LONG,"
         " certificate_ok BOOLEAN",

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from isilon_hadoop_tools_spark import suite
+from isilon_hadoop_tools_spark.sources.local import local_df
 
 from conftest import SMOKE_SF_DIR
 
@@ -607,3 +609,66 @@ def test_chi_square_band_table_reused_not_rescanned(spark):
     assert plan.count("Scan ExistingRDD (") == 2  # both consumers reuse it
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row totals crossJoin
     assert "CartesianProduct" not in plan
+
+
+_ALL_TYPES = (
+    "i int, b bigint, d double, s string, y binary, t boolean,"
+    " a array<bigint>"
+)
+_NOT_NULL = T.StructType(
+    [
+        T.StructField("k", T.IntegerType(), False),
+        T.StructField("v", T.StringType(), False),
+    ]
+)
+
+
+def _plan_node_names(df) -> list[str]:
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.getClass().getSimpleName())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+@pytest.mark.parametrize(
+    "rows, schema, rejected",
+    [
+        (
+            [
+                (1, 2**40, 1.5, "x'y\\", b"\x00\xff", True, [1, None, 3]),
+                (None,) * 7,
+                (-7, -1, -0.0, "", b"", False, []),
+            ],
+            _ALL_TYPES,
+            False,
+        ),
+        ([(1, "a"), (2, "b")], _NOT_NULL, False),
+        ([], _NOT_NULL, False),
+        ([(None, "a")], _NOT_NULL, True),
+        ([("7",)], "x int", True),
+        ([(1,)], _NOT_NULL, True),
+    ],
+    ids=["all_types", "not_null", "empty_not_null", "null_in_not_null",
+         "string_in_int", "short_row"],
+)
+def test_local_df_matches_create_dataframe(spark, rows, schema, rejected):
+    """``local_df`` has ``createDataFrame(list)``'s semantics (schema
+    exactly as declared, the same rows, the same rejections) but plans
+    as a ``LocalTableScan``."""
+    if rejected:
+        with pytest.raises((TypeError, ValueError)):
+            spark.createDataFrame(rows, schema)
+        with pytest.raises((TypeError, ValueError)):
+            local_df(spark, rows, schema).collect()
+        return
+    got = local_df(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    # the JVM schema: PySpark caches the declared struct as the Python
+    # one, so only this shows the nullability Catalyst plans with
+    assert got._jdf.schema().json() == want._jdf.schema().json()
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    nodes = _plan_node_names(got)
+    assert "LocalTableScanExec" in nodes and "RDDScanExec" not in nodes

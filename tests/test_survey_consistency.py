@@ -215,6 +215,25 @@ def test_no_module_keeps_unused_imports():
     assert not unused, f"module-level imports never referenced: {unused}"
 
 
+def test_engine_modules_build_driver_frames_through_local_df():
+    # createDataFrame over Python rows plans as a Scan ExistingRDD that
+    # round-trips Python workers on every job; sources.local.local_df
+    # ships the same rows through Arrow as a LocalTableScan.
+    import ast
+
+    pkg = REPO / "isilon_hadoop_tools_spark"
+    calls = [
+        f"{path.relative_to(REPO)}:{node.lineno}"
+        for sub in ("operators", "streaming", "suite")
+        for path in sorted((pkg / sub).rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+    assert not calls, f"createDataFrame calls, use local_df: {calls}"
+
+
 def test_survey_2_12_row_ids_unique():
     # r12 VERDICT: the §2.12 table used `L16g` for two different rows
     # (JPEG codec + audio fingerprint); the row id is how rounds refer

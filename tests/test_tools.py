@@ -1,5 +1,5 @@
-"""The measurement tools: ``tools/profile.py`` and bench.py's session
-facts."""
+"""The measurement tools: ``tools/profile.py``, the curvature flag of
+``tools/scale_probe.py`` and bench.py's session facts."""
 
 from __future__ import annotations
 
@@ -19,6 +19,11 @@ TOOLS = Path(__file__).resolve().parents[1] / "tools"
 _spec = importlib.util.spec_from_file_location("tools_profile", TOOLS / "profile.py")
 profile = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(profile)
+_spec = importlib.util.spec_from_file_location(
+    "tools_scale_probe", TOOLS / "scale_probe.py"
+)
+scale_probe = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(scale_probe)
 
 
 @pytest.mark.parametrize(
@@ -100,3 +105,35 @@ def test_tools_scripts_still_get_the_stdlib_profile_module():
     code = "import cProfile, profile, pyspark; cProfile.run('1'); print(profile.__file__)"
     out = subprocess.check_output([sys.executable, "-c", code], cwd=TOOLS, text=True)
     assert Path(out.splitlines()[-1]).parent != TOOLS
+
+
+def _stub_runner(walls: dict[int, list[float]]):
+    """A curvature runner that replays scripted walls per multiple and
+    records every call."""
+    calls: list[int] = []
+    left = {c: iter(ts) for c, ts in walls.items()}
+
+    def runner(c: int) -> float:
+        calls.append(c)
+        return next(left[c])
+
+    return runner, calls
+
+
+def test_curvature_one_slow_rep_is_remeasured_not_flagged():
+    # 0.20 s at 1x, then one 0.62 s rep at 2x (3.1x, over the 1.3·c
+    # line) among steady 0.30 s reps
+    runner, calls = _stub_runner(
+        {1: [0.2] * 5, 2: [0.62] + [0.3] * 5, 4: [0.5]}
+    )
+    curve, superlinear = scale_probe.measure_curve(runner, (1, 2, 4))
+    assert not superlinear
+    assert curve == {"1": 0.2, "2": 0.3, "4": 0.5}
+    assert calls.count(2) == 6 and calls.count(4) == 1
+
+
+def test_curvature_steady_blowup_flags():
+    runner, _ = _stub_runner({1: [0.2] * 5, 2: [0.3] * 5, 4: [2.0] * 6})
+    curve, superlinear = scale_probe.measure_curve(runner, (1, 2, 4))
+    assert superlinear
+    assert curve["4"] == 2.0

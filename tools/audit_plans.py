@@ -97,14 +97,6 @@ def _build_tier(node) -> str | None:
         return _best_tier(_kids(node))
     if cn == "LocalTableScanExec":
         return "proven"  # literal relation: compile-time constant size
-    if cn == "RDDScanExec":
-        # "Scan ExistingRDD": a driver-local createDataFrame (EM
-        # params, query batches, centroid tables). Its contents were
-        # materialized IN THE DRIVER before the plan existed, so the
-        # build side cannot grow with cluster data — the failure mode
-        # the cartesian flag hunts (a data-scaled parquet side) shows
-        # up as a file-source scan leaf, never as an ExistingRDD.
-        return "proven"
     if cn in ("GlobalLimitExec", "CollectLimitExec",
               "TakeOrderedAndProjectExec"):
         return "proven"  # bounded by the limit constant at any scale
@@ -215,14 +207,19 @@ def audit(spark, name: str, sf_dir: str) -> dict:
 
 
 # named escape hatch for deliberate BroadcastNestedLoopJoins the
-# classifier cannot clear. EMPTY as of r14: the bounded-build
-# classification (1-row aggregates, literal relations, limits,
-# observed tiny broadcasts) clears every deliberate shape in the
-# registry — including the former members (query-batch ANN
-# broadcasts, drift-gate scalar totals). Add a name here ONLY with a
-# justification comment; tests/test_full_plan_audit.py sweeps the
-# whole registry against this.
-SCALAR_BNLJ_OK: set[str] = set()
+# classifier cannot clear. The bounded-build classification (1-row
+# aggregates, literal relations, limits, observed tiny broadcasts)
+# clears every other deliberate shape in the registry. Add a name
+# here ONLY with a justification comment; tests/test_full_plan_audit.py
+# sweeps the whole registry against this.
+SCALAR_BNLJ_OK: set[str] = {
+    # hamming_recall_eval's brute-force truth pass broadcasts its
+    # checkpointed eval input (a localCheckpoint scan, whose size the
+    # plan does not carry). The operator raises past max_eval_rows
+    # (250k), and the query evaluates the doc_id < 200000 prefix of
+    # the unique doc key, so the build side is bounded at any scale.
+    "multimodal_hash_recall",
+}
 
 # OBSERVATION-only clears (ADVICE r14): a BNLJ build side whose only
 # boundedness evidence is the executed broadcast's numOutputRows at
@@ -262,6 +259,10 @@ OBSERVED_BNLJ_OK: dict[str, str] = {
     "multimodal_pair_alignment": (
         "calibration batch = filter(id < K) on the unique pair id: "
         "<= K rows at any scale"
+    ),
+    "corpus_doremi_weights": (
+        "reference loss = the rollup's grand-total row (_gid == 1) of "
+        "a checkpointed domain rollup: exactly 1 row at any scale"
     ),
 }
 
