@@ -105,24 +105,21 @@ def get_session(
         # k-means/PQ training loops; the conf trades exchange reuse
         # on cache hits (irrelevant here: caches are per-operator
         # scratch, never shared across differently-partitioned
-        # consumers) for right-sized cached stages. Env-overridable
-        # so a cluster deploy (where exchange reuse across cached
-        # consumers may matter) can flip it without a code change.
+        # consumers) for right-sized cached stages. A cluster deploy
+        # where exchange reuse across cached consumers matters passes
+        # "false" through ``extra_conf``.
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"),
+            "true",
         )
         # snapshot readers pass manifests' explicit file lists; above
         # this many paths Spark switches to a DISTRIBUTED listing job
         # with one task per path (profiled: 1200-task / 3-4 s listing
         # jobs per snapshot_read at sf0.1, twice per compaction
         # rewrite, vs milliseconds of driver-side stat calls on a
-        # local FS). Local default covers the bench's file counts;
-        # an object-store cluster deploy can lower it via env.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "4096"),
-        )
+        # local FS). This covers the bench's file counts; an
+        # object-store cluster deploy lowers it through ``extra_conf``.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

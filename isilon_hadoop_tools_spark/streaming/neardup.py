@@ -4,8 +4,9 @@ pairs and MinHash-LSH candidates over a continuously-crawled corpus.
 The production shape: each micro-batch of new documents is
 fingerprinted, matched against a persisted band index, and the
 newly-created near-dup pairs are appended — without ever re-running
-the corpus-wide band self-join. Three instances of one design, each a
-thin caller of ``_band_index_apply``:
+the corpus-wide band self-join. Two crash-safe folds carry the
+member-based appliers. The band-index fold, ``_band_index_apply``,
+has three thin callers:
 :func:`simhash_index_apply_batch` (integer fingerprints, bit-slice
 bands, hamming filter), :func:`minhash_index_apply_batch`
 (signature strings, band-key equality, agreeing-band counts) and
@@ -52,11 +53,28 @@ the stream, ``near_pairs`` equals the batch
 ``simhash_near_pairs`` over the same prefix — every qualifying pair
 (x, y) is detected when the later of x, y arrives, because by then
 the earlier one's fingerprint is in the postings index.
+
+The touched-group fold, ``_touched_apply``, carries the snapshot
+appliers whose decisions a later row can DISPLACE:
+:func:`domain_caps_apply_batch` (lowest ``cap`` ids per domain),
+:func:`url_keep_one_apply_batch` (lowest id per canonical URL) and
+:func:`compaction_apply_batch` (size-ordered bins per partition).
+Per batch it anti-joins the members, recomputes the decisions of
+the groups the batch touched from the logged rows plus the new ones,
+and swaps them into the decision snapshot. Members again land last
+(decisions, then log, then members), so a crash replays the batch.
+The suffix and paragraph appliers follow the same discipline, keyed
+by their own touched sets.
+
+Every step of both folds runs its jobs under a ``"<applier>: <step>"``
+job description, and the caller's description is restored on exit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from isilon_hadoop_tools_spark.operators.dedup import (
@@ -90,6 +108,19 @@ def _new_rows(
         eager=True
     )
     return new if new.take(1) else None
+
+
+@contextmanager
+def _job_steps(spark, label: str):
+    """Label one applier call's jobs: yields ``step(name)``, which sets
+    the thread's job description to ``"{label}: {name}"`` for the jobs
+    that follow; the caller's description is restored on any exit."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    try:
+        yield lambda name: sc.setJobDescription(f"{label}: {name}")
+    finally:
+        sc.setJobDescription(prior)
 
 
 def _hamming_within(bound):
@@ -145,8 +176,6 @@ def _band_index_apply(
     any exit."""
     (mem_t, mem_s), (post_t, post_s), (pair_t, pair_s) = tables
     spark = delta.sparkSession
-    sc = spark.sparkContext
-    prior = sc.getLocalProperty("spark.job.description")
     # width pin for the delta checkpoint AND the pair merge: without
     # it the checkpoint materializes at the anti-join's AQE-coalesced
     # width (1 partition for a micro-batch) and the band fan-out +
@@ -155,14 +184,14 @@ def _band_index_apply(
     # the merge aggregation collapses to one task the same way
     npart = max(2, shuffle_partition_count(spark))
     keys = part + [fp]
-    try:
-        sc.setJobDescription(f"{label}: new members")
+    with _job_steps(spark, label) as step:
+        step("new members")
         members = state.read(mem_t, mem_s)
         new_members = _new_rows(delta, members, part + ["id"])
         if new_members is None:
             return
         postings = state.read(post_t, post_s)
-        sc.setJobDescription(f"{label}: delta checkpoint")
+        step("delta checkpoint")
         # the keyed numbered repartition REPLACES the distinct's
         # exchange (same required distribution, AQE-exempt)
         delta_fps = (
@@ -176,7 +205,7 @@ def _band_index_apply(
             keys,
             "left_anti",
         )
-        sc.setJobDescription(f"{label}: postings checkpoint")
+        step("postings checkpoint")
         new_postings = (
             new_fps.select(*part, F.posexplode(band_arr).alias(*band_cols), fp)
             .select(*part, F.col(band_cols[0]).cast("int"), band_cols[1], fp)
@@ -230,7 +259,7 @@ def _band_index_apply(
             .filter(F.col("id_a") < F.col("id_b"))
         )
         current = state.read(pair_t, pair_s)
-        sc.setJobDescription(f"{label}: pairs merge write")
+        step("pairs merge write")
         state.write(
             pair_t,
             current.unionByName(pairs)
@@ -242,12 +271,58 @@ def _band_index_apply(
         # not an O(corpus) rewrite (swap-on-write would make total
         # write work quadratic in the stream length). Members land
         # last: they are the batch's commit point.
-        sc.setJobDescription(f"{label}: postings append")
+        step("postings append")
         state.append(post_t, new_postings)
-        sc.setJobDescription(f"{label}: members append")
+        step("members append")
         state.append(mem_t, new_members)
-    finally:
-        sc.setJobDescription(prior)
+
+
+def _touched_apply(
+    batch: DataFrame,
+    state: ParquetState,
+    label: str,
+    tables: tuple,
+    key: list,
+    group: str,
+    decide,
+) -> None:
+    """The one crash-safe touched-group fold behind the domain-cap,
+    keep-one-URL and compaction appliers (see the module docstring).
+
+    ``batch`` holds the batch's projected rows, unique on ``key``;
+    ``tables`` is the ``(name, schema)`` triple of the members, log
+    and decision tables. Decisions recompute ONLY for the ``group``
+    values present in the batch — an untouched group's rows are
+    unchanged, so its decisions are already exact: ``decide(cand)``
+    maps every logged or new row of the touched groups to their
+    decision rows, which replace the touched groups' snapshot rows.
+    Write order: decisions (swap) → log (append, anti-joined, so a
+    partial append re-adds only the missing rows) → members (append,
+    the commit point); the log read excludes the replaying keys so a
+    partial append cannot double-count a row into its group. Every
+    step's jobs carry a ``label`` description; the caller's
+    description is restored on any exit."""
+    (mem_t, mem_s), (log_t, log_s), (out_t, out_s) = tables
+    with _job_steps(batch.sparkSession, label) as step:
+        step("new members")
+        new = _new_rows(batch, state.read(mem_t, mem_s), key)
+        if new is None:
+            return  # replayed or empty batch
+        new_keys = new.select(*key)
+        log_raw = state.read(log_t, log_s)
+        old = log_raw.join(new_keys, key, "left_anti")
+        step("touched checkpoint")
+        touched = new.select(group).distinct().localCheckpoint(eager=True)
+        step("decisions swap")
+        decided = decide(old.join(touched, group, "left_semi").unionByName(new))
+        current = state.read(out_t, out_s)
+        state.write(
+            out_t, current.join(touched, group, "left_anti").unionByName(decided)
+        )
+        step("log append")
+        state.append(log_t, new.join(log_raw.select(*key), key, "left_anti"))
+        step("members append")
+        state.append(mem_t, new_keys)
 
 
 def simhash_index_apply_batch(
@@ -747,57 +822,45 @@ def domain_caps_apply_batch(
     the rank window).
 
     State: ``dc_members`` (replay no-op anti-join), ``dc_docs``
-    (id, domain), ``dc_kept`` (the decision snapshot). Write order:
-    kept (swap) → docs (append, anti-joined) → members (append, the
-    commit point); reads exclude the replaying ids so a partial
-    append cannot double-count a document into its domain.
+    (id, domain), ``dc_kept`` (the decision snapshot), folded by
+    :func:`_touched_apply` (write order and replay discipline).
     """
     from isilon_hadoop_tools_spark.operators.urls import (
         host_expr,
         registrable_domain_expr,
     )
 
-    batch = docs.select(
-        F.col(id_col).alias("id"),
-        registrable_domain_expr(host_expr(url_col)).alias("domain"),
-    )
-    new_docs = _new_rows(batch, state.read("dc_members", DC_MEMBERS_SCHEMA), ["id"])
-    if new_docs is None:
-        return  # replayed or empty batch
-    new_ids = new_docs.select("id")
-    docs_raw = state.read("dc_docs", DC_DOCS_SCHEMA)
-    old_docs = docs_raw.join(new_ids, "id", "left_anti")
-    touched = new_docs.select("domain").distinct().localCheckpoint(
-        eager=True
-    )
-    cand = (
-        old_docs.join(touched, "domain", "left_semi")
-        .unionByName(new_docs)
-        .localCheckpoint(eager=False)
-    )
-    counts = cand.groupBy("domain").agg(F.count(F.lit(1)).alias("_n"))
-    heavy = counts.filter(F.col("_n") > cap).select("domain")
-    light = cand.join(heavy, "domain", "left_anti").select(
-        "id", "domain", F.lit(True).alias("kept")
-    )
-    from pyspark.sql import Window as _W
+    def decide(cand: DataFrame) -> DataFrame:
+        cand = cand.localCheckpoint(eager=False)
+        counts = cand.groupBy("domain").agg(F.count(F.lit(1)).alias("_n"))
+        heavy = counts.filter(F.col("_n") > cap).select("domain")
+        light = cand.join(heavy, "domain", "left_anti").select(
+            "id", "domain", F.lit(True).alias("kept")
+        )
+        w = Window.partitionBy("domain").orderBy("id")
+        ranked = (
+            cand.join(heavy, "domain", "left_semi")
+            .withColumn("_rk", F.row_number().over(w))
+            .select("id", "domain", (F.col("_rk") <= cap).alias("kept"))
+        )
+        return light.unionByName(ranked)
 
-    w = _W.partitionBy("domain").orderBy("id")
-    ranked = (
-        cand.join(heavy, "domain", "left_semi")
-        .withColumn("_rk", F.row_number().over(w))
-        .select("id", "domain", (F.col("_rk") <= cap).alias("kept"))
+    _touched_apply(
+        docs.select(
+            F.col(id_col).alias("id"),
+            registrable_domain_expr(host_expr(url_col)).alias("domain"),
+        ),
+        state,
+        "domain_caps",
+        (
+            ("dc_members", DC_MEMBERS_SCHEMA),
+            ("dc_docs", DC_DOCS_SCHEMA),
+            ("dc_kept", DC_KEPT_SCHEMA),
+        ),
+        key=["id"],
+        group="domain",
+        decide=decide,
     )
-    new_kept = light.unionByName(ranked)
-    current = state.read("dc_kept", DC_KEPT_SCHEMA)
-    merged = current.join(touched, "domain", "left_anti").unionByName(
-        new_kept
-    )
-    state.write("dc_kept", merged)
-    state.append(
-        "dc_docs", new_docs.join(docs_raw.select("id"), "id", "left_anti")
-    )
-    state.append("dc_members", new_ids)
 
 
 def domain_caps_stream_into_state(
@@ -841,46 +904,38 @@ def url_keep_one_apply_batch(
     touched canonical groups (groups present in the batch); untouched
     groups' snapshots are already exact.
 
-    State: ``uk_members`` / ``uk_docs`` / ``uk_kept``; write order
-    kept (swap) → docs (append, anti-joined) → members (commit
-    point); reads exclude the replaying ids.
+    State: ``uk_members`` / ``uk_docs`` / ``uk_kept``, folded by
+    :func:`_touched_apply`.
     """
     from isilon_hadoop_tools_spark.operators.urls import canonical_url_expr
 
-    batch = docs.select(
-        F.col(id_col).alias("id"),
-        canonical_url_expr(url_col).alias("canon_url"),
+    def decide(cand: DataFrame) -> DataFrame:
+        g = cand.groupBy("canon_url").agg(
+            F.min("id").alias("_keep_id"), F.count(F.lit(1)).alias("n_dups")
+        )
+        return cand.join(g, "canon_url").select(
+            "id",
+            "canon_url",
+            "n_dups",
+            (F.col("id") == F.col("_keep_id")).alias("kept"),
+        )
+
+    _touched_apply(
+        docs.select(
+            F.col(id_col).alias("id"),
+            canonical_url_expr(url_col).alias("canon_url"),
+        ),
+        state,
+        "url_keep_one",
+        (
+            ("uk_members", UK_MEMBERS_SCHEMA),
+            ("uk_docs", UK_DOCS_SCHEMA),
+            ("uk_kept", UK_KEPT_SCHEMA),
+        ),
+        key=["id"],
+        group="canon_url",
+        decide=decide,
     )
-    new_docs = _new_rows(batch, state.read("uk_members", UK_MEMBERS_SCHEMA), ["id"])
-    if new_docs is None:
-        return  # replayed or empty batch
-    new_ids = new_docs.select("id")
-    docs_raw = state.read("uk_docs", UK_DOCS_SCHEMA)
-    old_docs = docs_raw.join(new_ids, "id", "left_anti")
-    touched = new_docs.select("canon_url").distinct().localCheckpoint(
-        eager=True
-    )
-    cand = old_docs.join(touched, "canon_url", "left_semi").unionByName(
-        new_docs
-    )
-    g = cand.groupBy("canon_url").agg(
-        F.min("id").alias("_keep_id"), F.count(F.lit(1)).alias("n_dups")
-    )
-    new_kept = cand.join(g, "canon_url").select(
-        "id",
-        "canon_url",
-        "n_dups",
-        (F.col("id") == F.col("_keep_id")).alias("kept"),
-    )
-    current = state.read("uk_kept", UK_KEPT_SCHEMA)
-    merged = current.join(touched, "canon_url", "left_anti").unionByName(
-        new_kept
-    )
-    state.write("uk_kept", merged)
-    state.append(
-        "uk_docs", new_docs.join(docs_raw.select("id"), "id", "left_anti")
-    )
-    state.append("uk_members", new_ids)
 
 
 def url_keep_one_stream_into_state(
@@ -1073,44 +1128,30 @@ def compaction_apply_batch(
     key is a REPLAY, not an update — the members anti-join no-ops it.
 
     State: ``cp_members`` (replay no-op), ``cp_files`` (the
-    accumulated listing), ``cp_plan`` (the decision snapshot). Write
-    order: plan (swap) → files (append, anti-joined) → members
-    (append, the commit point); reads exclude the replaying keys so
-    a partial append cannot double-count a file into its partition.
+    accumulated listing), ``cp_plan`` (the decision snapshot), folded
+    by :func:`_touched_apply`.
     """
     from isilon_hadoop_tools_spark.operators.skew import compaction_plan
 
-    batch = files.select(
-        F.col(partition_col).cast("string").alias("partition"),
-        F.col(file_col).cast("long").alias("file"),
-        F.col(size_col).cast("long").alias("size_bytes"),
+    _touched_apply(
+        files.select(
+            F.col(partition_col).cast("string").alias("partition"),
+            F.col(file_col).cast("long").alias("file"),
+            F.col(size_col).cast("long").alias("size_bytes"),
+        ),
+        state,
+        "compaction",
+        (
+            ("cp_members", CP_MEMBERS_SCHEMA),
+            ("cp_files", CP_FILES_SCHEMA),
+            ("cp_plan", CP_PLAN_SCHEMA),
+        ),
+        key=["partition", "file"],
+        group="partition",
+        decide=lambda cand: compaction_plan(
+            cand, "partition", "file", "size_bytes", target_bytes
+        ),
     )
-    key = ["partition", "file"]
-    new_files = _new_rows(batch, state.read("cp_members", CP_MEMBERS_SCHEMA), key)
-    if new_files is None:
-        return  # replayed or empty batch
-    files_raw = state.read("cp_files", CP_FILES_SCHEMA)
-    old_files = files_raw.join(new_files.select(*key), key, "left_anti")
-    touched = new_files.select("partition").distinct().localCheckpoint(
-        eager=True
-    )
-    cand = (
-        old_files.join(touched, "partition", "left_semi")
-        .unionByName(new_files)
-    )
-    plan = compaction_plan(
-        cand, "partition", "file", "size_bytes", target_bytes
-    )
-    current = state.read("cp_plan", CP_PLAN_SCHEMA)
-    merged = current.join(touched, "partition", "left_anti").unionByName(
-        plan
-    )
-    state.write("cp_plan", merged)
-    state.append(
-        "cp_files",
-        new_files.join(files_raw.select(*key), key, "left_anti"),
-    )
-    state.append("cp_members", new_files.select(*key))
 
 
 def compaction_stream_into_state(

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import re as _re
+import shutil
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Optional
@@ -192,13 +193,49 @@ _SCRATCH = str(Path(__file__).resolve().parents[2] / ".scratch")
 
 
 def _fresh_state(spark: SparkSession, name: str):
-    import shutil
-
     from isilon_hadoop_tools_spark.plans.state import ParquetState
 
     root = f"{_SCRATCH}/{name}"
     shutil.rmtree(root, ignore_errors=True)
     return ParquetState(spark, root)
+
+
+def _sliced_stream(
+    spark: SparkSession,
+    df: DataFrame,
+    name: str,
+    sf_dir: str,
+    key: str = "doc_id",
+    residues: tuple = (0, 1, 2),
+) -> DataFrame:
+    """``df`` as a file stream of one micro-batch per residue: batch
+    ``n`` is the single-file slice ``pmod(key, 3) == residues[n]``,
+    written as ``b{n}.parquet`` under ``_SCRATCH/<name>_src_<tag>``
+    with its mtime in batch order, and the stream reads one file per
+    trigger — so a registered ``*_index_stream`` query folds its input
+    in three batches, in a fixed order."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    stream_dir = f"{_SCRATCH}/{name}_src_{tag}"
+    shutil.rmtree(stream_dir, ignore_errors=True)
+    os.makedirs(stream_dir)
+    for n, residue in enumerate(residues):
+        tmp = f"{stream_dir}.slice{n}"
+        df.filter(F.pmod(F.col(key), F.lit(3)) == residue).coalesce(
+            1
+        ).write.mode("overwrite").parquet(tmp)
+        part = next(
+            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
+        )
+        dst = os.path.join(stream_dir, f"b{n}.parquet")
+        os.rename(os.path.join(tmp, part), dst)
+        os.utime(dst, (1_700_000_000 + n, 1_700_000_000 + n))
+        shutil.rmtree(tmp)
+    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{stream_dir}/b*.parquet")
+    )
 
 
 # Pre-existing cluster state: one group and one user already created

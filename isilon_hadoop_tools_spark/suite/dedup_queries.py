@@ -5,8 +5,6 @@ centrally by the package __init__ via _CANONICAL_ORDER."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,12 +15,12 @@ from isilon_hadoop_tools_spark.suite._shared import (
     _COS_DUP_THRESHOLD,
     _MINHASH_SIGS_SQL,
     _NGRAM_MAX_DF,
-    _SCRATCH,
     _SHINGLE_SQL,
     _SIMHASH_SQL,
     _cos_dup_oracle,
     _fresh_state,
     _semantic_dedup_oracle,
+    _sliced_stream,
     _t,
     query,
 )
@@ -342,8 +340,8 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup maintenance (§2.9 x L6): the documents
-    table arrives as THREE micro-batches (doc_id mod 3 slices,
-    maxFilesPerTrigger=1); each batch is fingerprinted, anti-joined
+    table arrives as THREE micro-batches (doc_id mod 3 slices, one
+    file per trigger); each batch is fingerprinted, anti-joined
     against the persisted members, band-matched against the
     distinct-fingerprint postings index, and the newly-created pairs
     merge into state — never a corpus-wide self-join. No checkpoint:
@@ -353,35 +351,11 @@ def simhash_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch ``simhash_near_pairs`` answer — the oracle brute-forces
     all pairs at hamming <= 3, so one missed or phantom incremental
     pair hash-fails."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/simhash_index_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for i in range(3):
-        tmp = f"{stream_dir}.slice{i}"
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp)
+    stream = _sliced_stream(spark, docs, "simhash_index_stream", sf_dir)
     state = _fresh_state(spark, "simhash_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
-    )
     streaming.simhash_stream_into_state(
         stream, state, text_col="text", id_col="doc_id"
     )
@@ -603,35 +577,11 @@ def minhash_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must hash-match the batch LSH candidate
     answer — the same oracle as ``dedup_minhash_lsh_candidates``, so
     one missed cross-batch collision or wrong n_bands fails."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/minhash_index_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for i in range(3):
-        tmp = f"{stream_dir}.slice{i}"
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp)
+    stream = _sliced_stream(spark, docs, "minhash_index_stream", sf_dir)
     state = _fresh_state(spark, "minhash_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
-    )
     streaming.minhash_stream_into_state(
         stream, state, text_col="text", id_col="doc_id",
         num_hashes=8, bands=4,

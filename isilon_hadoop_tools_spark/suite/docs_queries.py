@@ -5,8 +5,6 @@ centrally by the package __init__ via _CANONICAL_ORDER."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,7 +30,6 @@ from isilon_hadoop_tools_spark.suite._shared import (
     _MG_K,
     _MINHASH_SIGS_SQL,
     _REPETITION_SQL,
-    _SCRATCH,
     _SHINGLE_SQL,
     _STOPWORDS,
     _STOPWORDS_SQL,
@@ -43,6 +40,7 @@ from isilon_hadoop_tools_spark.suite._shared import (
     _lang_score_sql,
     _pagerank_oracle,
     _quality_oracle,
+    _sliced_stream,
     _t,
     _unigram_lm_oracle,
     _wordpiece_oracle,
@@ -2830,9 +2828,6 @@ def paragraph_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-doc
     snapshot must hash-match the batch `corpus_paragraph_dedup`
     oracle on the same corpus."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
 
     i = F.col("doc_id")
@@ -2845,31 +2840,12 @@ def paragraph_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("unique tail "), i.cast("string"),
         ).alias("text"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/paragraph_index_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for b in range(3):
-        # batch b carries doc_id % 3 == 2 - b: later batches bring
-        # LOWER residues, so cross-batch displacement happens
-        tmp = f"{stream_dir}.slice{b}"
-        fx.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2 - b).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{b}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))
-        shutil.rmtree(tmp)
-    state = _fresh_state(spark, "paragraph_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
+    # later batches bring LOWER residues, so cross-batch displacement
+    # happens
+    stream = _sliced_stream(
+        spark, fx, "paragraph_index_stream", sf_dir, residues=(2, 1, 0)
     )
+    state = _fresh_state(spark, "paragraph_index_stream")
     streaming.paragraph_stream_into_state(
         stream, state, text_col="text", id_col="doc_id"
     )
@@ -2891,35 +2867,11 @@ def suffix_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     `doc_suffix_dup_spans` brute-force oracle on the same corpus —
     one missed cross-batch duplicate or a stale untouched-doc span
     fails the value hash."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/suffix_index_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for i in range(3):
-        tmp = f"{stream_dir}.slice{i}"
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp)
+    stream = _sliced_stream(spark, docs, "suffix_index_stream", sf_dir)
     state = _fresh_state(spark, "suffix_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
-    )
     streaming.suffix_stream_into_state(
         stream, state, text_col="text", id_col="doc_id",
         min_len=_DUP_SPAN_N,
@@ -3218,37 +3170,13 @@ def domain_caps_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture arrives as three micro-batches keyed doc_id % 3 — so ids
     arrive OUT of id order and later batches displace previously-kept
     docs — decisions recompute only for touched domains, and the
-    drained-twice decision snapshot must hash-match the batch cap
+    decision snapshot after one drain must hash-match the batch cap
     semantics (lowest 20 ids per domain) over the whole corpus."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
 
     urls = _url_fixture(_t(spark, sf_dir, "documents"))
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/domain_caps_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for i in range(3):
-        tmp = f"{stream_dir}.slice{i}"
-        urls.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp)
+    stream = _sliced_stream(spark, urls, "domain_caps_stream", sf_dir)
     state = _fresh_state(spark, "domain_caps_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
-    )
     streaming.domain_caps_stream_into_state(
         stream, state, cap=20, url_col="url", id_col="doc_id"
     )
@@ -3276,37 +3204,13 @@ def url_keep_one_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup-fixture URLs arrive as three micro-batches keyed
     doc_id % 3 (out of id order — later batches displace previous
     group representatives and grow n_dups); decisions recompute only
-    for touched canonical groups, and the drained-twice snapshot
+    for touched canonical groups, and the snapshot after one drain
     must hash-match the batch keep-one oracle."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
 
     urls = _url_dedup_fixture(_t(spark, sf_dir, "documents"))
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/url_keep_one_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for i in range(3):
-        tmp = f"{stream_dir}.slice{i}"
-        urls.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp)
+    stream = _sliced_stream(spark, urls, "url_keep_one_stream", sf_dir)
     state = _fresh_state(spark, "url_keep_one_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
-    )
     streaming.url_keep_one_stream_into_state(
         stream, state, url_col="url", id_col="doc_id"
     )

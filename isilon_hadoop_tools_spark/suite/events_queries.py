@@ -42,6 +42,7 @@ from isilon_hadoop_tools_spark.suite._shared import (
     _fresh_state,
     _hll_overlap_oracle,
     _pboot_oracle,
+    _sliced_stream,
     _t,
     _hilbert_chain,
     _hilbert_stats_sql,
@@ -749,11 +750,8 @@ def compaction_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives as three micro-batches keyed file_no % 3 in DESCENDING
     residue order — every partition is touched repeatedly and each
     later batch RESORTS it (size-desc order changes), displacing the
-    previous bin assignments — and the drained-twice plan snapshot
+    previous bin assignments — and the plan snapshot after one drain
     must hash-match the batch planner over the whole listing."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import streaming
     from isilon_hadoop_tools_spark.streaming.neardup import CP_PLAN_SCHEMA
 
@@ -766,29 +764,10 @@ def compaction_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)) * 1024 + F.sum(F.length("event_type"))
         ).alias("size_bytes")
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/compaction_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for n, i in enumerate((2, 1, 0)):
-        tmp = f"{stream_dir}.slice{i}"
-        files.filter(F.pmod(F.col("file"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{n}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + n, 1_700_000_000 + n))
-        shutil.rmtree(tmp)
-    state = _fresh_state(spark, "compaction_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
+    stream = _sliced_stream(
+        spark, files, "compaction_stream", sf_dir, key="file", residues=(2, 1, 0)
     )
+    state = _fresh_state(spark, "compaction_index_stream")
     streaming.compaction_stream_into_state(
         stream, state, target_bytes=65536
     )

@@ -5,8 +5,6 @@ centrally by the package __init__ via _CANONICAL_ORDER."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -16,7 +14,6 @@ from isilon_hadoop_tools_spark.suite._shared import (
     REGISTRY,
     _PAYLOAD_SQL,
     _PPM_TARGET,
-    _SCRATCH,
     _audio_near_dups_oracle,
     _bmp_payload_df,
     _bmp_payload_from,
@@ -28,6 +25,7 @@ from isilon_hadoop_tools_spark.suite._shared import (
     _payload_df,
     _png_payload_df,
     _ppm_payload_df,
+    _sliced_stream,
     _t,
     _unified_near_dups_oracle,
     _wav_long_payload_df,
@@ -1036,29 +1034,11 @@ def multimodal_unified_index_stream(
     final pair state must
     equal the union of the two batch per-modality answers — composed
     from their registered oracle strings."""
-    import os
-    import shutil
-
     from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark import streaming
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = f"{_SCRATCH}/unified_index_stream_src_{tag}"
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    os.makedirs(stream_dir)
-    for i in range(3):
-        tmp = f"{stream_dir}.slice{i}"
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.startswith("part-")
-        )
-        dst = os.path.join(stream_dir, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp)
+    stream = _sliced_stream(spark, docs, "unified_index_stream", sf_dir)
 
     def fingerprint(batch: DataFrame) -> DataFrame:
         text = dedup.simhash(batch, "text", "doc_id", bits=32).select(
@@ -1079,12 +1059,6 @@ def multimodal_unified_index_stream(
 
     params = {"text": (32, 3, 4), "image": (36, 4, 6)}
     state = _fresh_state(spark, "multimodal_unified_index_stream")
-    schema = spark.read.parquet(f"{stream_dir}/b0.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/b*.parquet")
-    )
     streaming.tagged_stream_into_state(
         stream, state, params, fingerprint
     )

@@ -13,15 +13,40 @@ from pyspark.sql import functions as F
 
 from conftest import file_stream, write_batch
 from isilon_hadoop_tools_spark.operators import dedup
+from isilon_hadoop_tools_spark.operators.corpus import (
+    _suffix_grams,
+    paragraph_dedup,
+    suffix_dup_spans,
+)
+from isilon_hadoop_tools_spark.operators.skew import compaction_plan
+from isilon_hadoop_tools_spark.operators.urls import (
+    canonical_url_expr,
+    domain_caps,
+    host_expr,
+    registrable_domain_expr,
+    url_keep_one,
+)
 from isilon_hadoop_tools_spark.plans.state import ParquetState
 from isilon_hadoop_tools_spark.streaming.neardup import (
+    CP_FILES_SCHEMA,
+    CP_PLAN_SCHEMA,
+    DC_KEPT_SCHEMA,
     PAIRS_SCHEMA,
+    PP_KEPT_SCHEMA,
+    SFX_SPANS_SCHEMA,
     SIG_PAIRS_SCHEMA,
+    UK_KEPT_SCHEMA,
+    compaction_apply_batch,
+    domain_caps_apply_batch,
     minhash_index_apply_batch,
     minhash_stream_into_state,
+    paragraph_index_apply_batch,
     simhash_index_apply_batch,
     simhash_stream_into_state,
+    suffix_index_apply_batch,
+    suffix_stream_into_state,
     tagged_index_apply_batch,
+    url_keep_one_apply_batch,
 )
 
 DOCS_SCHEMA = "doc_id LONG, text STRING"
@@ -114,73 +139,124 @@ def _lsh_partial_postings(first):
     )
 
 
-class _BandIndex(NamedTuple):
-    """One band-index applier under the shared contract below."""
+class _Applier(NamedTuple):
+    """One member-based applier under the shared contract below. The
+    band indexes fill the stream/postings fields, the touched-set
+    snapshot appliers the logs and crash fields."""
 
+    batches: list  # the micro-batches, rows of ``schema``
+    schema: str
     apply: Callable  # (batch, state) -> None
-    stream: Callable  # (stream, state, checkpoint) -> None
-    pairs: Callable  # state -> {(id_a, id_b): score}
-    truth: Callable  # (spark, rows) -> the batch answer over rows
-    postings: str
-    partial_postings: Callable  # first batch -> postings minus band 0
-    exact_dup: int  # the score of an exact-duplicate pair
+    read: Callable  # state -> {key: decision} from the answer table
+    answer: Callable  # (spark, rows) -> the batch answer over rows
+    members: str
+    logs: tuple = ()  # (table, key columns): appended logs, unique on key
+    crash: Callable = None  # (spark, state, seen) -> last batch's partial writes
+    stream: Callable = None  # (stream, state, checkpoint) -> None
+    postings: str = None
+    partial_postings: Callable = None  # first batch -> postings minus band 0
+    exact_dup: int = None  # the score of an exact-duplicate pair
 
 
-SIMHASH = _BandIndex(
+SIMHASH = _Applier(
+    batches=BATCHES,
+    schema=DOCS_SCHEMA,
     apply=lambda batch, state: simhash_index_apply_batch(batch, state),
     stream=lambda stream, state, ckpt: simhash_stream_into_state(
         stream, state, text_col="text", id_col="doc_id", checkpoint=ckpt
     ),
-    pairs=_pairs,
-    truth=_simhash_truth,
+    read=_pairs,
+    answer=_simhash_truth,
+    members="fp_members",
     postings="band_postings",
     partial_postings=_simhash_partial_postings,
     exact_dup=0,
 )
-MINHASH = _BandIndex(
+MINHASH = _Applier(
+    batches=BATCHES,
+    schema=DOCS_SCHEMA,
     apply=lambda batch, state: minhash_index_apply_batch(
         batch, state, num_hashes=8, bands=4
     ),
     stream=lambda stream, state, ckpt: minhash_stream_into_state(
         stream, state, num_hashes=8, bands=4, checkpoint=ckpt
     ),
-    pairs=_lsh_pairs,
-    truth=_lsh_truth,
+    read=_lsh_pairs,
+    answer=_lsh_truth,
+    members="sig_members",
     postings="sig_postings",
     partial_postings=_lsh_partial_postings,
     exact_dup=4,  # exact dups agree on every band
 )
-ALL_ROWS = [r for b in BATCHES for r in b]
 
 
-def _fold_every_prefix(spark, tmp_path, idx: _BandIndex):
+# The contract every member-based applier keeps (the band indexes
+# above, the touched-set snapshot appliers further down): ``case.batches``
+# folded one by one equal the batch answer at every prefix, a replay
+# is a no-op, and the members and log tables hold every row once.
+
+
+def _apply_all(spark, state, case, batches):
+    for rows in batches:
+        case.apply(spark.createDataFrame(rows, case.schema), state)
+
+
+def _all_rows(case):
+    return [r for b in case.batches for r in b]
+
+
+def _assert_folded_once(state, case, rows):
+    assert state.read(case.members).count() == len(rows)
+    for table, key in case.logs:
+        log = state.read(table)
+        assert log.count() == log.select(*key).distinct().count()
+
+
+def _fold_every_prefix(spark, tmp_path, case):
     # fold the batches in one by one as plain DataFrames: after each
-    # fold the pair state equals the batch answer over the prefix
+    # fold the state equals the batch answer over the prefix
     state = ParquetState(spark, str(tmp_path / "state"))
     seen = []
-    for rows in BATCHES:
+    for rows in case.batches:
         seen.extend(rows)
-        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
-        assert idx.pairs(state) == idx.truth(spark, seen)
-    got = idx.pairs(state)
-    # cross-batch exact dups must be present with the exact-dup score
-    assert got[(1, 4)] == got[(1, 6)] == got[(4, 6)] == idx.exact_dup
+        case.apply(spark.createDataFrame(rows, case.schema), state)
+        assert case.read(state) == case.answer(spark, seen)
+    return state
 
 
-def _replay_is_noop(spark, tmp_path, idx: _BandIndex):
-    # replay every batch after folding them all (an uncheckpointed
-    # second drain or a crash-recovery re-delivery): the state must
-    # not change
+def _replay_is_noop(spark, tmp_path, case, state=None):
+    # replay every batch onto a state that already holds them all (an
+    # uncheckpointed second drain or a crash-recovery re-delivery): the
+    # state must not change after any one replayed batch
+    if state is None:
+        state = ParquetState(spark, str(tmp_path / "state"))
+        _apply_all(spark, state, case, case.batches)
+    before = case.read(state)
+    for rows in case.batches:
+        case.apply(spark.createDataFrame(rows, case.schema), state)
+        assert case.read(state) == before
+    rows = _all_rows(case)
+    assert before == case.answer(spark, rows)
+    _assert_folded_once(state, case, rows)
+    return state
+
+
+def _partial_append_replays_clean(spark, tmp_path, case):
+    # crash simulation: the last batch's attempt died after some of its
+    # writes landed (``case.crash`` writes them) and before the members
+    # append committed it; the replay must not double-count the
+    # partially-appended rows and must converge to the batch answer
     state = ParquetState(spark, str(tmp_path / "state"))
-    for rows in BATCHES:
-        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
-    before = idx.pairs(state)
-    for rows in BATCHES:
-        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
-    assert idx.pairs(state) == before == idx.truth(spark, ALL_ROWS)
+    _apply_all(spark, state, case, case.batches[:-1])
+    rows = _all_rows(case)
+    case.crash(spark, state, rows)
+    _apply_all(spark, state, case, case.batches[-1:])
+    assert case.read(state) == case.answer(spark, rows)
+    _assert_folded_once(state, case, rows)
+    return state
 
 
-def _drain_restarts(spark, tmp_path, idx: _BandIndex):
+def _drain_restarts(spark, tmp_path, idx: _Applier):
     # staged reveal across three checkpointed restarts, then an idle
     # restart, then a full uncheckpointed replay: every stage of the
     # recovery story converges to the batch answer
@@ -192,18 +268,18 @@ def _drain_restarts(spark, tmp_path, idx: _BandIndex):
     def drain(ck):
         idx.stream(file_stream(spark, DOCS_SCHEMA, in_dir), state, ck)
 
-    for stage, rows in enumerate(BATCHES):
+    for stage, rows in enumerate(idx.batches):
         _write_doc_batch(in_dir, f"b{stage}.parquet", rows)
         drain(ckpt)
-    truth = idx.truth(spark, ALL_ROWS)
-    assert idx.pairs(state) == truth
+    truth = idx.answer(spark, _all_rows(idx))
+    assert idx.read(state) == truth
     drain(ckpt)  # idle restart: no new files, no state change
-    assert idx.pairs(state) == truth
+    assert idx.read(state) == truth
     drain(None)  # uncheckpointed replay: the anti-join makes it a no-op
-    assert idx.pairs(state) == truth
+    assert idx.read(state) == truth
 
 
-def _partial_posting_append(spark, tmp_path, idx: _BandIndex):
+def _partial_posting_append(spark, tmp_path, idx: _Applier):
     # simulate a crash mid-postings-append: bands 1..3 of the first
     # batch's fingerprints landed but band 0 did not — the replay
     # re-adds ALL bands (the anti-join keys on band 0), leaving
@@ -211,17 +287,22 @@ def _partial_posting_append(spark, tmp_path, idx: _BandIndex):
     # still equal the batch answer (candidates count DISTINCT
     # fingerprint pairs / bands)
     state = ParquetState(spark, str(tmp_path / "state"))
-    first = spark.createDataFrame(BATCHES[0], DOCS_SCHEMA)
+    first = spark.createDataFrame(idx.batches[0], idx.schema)
     state.append(idx.postings, idx.partial_postings(first))
-    for rows in BATCHES:
-        idx.apply(spark.createDataFrame(rows, DOCS_SCHEMA), state)
-    assert idx.pairs(state) == idx.truth(spark, ALL_ROWS)
+    _apply_all(spark, state, idx, idx.batches)
+    assert idx.read(state) == idx.answer(spark, _all_rows(idx))
     posts = state.read(idx.postings)
     assert posts.distinct().count() < posts.count()
 
 
+def _assert_exact_dups(state, idx: _Applier):
+    # cross-batch exact dups must be present with the exact-dup score
+    got = idx.read(state)
+    assert got[(1, 4)] == got[(1, 6)] == got[(4, 6)] == idx.exact_dup
+
+
 def test_apply_batch_incremental_equals_batch(spark, tmp_path):
-    _fold_every_prefix(spark, tmp_path, SIMHASH)
+    _assert_exact_dups(_fold_every_prefix(spark, tmp_path, SIMHASH), SIMHASH)
 
 
 def test_apply_batch_replay_is_noop(spark, tmp_path):
@@ -229,7 +310,7 @@ def test_apply_batch_replay_is_noop(spark, tmp_path):
 
 
 def test_minhash_apply_batch_incremental_equals_batch(spark, tmp_path):
-    _fold_every_prefix(spark, tmp_path, MINHASH)
+    _assert_exact_dups(_fold_every_prefix(spark, tmp_path, MINHASH), MINHASH)
 
 
 def test_minhash_apply_batch_replay_is_noop(spark, tmp_path):
@@ -254,16 +335,23 @@ def test_minhash_partial_posting_append_does_not_inflate_bands(
     _partial_posting_append(spark, tmp_path, MINHASH)
 
 
-@pytest.mark.parametrize("applier", ["simhash", "minhash", "tagged"])
+@pytest.mark.parametrize(
+    "applier",
+    ["simhash", "minhash", "tagged", "domain_caps", "url_keep_one", "compaction"],
+)
 def test_band_index_restores_job_description_on_error(
     spark, tmp_path, monkeypatch, applier
 ):
-    # a write failing mid-batch must not leak the applier's step label
-    # onto the caller's later jobs
-    docs = spark.createDataFrame(BATCHES[0], DOCS_SCHEMA)
-    call, postings = {
-        "simhash": (lambda st: SIMHASH.apply(docs, st), SIMHASH.postings),
-        "minhash": (lambda st: MINHASH.apply(docs, st), MINHASH.postings),
+    # a write failing mid-batch runs under the applier's step label and
+    # must not leak it onto the caller's later jobs
+    def first_batch(case):
+        return lambda st: case.apply(
+            spark.createDataFrame(case.batches[0], case.schema), st
+        )
+
+    call, failing, label = {
+        "simhash": (first_batch(SIMHASH), SIMHASH.postings, "simhash_index"),
+        "minhash": (first_batch(MINHASH), MINHASH.postings, "minhash_index"),
         "tagged": (
             lambda st: tagged_index_apply_batch(
                 spark.createDataFrame(
@@ -274,22 +362,29 @@ def test_band_index_restores_job_description_on_error(
                 {"t": (12, 2, 4)},
             ),
             "tband_postings",
+            "tagged_index",
         ),
+        "domain_caps": (first_batch(DOMAIN_CAPS), "dc_docs", "domain_caps"),
+        "url_keep_one": (first_batch(URL_KEEP_ONE), "uk_docs", "url_keep_one"),
+        "compaction": (first_batch(COMPACTION), "cp_files", "compaction"),
     }[applier]
     append = ParquetState.append
+    sc = spark.sparkContext
+    seen = []
 
     def failing_append(self, table, df):
-        if table == postings:
+        if table == failing:
+            seen.append(sc.getLocalProperty("spark.job.description"))
             raise RuntimeError("injected append failure")
         return append(self, table, df)
 
     monkeypatch.setattr(ParquetState, "append", failing_append)
-    sc = spark.sparkContext
     sc.setJobDescription("caller label")
     try:
         with pytest.raises(RuntimeError, match="injected append failure"):
             call(ParquetState(spark, str(tmp_path / "state")))
         assert sc.getLocalProperty("spark.job.description") == "caller label"
+        assert seen[0].startswith(f"{label}: ")
     finally:
         sc.setJobDescription(None)
 
@@ -524,29 +619,54 @@ _SFX_BATCHES = [
     [(3, "q1 q2 q3 q4 q5 q6 q7"), (7, "a1 a2 a3 a4 a5 a6 k1 k2")],
     [(4, _SFX_A10 + " z1 z2"), (5, "m1 m2 m3 m4 m5 n1")],
 ]
+_URL_SCHEMA = "doc_id LONG, url STRING"
 
 
-def _sfx_batch_answer(spark, rows):
-    from isilon_hadoop_tools_spark.operators.corpus import suffix_dup_spans
-
-    df = spark.createDataFrame(rows, DOCS_SCHEMA)
+def _by_key(df, key, cols):
+    """``{key: (cols...)}`` over ``df``'s rows; a one-column key maps by
+    its bare value."""
     return {
-        (r["id"], r["start_tok"], r["end_tok"]):
-            (r["span_len"], r["max_dup_len"], r["n_positions"])
-        for r in suffix_dup_spans(
-            df, "text", "doc_id", min_len=4
-        ).collect()
+        (r[key[0]] if len(key) == 1 else tuple(r[k] for k in key)): tuple(
+            r[c] for c in cols
+        )
+        for r in df.collect()
     }
 
 
-def _sfx_state_spans(state):
-    from isilon_hadoop_tools_spark.streaming.neardup import SFX_SPANS_SCHEMA
+_SFX_KEY = ("id", "start_tok", "end_tok")
+_SFX_COLS = ("span_len", "max_dup_len", "n_positions")
 
-    return {
-        (r["id"], r["start_tok"], r["end_tok"]):
-            (r["span_len"], r["max_dup_len"], r["n_positions"])
-        for r in state.read("sfx_spans", SFX_SPANS_SCHEMA).collect()
-    }
+
+def _sfx_crash(spark, state, seen):
+    # the attempt appended half its gram postings and one of its doc
+    # rows: a double-counted single occurrence (doc 5's "m3 m4 m5 n1")
+    # would fabricate a duplicate
+    last = spark.createDataFrame(_SFX_BATCHES[-1], DOCS_SCHEMA).select(
+        F.col("doc_id").alias("id"), "text"
+    )
+    _, grams = _suffix_grams(last, "text", "id", 4)
+    state.append("sfx_grams", grams.filter(F.col("pos") % 2 == 0))
+    state.append("sfx_docs", last.filter(F.col("id") == 5))
+
+
+SUFFIX = _Applier(
+    batches=_SFX_BATCHES,
+    schema=DOCS_SCHEMA,
+    apply=lambda batch, state: suffix_index_apply_batch(batch, state, min_len=4),
+    read=lambda state: _by_key(
+        state.read("sfx_spans", SFX_SPANS_SCHEMA), _SFX_KEY, _SFX_COLS
+    ),
+    answer=lambda spark, rows: _by_key(
+        suffix_dup_spans(
+            spark.createDataFrame(rows, DOCS_SCHEMA), "text", "doc_id", min_len=4
+        ),
+        _SFX_KEY,
+        _SFX_COLS,
+    ),
+    members="sfx_members",
+    logs=(("sfx_grams", ("id", "pos")), ("sfx_docs", ("id",))),
+    crash=_sfx_crash,
+)
 
 
 def test_suffix_index_incremental_equals_batch_at_every_prefix(
@@ -556,94 +676,31 @@ def test_suffix_index_incremental_equals_batch_at_every_prefix(
     suffix_dup_spans answer over the prefix corpus — including spans
     of OLD docs growing when a longer partner arrives later, and
     untouched docs' spans carrying over unchanged."""
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        suffix_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for rows in _SFX_BATCHES:
-        seen += rows
-        suffix_index_apply_batch(
-            spark.createDataFrame(rows, DOCS_SCHEMA), state, min_len=4
-        )
-        assert _sfx_state_spans(state) == _sfx_batch_answer(spark, seen)
+    final = SUFFIX.read(_fold_every_prefix(spark, tmp_path, SUFFIX))
     # scenario sanity: doc 1's span really grew across batches and
     # doc 6's within-doc span survived untouched
-    final = _sfx_state_spans(state)
     assert (1, 0, 12) in final  # full 12-token dup with doc 4
     # doc 6's within-doc repeat (two 4-token islands) from batch 1
     assert (6, 0, 4) in final and (6, 5, 9) in final
 
 
 def test_suffix_index_replay_is_noop(spark, tmp_path):
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        suffix_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for _ in range(2):
-        for rows in _SFX_BATCHES:
-            suffix_index_apply_batch(
-                spark.createDataFrame(rows, DOCS_SCHEMA), state, min_len=4
-            )
-    all_rows = [r for b in _SFX_BATCHES for r in b]
-    assert _sfx_state_spans(state) == _sfx_batch_answer(spark, all_rows)
-    # members grew once per doc
-    assert state.read("sfx_members", "id LONG").count() == len(all_rows)
-    # gram postings hold each (id, pos) occurrence exactly once
-    g = state.read("sfx_grams", "id LONG, pos LONG, gh LONG")
-    assert g.count() == g.distinct().count()
+    _replay_is_noop(spark, tmp_path, SUFFIX)
 
 
 def test_suffix_index_partial_append_crash_replays_clean(spark, tmp_path):
-    """Crash simulation: batch 2 dies AFTER half its gram postings
+    """Crash simulation: batch 3 dies AFTER half its gram postings
     (and one of its doc rows) were appended but BEFORE the members
     append committed. The replay must not double-count the
     partially-persisted rows (a double-counted single occurrence
     would fabricate a duplicate) and must converge to the clean
-    two-batch state."""
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.operators.corpus import _suffix_grams
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        suffix_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    suffix_index_apply_batch(
-        spark.createDataFrame(_SFX_BATCHES[0], DOCS_SCHEMA),
-        state,
-        min_len=4,
-    )
-    # simulate the crashed attempt's partial writes
-    b2 = spark.createDataFrame(_SFX_BATCHES[1], DOCS_SCHEMA).select(
-        F.col("doc_id").alias("id"), "text"
-    )
-    _, g2 = _suffix_grams(b2, "text", "id", 4)
-    state.append("sfx_grams", g2.filter(F.col("pos") % 2 == 0))
-    state.append("sfx_docs", b2.filter(F.col("id") == 7))
-    # replay the full batch through the normal path
-    suffix_index_apply_batch(
-        spark.createDataFrame(_SFX_BATCHES[1], DOCS_SCHEMA),
-        state,
-        min_len=4,
-    )
-    seen = _SFX_BATCHES[0] + _SFX_BATCHES[1]
-    assert _sfx_state_spans(state) == _sfx_batch_answer(spark, seen)
-    g = state.read("sfx_grams", "id LONG, pos LONG, gh LONG")
-    assert g.count() == g.distinct().count()
-    d = state.read("sfx_docs", "id LONG, text STRING")
-    assert d.count() == d.select("id").distinct().count()
+    state."""
+    _partial_append_replays_clean(spark, tmp_path, SUFFIX)
 
 
 def test_suffix_stream_drain_twice_equals_batch(spark, tmp_path):
     """End-to-end through readStream/foreachBatch: three file batches
     drained twice without a checkpoint equal the batch answer."""
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        suffix_stream_into_state,
-    )
-
     src = str(tmp_path / "src")
     os.makedirs(src)
     for i, rows in enumerate(_SFX_BATCHES):
@@ -657,8 +714,7 @@ def test_suffix_stream_drain_twice_equals_batch(spark, tmp_path):
     for _ in range(2):
         stream = file_stream(spark, schema, os.path.join(src, "b*.parquet"))
         suffix_stream_into_state(stream, state, min_len=4)
-    all_rows = [r for b in _SFX_BATCHES for r in b]
-    assert _sfx_state_spans(state) == _sfx_batch_answer(spark, all_rows)
+    assert SUFFIX.read(state) == SUFFIX.answer(spark, _all_rows(SUFFIX))
 
 
 # ---- streaming per-domain frequency-cap maintenance (L64 twin) ----
@@ -671,25 +727,40 @@ _DC_BATCHES = [
     [(5, "http://hA4.example.com/q"),              # DISPLACES id 12
      (31, "http://hB2.b.org/w")],
 ]
+_DC_COLS = ("domain", "kept")
 
 
-def _dc_state(state):
-    from isilon_hadoop_tools_spark.streaming.neardup import DC_KEPT_SCHEMA
+def _dc_crash(spark, state, seen):
+    # kept already swapped to the post-batch snapshot, ONE of the two
+    # doc rows (id 5) already appended
+    state.write(
+        "dc_kept",
+        domain_caps(spark.createDataFrame(seen, _URL_SCHEMA), "url", "doc_id", 3)
+        .select("id", *_DC_COLS),
+    )
+    last = spark.createDataFrame(_DC_BATCHES[-1], _URL_SCHEMA).select(
+        F.col("doc_id").alias("id"),
+        registrable_domain_expr(host_expr("url")).alias("domain"),
+    )
+    state.append("dc_docs", last.filter(F.col("id") == 5))
 
-    return {
-        r["id"]: (r["domain"], r["kept"])
-        for r in state.read("dc_kept", DC_KEPT_SCHEMA).collect()
-    }
 
-
-def _dc_batch_answer(spark, rows, cap):
-    from isilon_hadoop_tools_spark.operators.urls import domain_caps
-
-    df = spark.createDataFrame(rows, "doc_id LONG, url STRING")
-    return {
-        r["id"]: (r["domain"], r["kept"])
-        for r in domain_caps(df, "url", "doc_id", cap).collect()
-    }
+DOMAIN_CAPS = _Applier(
+    batches=_DC_BATCHES,
+    schema=_URL_SCHEMA,
+    apply=lambda batch, state: domain_caps_apply_batch(batch, state, cap=3),
+    read=lambda state: _by_key(
+        state.read("dc_kept", DC_KEPT_SCHEMA), ("id",), _DC_COLS
+    ),
+    answer=lambda spark, rows: _by_key(
+        domain_caps(spark.createDataFrame(rows, _URL_SCHEMA), "url", "doc_id", 3),
+        ("id",),
+        _DC_COLS,
+    ),
+    members="dc_members",
+    logs=(("dc_docs", ("id",)),),
+    crash=_dc_crash,
+)
 
 
 def test_domain_caps_stream_displacement_and_prefix_equivalence(
@@ -699,44 +770,55 @@ def test_domain_caps_stream_displacement_and_prefix_equivalence(
     cap over the prefix — including a LATER-arriving lower id
     displacing a previously-kept doc (the deterministic-by-id
     semantics that make replays and backfills converge)."""
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        domain_caps_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for rows in _DC_BATCHES:
-        seen += rows
-        domain_caps_apply_batch(
-            spark.createDataFrame(rows, "doc_id LONG, url STRING"),
-            state,
-            cap=3,
-        )
-        assert _dc_state(state) == _dc_batch_answer(spark, seen, 3)
-    final = _dc_state(state)
+    final = DOMAIN_CAPS.read(_fold_every_prefix(spark, tmp_path, DOMAIN_CAPS))
     assert final[12] == ("example.com", False)  # displaced by id 5
     assert final[5] == ("example.com", True)
     assert final[30] == ("b.org", True) and final[31] == ("b.org", True)
 
 
 def test_domain_caps_stream_replay_is_noop(spark, tmp_path):
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        domain_caps_apply_batch,
-    )
+    _replay_is_noop(spark, tmp_path, DOMAIN_CAPS)
 
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for _ in range(2):
-        for rows in _DC_BATCHES:
-            domain_caps_apply_batch(
-                spark.createDataFrame(rows, "doc_id LONG, url STRING"),
-                state,
-                cap=3,
-            )
-    all_rows = [r for b in _DC_BATCHES for r in b]
-    assert _dc_state(state) == _dc_batch_answer(spark, all_rows, 3)
-    assert state.read("dc_members", "id LONG").count() == len(all_rows)
-    d = state.read("dc_docs", "id LONG, domain STRING")
-    assert d.count() == d.select("id").distinct().count()
+
+_UK_BATCHES = [
+    [(10, "http://Example.com/a?utm_source=x"), (20, "http://b.org/z")],
+    [(12, "http://example.com/a")],       # same canon as 10
+    [(4, "http://EXAMPLE.com/a#frag"),    # displaces 10
+     (21, "http://b.org/z?gclid=1")],
+]
+_UK_COLS = ("canon_url", "n_dups", "kept")
+
+
+def _uk_crash(spark, state, seen):
+    # kept already swapped, ONE of the two doc rows (id 4) appended
+    state.write(
+        "uk_kept",
+        url_keep_one(spark.createDataFrame(seen, _URL_SCHEMA), "url", "doc_id")
+        .select("id", *_UK_COLS),
+    )
+    last = spark.createDataFrame(_UK_BATCHES[-1], _URL_SCHEMA).select(
+        F.col("doc_id").alias("id"),
+        canonical_url_expr("url").alias("canon_url"),
+    )
+    state.append("uk_docs", last.filter(F.col("id") == 4))
+
+
+URL_KEEP_ONE = _Applier(
+    batches=_UK_BATCHES,
+    schema=_URL_SCHEMA,
+    apply=url_keep_one_apply_batch,
+    read=lambda state: _by_key(
+        state.read("uk_kept", UK_KEPT_SCHEMA), ("id",), _UK_COLS
+    ),
+    answer=lambda spark, rows: _by_key(
+        url_keep_one(spark.createDataFrame(rows, _URL_SCHEMA), "url", "doc_id"),
+        ("id",),
+        _UK_COLS,
+    ),
+    members="uk_members",
+    logs=(("uk_docs", ("id",)),),
+    crash=_uk_crash,
+)
 
 
 def test_url_keep_one_stream_displacement_and_replay(spark, tmp_path):
@@ -744,99 +826,25 @@ def test_url_keep_one_stream_displacement_and_replay(spark, tmp_path):
     displaced by a later-arriving lower id, n_dups grows with the
     group, replays are no-ops, and every prefix equals the batch
     answer."""
-    from isilon_hadoop_tools_spark.operators.urls import url_keep_one
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        UK_KEPT_SCHEMA,
-        url_keep_one_apply_batch,
+    state = _fold_every_prefix(spark, tmp_path, URL_KEEP_ONE)
+    got = URL_KEEP_ONE.read(
+        _replay_is_noop(spark, tmp_path, URL_KEEP_ONE, state)
     )
-
-    batches = [
-        [(10, "http://Example.com/a?utm_source=x"), (20, "http://b.org/z")],
-        [(12, "http://example.com/a")],       # same canon as 10
-        [(4, "http://EXAMPLE.com/a#frag")],   # displaces 10
-    ]
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for _ in range(2):  # second sweep replays everything: no-ops
-        for rows in batches:
-            if rows[0] not in seen:
-                seen += rows
-            url_keep_one_apply_batch(
-                spark.createDataFrame(rows, "doc_id LONG, url STRING"),
-                state,
-            )
-            want = {
-                r["id"]: (r["canon_url"], r["n_dups"], r["kept"])
-                for r in url_keep_one(
-                    spark.createDataFrame(seen, "doc_id LONG, url STRING"),
-                    "url",
-                    "doc_id",
-                ).collect()
-            }
-            got = {
-                r["id"]: (r["canon_url"], r["n_dups"], r["kept"])
-                for r in state.read("uk_kept", UK_KEPT_SCHEMA).collect()
-            }
-            assert got == want
     assert got[4] == ("http://example.com/a", 3, True)
     assert got[10] == ("http://example.com/a", 3, False)
     assert got[20][2] is True
 
 
 def test_domain_caps_partial_append_crash_replays_clean(spark, tmp_path):
-    """Crash simulation (r12 VERDICT #7): the batch-2 attempt dies
+    """Crash simulation (r12 VERDICT #7): the batch-3 attempt dies
     AFTER the dc_kept swap and AFTER half its dc_docs rows were
     appended, BEFORE the dc_members commit. Replay must not count the
     partially-appended docs twice into their domain and must converge
     to the clean prefix answer."""
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.operators.urls import (
-        domain_caps,
-        host_expr,
-        registrable_domain_expr,
+    final = DOMAIN_CAPS.read(
+        _partial_append_replays_clean(spark, tmp_path, DOMAIN_CAPS)
     )
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        domain_caps_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for rows in _DC_BATCHES[:2]:
-        domain_caps_apply_batch(
-            spark.createDataFrame(rows, "doc_id LONG, url STRING"),
-            state,
-            cap=3,
-        )
-    # simulate the crashed attempt of batch 2 (ids 5 and 31): kept
-    # already swapped to the post-batch snapshot, ONE of the two doc
-    # rows already appended, members NOT committed
-    seen_all = [r for b in _DC_BATCHES for r in b]
-    crashed_kept = domain_caps(
-        spark.createDataFrame(seen_all, "doc_id LONG, url STRING"),
-        "url",
-        "doc_id",
-        3,
-    ).select("id", "domain", "kept")
-    state.write("dc_kept", crashed_kept)
-    b2 = spark.createDataFrame(
-        _DC_BATCHES[2], "doc_id LONG, url STRING"
-    ).select(
-        F.col("doc_id").alias("id"),
-        registrable_domain_expr(host_expr("url")).alias("domain"),
-    )
-    state.append("dc_docs", b2.filter(F.col("id") == 5))
-    # replay the full batch through the normal path
-    domain_caps_apply_batch(
-        spark.createDataFrame(_DC_BATCHES[2], "doc_id LONG, url STRING"),
-        state,
-        cap=3,
-    )
-    assert _dc_state(state) == _dc_batch_answer(spark, seen_all, 3)
-    d = state.read("dc_docs", "id LONG, domain STRING")
-    assert d.count() == d.select("id").distinct().count()
-    assert state.read("dc_members", "id LONG").count() == len(seen_all)
     # the displacement survived the crash-replay cycle
-    final = _dc_state(state)
     assert final[5] == ("example.com", True)
     assert final[12] == ("example.com", False)
 
@@ -846,60 +854,9 @@ def test_url_keep_one_partial_append_crash_replays_clean(spark, tmp_path):
     uk_kept swap and the uk_docs/uk_members appends (one of two doc
     rows persisted). Replay must keep n_dups exact (a double-counted
     doc would inflate its group) and converge to the batch answer."""
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.operators.urls import (
-        canonical_url_expr,
-        url_keep_one,
+    got = URL_KEEP_ONE.read(
+        _partial_append_replays_clean(spark, tmp_path, URL_KEEP_ONE)
     )
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        UK_KEPT_SCHEMA,
-        url_keep_one_apply_batch,
-    )
-
-    batches = [
-        [(10, "http://Example.com/a?utm_source=x"), (20, "http://b.org/z")],
-        [(12, "http://example.com/a")],
-        [(4, "http://EXAMPLE.com/a#frag"), (21, "http://b.org/z?gclid=1")],
-    ]
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for rows in batches[:2]:
-        url_keep_one_apply_batch(
-            spark.createDataFrame(rows, "doc_id LONG, url STRING"), state
-        )
-    seen_all = [r for b in batches for r in b]
-    crashed_kept = url_keep_one(
-        spark.createDataFrame(seen_all, "doc_id LONG, url STRING"),
-        "url",
-        "doc_id",
-    ).select("id", "canon_url", "n_dups", "kept")
-    state.write("uk_kept", crashed_kept)
-    b2 = spark.createDataFrame(
-        batches[2], "doc_id LONG, url STRING"
-    ).select(
-        F.col("doc_id").alias("id"),
-        canonical_url_expr("url").alias("canon_url"),
-    )
-    state.append("uk_docs", b2.filter(F.col("id") == 4))
-    url_keep_one_apply_batch(
-        spark.createDataFrame(batches[2], "doc_id LONG, url STRING"), state
-    )
-    want = {
-        r["id"]: (r["canon_url"], r["n_dups"], r["kept"])
-        for r in url_keep_one(
-            spark.createDataFrame(seen_all, "doc_id LONG, url STRING"),
-            "url",
-            "doc_id",
-        ).collect()
-    }
-    got = {
-        r["id"]: (r["canon_url"], r["n_dups"], r["kept"])
-        for r in state.read("uk_kept", UK_KEPT_SCHEMA).collect()
-    }
-    assert got == want
-    d = state.read("uk_docs", "id LONG, canon_url STRING")
-    assert d.count() == d.select("id").distinct().count()
-    assert state.read("uk_members", "id LONG").count() == len(seen_all)
     # displacement + exact group size survived
     assert got[4] == ("http://example.com/a", 3, True)
     assert got[10] == ("http://example.com/a", 3, False)
@@ -913,80 +870,31 @@ _PP_BATCHES = [
     [(12, "alpha\nbody-C\ntail-12")],          # 'alpha' stays owned by 10
     [(5, "alpha\nbody-B\ntail-5")],            # DISPLACES 10's alpha AND 20's body-B
 ]
+_PP_COLS = ("n_paras", "n_kept", "text_clean")
 
 
-def _pp_state(state):
-    from isilon_hadoop_tools_spark.streaming.neardup import PP_KEPT_SCHEMA
-
-    return {
-        r["id"]: (r["n_paras"], r["n_kept"], r["text_clean"])
-        for r in state.read("pp_kept", PP_KEPT_SCHEMA).collect()
-    }
-
-
-def _pp_batch_answer(spark, rows):
-    from isilon_hadoop_tools_spark.operators.corpus import paragraph_dedup
-
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    return {
-        r["id"]: (r["n_paras"], r["n_kept"], r["text_clean"])
-        for r in paragraph_dedup(df, "text", "doc_id").collect()
-    }
-
-
-def test_paragraph_stream_displacement_and_prefix_equivalence(
-    spark, tmp_path
-):
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        paragraph_index_apply_batch,
+def _pp_answer(spark, rows):
+    return _by_key(
+        paragraph_dedup(spark.createDataFrame(rows, DOCS_SCHEMA), "text", "doc_id"),
+        ("id",),
+        _PP_COLS,
     )
 
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for rows in _PP_BATCHES:
-        seen += rows
-        paragraph_index_apply_batch(
-            spark.createDataFrame(rows, "doc_id LONG, text STRING"), state
-        )
-        assert _pp_state(state) == _pp_batch_answer(spark, seen)
-    final = _pp_state(state)
-    # doc 5 (lowest id) now owns 'alpha' and 'body-B'
-    assert final[5] == (3, 3, "alpha\nbody-B\ntail-5")
-    # doc 10 lost 'alpha' on displacement
-    assert final[10] == (3, 2, "body-A\ntail-10")
-    # doc 20 lost 'body-B'
-    assert final[20] == (3, 2, "beta\ntail-20")
-    assert final[12] == (3, 2, "body-C\ntail-12")
 
-
-def test_paragraph_stream_replay_and_partial_append_crash(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        paragraph_index_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for rows in _PP_BATCHES[:2]:
-        paragraph_index_apply_batch(
-            spark.createDataFrame(rows, "doc_id LONG, text STRING"), state
-        )
-    # crashed attempt of batch 2 (doc 5): kept + first already swapped,
-    # ONE of its three paragraph postings appended, members NOT
-    # committed — replay must not double-count and must converge
-    seen_all = [r for b in _PP_BATCHES for r in b]
-    crashed = _pp_batch_answer(spark, seen_all)
+def _pp_crash(spark, state, seen):
+    # kept + first already swapped, ONE of doc 5's three paragraph
+    # postings appended
     state.write(
         "pp_kept",
         spark.createDataFrame(
-            [(i, n, k, t) for i, (n, k, t) in crashed.items()],
-            "id LONG, n_paras LONG, n_kept LONG, text_clean STRING",
+            [(i, *v) for i, v in _pp_answer(spark, seen).items()],
+            PP_KEPT_SCHEMA,
         ),
     )
     # pp_first swaps BEFORE the paras append in the write order, so the
     # crashed snapshot must carry the post-batch ownership too
     first = {}
-    for did, text in seen_all:
+    for did, text in seen:
         for pos, para in enumerate(text.split("\n")):
             if para not in first or (did, pos) < first[para]:
                 first[para] = (did, pos)
@@ -999,19 +907,44 @@ def test_paragraph_stream_replay_and_partial_append_crash(spark, tmp_path):
     )
     state.append(
         "pp_paras",
-        spark.createDataFrame(
-            [(5, 0, "alpha")], "id LONG, pos INT, para STRING"
-        ),
+        spark.createDataFrame([(5, 0, "alpha")], "id LONG, pos INT, para STRING"),
     )
-    # replay the full batch, then a full second sweep (pure replays)
-    for rows in [_PP_BATCHES[2]] + _PP_BATCHES:
-        paragraph_index_apply_batch(
-            spark.createDataFrame(rows, "doc_id LONG, text STRING"), state
-        )
-    assert _pp_state(state) == crashed
+
+
+PARAGRAPH = _Applier(
+    batches=_PP_BATCHES,
+    schema=DOCS_SCHEMA,
+    apply=paragraph_index_apply_batch,
+    read=lambda state: _by_key(
+        state.read("pp_kept", PP_KEPT_SCHEMA), ("id",), _PP_COLS
+    ),
+    answer=_pp_answer,
+    members="pp_members",
+    logs=(("pp_paras", ("id", "pos")),),
+    crash=_pp_crash,
+)
+
+
+def test_paragraph_stream_displacement_and_prefix_equivalence(
+    spark, tmp_path
+):
+    final = PARAGRAPH.read(_fold_every_prefix(spark, tmp_path, PARAGRAPH))
+    # doc 5 (lowest id) now owns 'alpha' and 'body-B'
+    assert final[5] == (3, 3, "alpha\nbody-B\ntail-5")
+    # doc 10 lost 'alpha' on displacement
+    assert final[10] == (3, 2, "body-A\ntail-10")
+    # doc 20 lost 'body-B'
+    assert final[20] == (3, 2, "beta\ntail-20")
+    assert final[12] == (3, 2, "body-C\ntail-12")
+
+
+def test_paragraph_stream_replay_and_partial_append_crash(spark, tmp_path):
+    # the crashed batch replays clean, then a full second sweep of pure
+    # replays changes nothing
+    state = _partial_append_replays_clean(spark, tmp_path, PARAGRAPH)
+    _replay_is_noop(spark, tmp_path, PARAGRAPH, state)
     p = state.read("pp_paras", "id LONG, pos INT, para STRING")
-    assert p.count() == p.distinct().count() == 3 * len(seen_all)
-    assert state.read("pp_members", "id LONG").count() == len(seen_all)
+    assert p.count() == 3 * len(_all_rows(PARAGRAPH))
 
 
 _CP_BATCHES = [
@@ -1020,33 +953,41 @@ _CP_BATCHES = [
     [("p1", 3, 50), ("p2", 2, 10)],
 ]
 _CP_SCHEMA = "partition STRING, file LONG, size_bytes LONG"
+_CP_KEY = ("partition", "file")
+_CP_COLS = ("size_bytes", "cum_bytes", "bin_seq", "n_files_before", "n_files_after")
 
 
-def _cp_batch_answer(spark, rows, target):
-    from isilon_hadoop_tools_spark.operators.skew import compaction_plan
-
-    return {
-        (r["partition"], r["file"]): (
-            r["size_bytes"], r["cum_bytes"], r["bin_seq"],
-            r["n_files_before"], r["n_files_after"],
-        )
-        for r in compaction_plan(
-            spark.createDataFrame(rows, _CP_SCHEMA),
-            "partition", "file", "size_bytes", target,
-        ).collect()
-    }
+def _cp_plan(spark, rows):
+    return compaction_plan(
+        spark.createDataFrame(rows, _CP_SCHEMA),
+        "partition", "file", "size_bytes", 256,
+    )
 
 
-def _cp_state(state):
-    from isilon_hadoop_tools_spark.streaming.neardup import CP_PLAN_SCHEMA
+def _cp_crash(spark, state, seen):
+    # plan already swapped to the post-batch answer, ONE of the two
+    # file rows appended
+    state.write("cp_plan", _cp_plan(spark, seen))
+    state.append(
+        "cp_files",
+        spark.createDataFrame(_CP_BATCHES[-1], _CP_SCHEMA).filter(
+            F.col("file") == 3
+        ),
+    )
 
-    return {
-        (r["partition"], r["file"]): (
-            r["size_bytes"], r["cum_bytes"], r["bin_seq"],
-            r["n_files_before"], r["n_files_after"],
-        )
-        for r in state.read("cp_plan", CP_PLAN_SCHEMA).collect()
-    }
+
+COMPACTION = _Applier(
+    batches=_CP_BATCHES,
+    schema=_CP_SCHEMA,
+    apply=lambda batch, state: compaction_apply_batch(batch, state, 256),
+    read=lambda state: _by_key(
+        state.read("cp_plan", CP_PLAN_SCHEMA), _CP_KEY, _CP_COLS
+    ),
+    answer=lambda spark, rows: _by_key(_cp_plan(spark, rows), _CP_KEY, _CP_COLS),
+    members="cp_members",
+    logs=(("cp_files", _CP_KEY),),
+    crash=_cp_crash,
+)
 
 
 def test_compaction_stream_displacement_prefix_and_replay(spark, tmp_path):
@@ -1054,32 +995,12 @@ def test_compaction_stream_displacement_prefix_and_replay(spark, tmp_path):
     snapshot equals the batch planner over the prefix; a
     later-arriving larger file RESORTS its partition and displaces
     the earlier file's bin; a full replay sweep is a no-op."""
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        compaction_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    seen = []
-    for sweep in range(2):
-        for rows in _CP_BATCHES:
-            if sweep == 0:
-                seen += rows
-            compaction_apply_batch(
-                spark.createDataFrame(rows, _CP_SCHEMA), state, 256
-            )
-            if sweep == 0:
-                assert _cp_state(state) == _cp_batch_answer(
-                    spark, seen, 256
-                )
-    all_rows = [r for b in _CP_BATCHES for r in b]
-    final = _cp_state(state)
-    assert final == _cp_batch_answer(spark, all_rows, 256)
+    state = _fold_every_prefix(spark, tmp_path, COMPACTION)
+    final = COMPACTION.read(_replay_is_noop(spark, tmp_path, COMPACTION, state))
     # displacement: p1 file 1 was bin 1 alone; file 2 (300 B) sorts
     # first and pushes it to start offset 300 -> bin 2
     assert final[("p1", 2)][2] == 1
     assert final[("p1", 1)][2] == 2
-    members = state.read("cp_members", "partition STRING, file LONG")
-    assert members.count() == len(all_rows)
 
 
 def test_compaction_partial_append_crash_replays_clean(spark, tmp_path):
@@ -1088,46 +1009,9 @@ def test_compaction_partial_append_crash_replays_clean(spark, tmp_path):
     cp_files rows appended, BEFORE the cp_members commit. Replay must
     not double-count the partially-appended file into its partition
     and must converge to the clean full answer."""
-    from pyspark.sql import functions as F
-
-    from isilon_hadoop_tools_spark.streaming.neardup import (
-        CP_FILES_SCHEMA,
-        compaction_apply_batch,
-    )
-
-    state = ParquetState(spark, str(tmp_path / "state"))
-    for rows in _CP_BATCHES[:2]:
-        compaction_apply_batch(
-            spark.createDataFrame(rows, _CP_SCHEMA), state, 256
-        )
-    all_rows = [r for b in _CP_BATCHES for r in b]
-    # crashed attempt: plan already swapped to the post-batch answer,
-    # ONE of the two file rows appended, members NOT committed
-    from isilon_hadoop_tools_spark.operators.skew import compaction_plan
-
-    state.write(
-        "cp_plan",
-        compaction_plan(
-            spark.createDataFrame(all_rows, _CP_SCHEMA),
-            "partition", "file", "size_bytes", 256,
-        ),
-    )
-    state.append(
-        "cp_files",
-        spark.createDataFrame(_CP_BATCHES[2], _CP_SCHEMA).filter(
-            F.col("file") == 3
-        ),
-    )
-    # replay batch 3 through the normal path
-    compaction_apply_batch(
-        spark.createDataFrame(_CP_BATCHES[2], _CP_SCHEMA), state, 256
-    )
-    assert _cp_state(state) == _cp_batch_answer(spark, all_rows, 256)
-    f = state.read("cp_files", CP_FILES_SCHEMA)
-    assert f.count() == f.select("partition", "file").distinct().count()
-    assert f.count() == len(all_rows)
-    members = state.read("cp_members", "partition STRING, file LONG")
-    assert members.count() == len(all_rows)
+    state = _partial_append_replays_clean(spark, tmp_path, COMPACTION)
+    files = state.read("cp_files", CP_FILES_SCHEMA)
+    assert files.count() == len(_all_rows(COMPACTION))
 
 
 def test_bloom_index_stream_converges_and_stays_bounded(spark, tmp_path):
