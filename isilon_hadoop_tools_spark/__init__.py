@@ -18,7 +18,7 @@ Layout
                    tables, reference ``identities.py:350-538``,
                    ``directories.py:115-240``).
 - ``functions``  : scalar helper expressions (octal modes, IPv4<->int,
-                   posix paths, text shingles/hashes).
+                   posix paths, text tokens/n-grams).
 - ``operators``  : relational + reconciliation + LLM-pipeline operators.
 - ``plans``      : the write side — parquet-backed state, idempotent
                    merge/update/delete sinks, the staged topological

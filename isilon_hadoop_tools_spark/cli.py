@@ -44,11 +44,6 @@ LOGGER = logging.getLogger(__name__)
 DRY_RUN = "Had this been for real, this is what would have happened..."
 
 
-class CLIError(IsilonHadoopToolsSparkError):
-    """All exceptions emitted from this module inherit from this
-    (reference ``cli.py:28-29``)."""
-
-
 def catches(exception):
     """Decorator: log the given exception type and return exit code 1
     (reference ``cli.py:32-48``)."""

@@ -174,20 +174,3 @@ def is_transient(message: Column | str) -> Column:
     """True for the try-again message — rows to retry, the engine twin
     of the ``accesses_onefs`` retry loop (``onefs.py:566-596``)."""
     return _c(message) == F.lit(FORMATS["try_again"])
-
-
-def strict_messages(df: DataFrame, body_col: str = "body") -> DataFrame:
-    """Like :func:`parse_messages`, but raise on the first bad body —
-    the reference's exception-style surface."""
-    bad = (
-        df.select(classify_body(body_col).alias("v"), F.col(body_col))
-        .filter(F.col("v") != VALID)
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        row = bad[0]
-        if row["v"] == UNDECODABLE:
-            raise UndecodableErrorBody(f"undecodable error body: {row[body_col]!r}")
-        raise MalformedErrorBody(f"malformed error body: {row[body_col]!r}")
-    return parse_messages(df, body_col)

@@ -12,7 +12,6 @@ from isilon_hadoop_tools_spark.functions.text import (
     punct_ratio,
     token_count,
     tokens,
-    word_shingles,
 )
 
 __all__ = [
@@ -25,5 +24,4 @@ __all__ = [
     "punct_ratio",
     "token_count",
     "tokens",
-    "word_shingles",
 ]

@@ -53,23 +53,6 @@ def stopword_ratio(col: Column | str, stopwords: tuple[str, ...]) -> Column:
     return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(n_stop / F.size(toks))
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Array of k-word shingles joined by single spaces (distinct not
-    applied; empty when fewer than k tokens).
-
-    Guarded with ``when``: ``sequence(1, 0)`` is *descending* in Spark
-    ([1, 0]), so short texts must short-circuit to an empty array
-    before the index sequence is built.
-    """
-    toks = tokens(col)
-    n = F.size(toks)
-    shingled = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return F.when(n >= k, shingled).otherwise(F.array().cast("array<string>"))
-
-
 # stopword profiles for the heuristic language identifier — one
 # source of truth shared with the SQL oracle twin
 LANG_PROFILES: dict[str, tuple[str, ...]] = {

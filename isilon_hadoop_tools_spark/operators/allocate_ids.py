@@ -18,18 +18,13 @@ computes, with no driver-side loop. ``monotonically_increasing_id``
 is NOT contiguous and is deliberately not used.
 
 Scale note: identity catalogs are dimension-sized (≤ thousands), so
-the single-partition ``row_number`` window is fine. For fact-scale
-allocation use :func:`allocate_ids_scalable`, which computes a
-contiguous rank from per-partition counts instead of one global sort
-partition.
+the single-partition ``row_number`` window is fine.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from isilon_hadoop_tools_spark.session import shuffle_partition_count
 
 
 def allocate_ids(
@@ -79,46 +74,4 @@ def allocate_ids(
     return (
         ranked.join(free_ranked, "_rk")
         .select(name_col, F.col("_cand").alias(out_col))
-    )
-
-
-def allocate_ids_scalable(
-    names: DataFrame,
-    name_col: str,
-    start: int = 1025,
-    out_col: str = "id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Contiguous dense IDs at fact scale, no taken-set, no global sort
-    partition: range-partition by name, then rank = per-partition
-    row_number + cumulative count of earlier partitions (a two-pass
-    contiguous zip-with-index in pure DataFrame ops).
-
-    ``num_partitions`` defaults to ``spark.sql.shuffle.partitions``.
-    Range partitioning keeps ``_pid`` order-aligned with the name
-    order, so per-partition offsets compose into a global dense rank.
-    """
-    spark = names.sparkSession
-    if num_partitions is None:
-        num_partitions = shuffle_partition_count(spark)
-    distinct_names = names.select(name_col).distinct()
-    parts = distinct_names.repartitionByRange(
-        max(num_partitions, 1), name_col
-    ).withColumn("_pid", F.spark_partition_id())
-    counts = parts.groupBy("_pid").count()
-    offsets = counts.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum("count").over(
-                Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("_pid", "_offset")
-    local = parts.withColumn(
-        "_lrk", F.row_number().over(Window.partitionBy("_pid").orderBy(name_col))
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .select(name_col, (F.lit(start - 1) + F.col("_lrk") + F.col("_offset")).alias(out_col))
     )

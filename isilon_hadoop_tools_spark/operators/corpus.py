@@ -48,7 +48,7 @@ def repetition_stats(
     fractions are 0.0 (left join + coalesce), not dropped rows.
     """
     # n-grams via posexplode + lead windows, not the array-HOF
-    # word_shingles form: higher-order functions fall out of
+    # transform + slice form: higher-order functions fall out of
     # whole-stage codegen and measure ~3x slower here
     pe = df.select(
         F.col(id_col).alias("id"),
@@ -3212,36 +3212,6 @@ def _lang_gd(
         for kk in w:
             w[kk] = w[kk] - _tdiv(lr_num * G.get(kk, 0), den)
     return w
-
-
-def lang_classifier_train(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    lang_col: str,
-    langs: list[str],
-    n_buckets: int = 64,
-    rounds: int = 2,
-    ngram_n: int = 3,
-    lr_num: int = 1,
-    lr_den: int = 4,
-    scale: int = 1000,
-) -> DataFrame:
-    """Trained language-ID weights (L15's production upgrade — r12
-    VERDICT #4): one-vs-rest linear heads over hashed char-n-gram
-    buckets, fit by the engine's deterministic integer GD. Output:
-    ``lang``, ``feature_id`` (0..n_buckets; n_buckets = bias),
-    ``weight`` (fixed-point at ``scale``)."""
-    feats = _lang_char_features(
-        df, text_col, id_col, lang_col, n_buckets, ngram_n
-    )
-    w = _lang_gd(
-        feats, langs, df.count(), n_buckets, rounds, lr_num, lr_den, scale
-    )
-    return local_df(
-        df.sparkSession, [(lg, j, v) for (lg, j), v in sorted(w.items())],
-        "lang string, feature_id int, weight long",
-    )
 
 
 def lang_classifier_eval(

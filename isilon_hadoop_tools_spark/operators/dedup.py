@@ -55,8 +55,8 @@ def shingle_posting_list(
     """(shingle, id) posting list with optional frequent-shingle cap.
 
     Shingles are built by ``posexplode`` + ``lead`` windows rather than
-    the array higher-order-function form (``functions.text.
-    word_shingles``): HOF expressions fall out of whole-stage codegen
+    the array higher-order-function form (``transform`` + ``slice``
+    over the token array): HOF expressions fall out of whole-stage codegen
     and measure ~4x slower here. The trailing ``distinct()`` needs no
     exchange — the window already hash-partitioned rows by ``id``,
     which satisfies the (id, shingle) clustering requirement.

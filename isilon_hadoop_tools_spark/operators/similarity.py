@@ -43,27 +43,6 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_pandas():
-    """Arrow-vectorized scalar ``pandas_udf`` twin of :func:`cosine`
-    (SURVEY §2.10). The JVM higher-order-function form above is the
-    default; this is the escape hatch for numerics the built-ins
-    can't express (numpy inside, whole batches per call, ~10-100x
-    over row-at-a-time Python UDFs). Tested equal to the JVM form in
-    ``tests/test_stateful.py``."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = np.stack(a.to_numpy())
-        bv = np.stack(b.to_numpy())
-        dots = (av * bv).sum(axis=1)
-        norms = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-        return pd.Series(dots / norms)
-
-    return _cos
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -111,36 +90,11 @@ def _plane_component(p: int, j: int, seed: int) -> float:
     return h / 2147483648.0 - 1.0
 
 
-def hyperplane_bucket(vec_col, planes: int, dim: int, seed: int = 7) -> Column:
-    """Random-hyperplane LSH bucket id (0 .. 2^planes-1) for an
-    array<double> column.
-
-    The planes are data-independent constants, so they are computed
-    once in Python and embedded as array literals — zero per-row
-    hashing (the naive form re-derives planes*dim md5 values per row).
-    Each plane is rendered as ONE ``F.expr("array(...)")`` literal:
-    element-wise ``F.lit`` assembly costs planes*dim driver->JVM
-    round-trips (seconds of pure plan-construction latency at
-    dim=64 x 8 tables), the single parsed string costs one.
-    bit p = (dot(vec, plane_p) >= 0).
-    """
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        comp = F.expr(
-            "array("
-            + ",".join(f"{_plane_component(p, j, seed)!r}D" for j in range(dim))
-            + ")"
-        )
-        bit = (_dot(vec_col, comp) >= 0).cast("long")
-        bucket = bucket + bit * F.lit(2**p)
-    return bucket
-
-
 def bucket_ids_pandas(planes: int, dim: int, seeds: list[int]):
     """Arrow-vectorized multi-table bucket assignment.
 
-    Same bits as :func:`hyperplane_bucket` (bit p = dot(vec, plane_p)
-    >= 0, identical plane constants), computed as ONE numpy matmul per
+    Random-hyperplane LSH bucket ids (bit p = dot(vec, plane_p) >= 0,
+    planes from :func:`_plane_component`), computed as ONE numpy matmul per
     Arrow batch — ``(n, dim) @ (dim, tables*planes)`` — instead of
     ``tables * planes`` interpreted higher-order-function dots per
     row (HOF expressions fall out of whole-stage codegen; the matmul

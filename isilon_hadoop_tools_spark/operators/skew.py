@@ -1,18 +1,11 @@
 """Skew & co-location tools (SURVEY §4 physical concerns).
 
-AQE's skew-join handling covers sort-merge joins at runtime; these
-helpers cover the two cases it doesn't:
-
-- :func:`salted_join` — explicit key salting for a *broadcast-less*
-  join against a hot-keyed build side: the left (skewed) side gets a
-  random salt in [0, n); the right side is replicated n ways, so one
-  hot key spreads over n tasks instead of one straggler.
-- :func:`salted_count` — salted two-phase aggregation for hot group
-  keys: partial count per (key, salt), then final sum per key. Same
-  result as ``groupBy(key).count()``, shuffle spread over n subkeys.
-
-Salting multiplies shuffle volume by ~1 (agg) / n (replicated side),
-so it is a targeted tool for measured skew, not a default.
+AQE's skew-join handling covers sort-merge joins at runtime, not hot
+group keys in an aggregation: :func:`salted_count` is salted
+two-phase aggregation for those — partial count per (key, salt), then
+final sum per key. Same result as ``groupBy(key).count()``, shuffle
+spread over n subkeys. Salting adds a second aggregation shuffle, so
+it is a targeted tool for measured skew, not a default.
 """
 
 from __future__ import annotations
@@ -21,24 +14,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from isilon_hadoop_tools_spark.sources.local import local_df
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join on ``key`` with the left side salted and the right
-    side replicated ``salt`` ways. Output columns: left's + right's
-    (minus the duplicate key)."""
-    l_s = left.withColumn("_salt", (F.rand(seed=42) * salt).cast("int"))
-    r_s = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = l_s.join(r_s, [key, "_salt"], how)
-    return out.drop("_salt")
 
 
 def salted_count(df: DataFrame, key: str, salt: int = 8) -> DataFrame:

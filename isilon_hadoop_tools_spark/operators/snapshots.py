@@ -220,10 +220,6 @@ def set_commit_backend(name: str):
     return _BACKEND
 
 
-def commit_backend():
-    return _BACKEND
-
-
 def _commit_lock(table: pathlib.Path):
     return _BACKEND.lock(table)
 

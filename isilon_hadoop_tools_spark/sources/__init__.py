@@ -1,5 +1,5 @@
 """Sources: parquet/csv/json scans and static seed catalogs."""
 
-from isilon_hadoop_tools_spark.sources.tpch import TABLES, load_table, register_views
+from isilon_hadoop_tools_spark.sources.tpch import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "load_table"]

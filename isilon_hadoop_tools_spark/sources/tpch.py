@@ -69,13 +69,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         return normalize_events_ts(df)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (for the SQL API)."""
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, name, sf_dir)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

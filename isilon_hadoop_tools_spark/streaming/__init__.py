@@ -8,27 +8,22 @@ watermark, retention == watermark-driven state eviction — and the
 reference's idempotent sinks (S9) onto ``foreachBatch`` merges. Every
 such maintainer drains its source through the one
 :func:`~isilon_hadoop_tools_spark.streaming.events.drain`
-(``foreachBatch`` + ``trigger(availableNow)`` + optional checkpoint);
-only the per-batch applier differs.
+(``foreachBatch`` + ``trigger(availableNow)`` + optional checkpoint)
+with its own per-batch applier: the ``*_stream_into_*`` functions of
+``events`` bind theirs, and a near-dup index is drained by passing
+``drain`` a lambda over its ``*_apply_batch``.
 """
 
 from isilon_hadoop_tools_spark.streaming.neardup import (
     compaction_apply_batch,
-    compaction_stream_into_state,
     domain_caps_apply_batch,
-    domain_caps_stream_into_state,
     minhash_index_apply_batch,
-    minhash_stream_into_state,
     simhash_index_apply_batch,
     simhash_stream_into_state,
     suffix_index_apply_batch,
     paragraph_index_apply_batch,
-    paragraph_stream_into_state,
-    suffix_stream_into_state,
     tagged_index_apply_batch,
-    tagged_stream_into_state,
     url_keep_one_apply_batch,
-    url_keep_one_stream_into_state,
 )
 from isilon_hadoop_tools_spark.streaming.events import (
     dedup_first_stream,
@@ -45,7 +40,6 @@ from isilon_hadoop_tools_spark.streaming.events import (
 __all__ = [
     "dedup_first_stream",
     "domain_caps_apply_batch",
-    "domain_caps_stream_into_state",
     "dedup_within_watermark",
     "hourly_rollup_stream",
     "sliding_rollup_stream",
@@ -53,19 +47,13 @@ __all__ = [
     "read_events_stream",
     "run_available_now",
     "minhash_index_apply_batch",
-    "minhash_stream_into_state",
     "sessionize",
     "simhash_index_apply_batch",
     "simhash_stream_into_state",
     "suffix_index_apply_batch",
     "paragraph_index_apply_batch",
-    "paragraph_stream_into_state",
     "compaction_apply_batch",
-    "compaction_stream_into_state",
-    "suffix_stream_into_state",
     "tagged_index_apply_batch",
-    "tagged_stream_into_state",
     "url_keep_one_apply_batch",
-    "url_keep_one_stream_into_state",
     "view_purchase_interval_join",
 ]

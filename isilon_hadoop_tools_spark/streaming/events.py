@@ -322,7 +322,8 @@ def drain(source: DataFrame, apply_batch, checkpoint: str | None) -> None:
     """Drain ``source`` through ``apply_batch(batch, batch_id)`` via
     ``foreachBatch`` with ``trigger(availableNow)`` and block until
     every available input is consumed — the one writer behind every
-    ``*_stream_into_state`` / ``*_stream_into_snapshots`` maintainer.
+    streaming maintainer, whether a ``*_stream_into_*`` function here
+    or a query that drains a near-dup applier directly.
     With a ``checkpoint`` location a restart resumes after the last
     committed batch; without one every drain replays the whole
     source, which each applier's own idempotence absorbs."""

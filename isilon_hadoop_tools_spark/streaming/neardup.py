@@ -66,8 +66,11 @@ and swaps them into the decision snapshot. Members again land last
 The suffix and paragraph appliers follow the same discipline, keyed
 by their own touched sets.
 
-Every step of both folds runs its jobs under a ``"<applier>: <step>"``
+Every applier runs each step's jobs under a ``"<applier>: <step>"``
 job description, and the caller's description is restored on exit.
+Callers drain a stream through an applier with
+:func:`~isilon_hadoop_tools_spark.streaming.events.drain`;
+:func:`simhash_stream_into_state` is the one ready-made drain.
 """
 
 from __future__ import annotations
@@ -433,36 +436,6 @@ def minhash_index_apply_batch(
     )
 
 
-def minhash_stream_into_state(
-    docs: DataFrame,
-    state: ParquetState,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    k: int = 3,
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a document stream through
-    :func:`minhash_index_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)`` — replay-proof with or without a
-    checkpoint, the streaming twin of the batch LSH candidate
-    generation."""
-    drain(
-        docs,
-        lambda batch, _batch_id: minhash_index_apply_batch(
-            batch,
-            state,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            k=k,
-        ),
-        checkpoint,
-    )
-
-
 IVF_MEMBERS_SCHEMA = "vid LONG"
 IVF_POSTINGS_SCHEMA = "list_id INT, vid LONG, dist LONG"
 
@@ -493,42 +466,23 @@ def ivf_index_apply_batch(
         quantize_vectors,
     )
 
-    members = state.read("ivf_members", IVF_MEMBERS_SCHEMA)
-    new = _new_rows(
-        quantize_vectors(batch, vec_col, id_col, scale), members, ["vid"]
-    )
-    if new is None:
-        return  # replayed or empty batch
-    assign = kmeans_assign(new, centroids).select(
-        F.col("list_id").cast("int"), "vid", "dist"
-    )
-    postings = state.read("ivf_postings", IVF_POSTINGS_SCHEMA)
-    new_postings = assign.join(
-        postings.select("vid"), "vid", "left_anti"
-    )
-    state.append("ivf_postings", new_postings)
-    state.append("ivf_members", new.select("vid"))
-
-
-def ivf_stream_into_state(
-    vecs: DataFrame,
-    state: ParquetState,
-    centroids: list,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a vector stream into the IVF inverted-list state with
-    ``foreachBatch`` + ``availableNow`` (see
-    :func:`ivf_index_apply_batch`)."""
-    drain(
-        vecs,
-        lambda batch, _batch_id: ivf_index_apply_batch(
-            batch, state, centroids, vec_col, id_col, scale
-        ),
-        checkpoint,
-    )
+    with _job_steps(batch.sparkSession, "ivf_index") as step:
+        step("new members")
+        members = state.read("ivf_members", IVF_MEMBERS_SCHEMA)
+        new = _new_rows(
+            quantize_vectors(batch, vec_col, id_col, scale), members, ["vid"]
+        )
+        if new is None:
+            return  # replayed or empty batch
+        assign = kmeans_assign(new, centroids).select(
+            F.col("list_id").cast("int"), "vid", "dist"
+        )
+        postings = state.read("ivf_postings", IVF_POSTINGS_SCHEMA)
+        new_postings = assign.join(postings.select("vid"), "vid", "left_anti")
+        step("postings append")
+        state.append("ivf_postings", new_postings)
+        step("members append")
+        state.append("ivf_members", new.select("vid"))
 
 
 TAGGED_MEMBERS_SCHEMA = "modality STRING, id LONG, fp LONG"
@@ -601,29 +555,6 @@ def tagged_index_apply_batch(
     )
 
 
-def tagged_stream_into_state(
-    docs: DataFrame,
-    state: ParquetState,
-    params: dict,
-    fingerprint_fn,
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a document stream into the unified multimodal band index:
-    each micro-batch is fingerprinted by ``fingerprint_fn`` (a
-    ``DataFrame -> DataFrame`` producing ``(modality, id, fhash)`` —
-    the modality-specific decode/hash work stays outside the shared
-    maintenance machinery, mirroring the batch split between the
-    fingerprint operators and ``tagged_hamming_band_pairs``) and
-    folded in by :func:`tagged_index_apply_batch`."""
-    drain(
-        docs,
-        lambda batch, _batch_id: tagged_index_apply_batch(
-            fingerprint_fn(batch), state, params
-        ),
-        checkpoint,
-    )
-
-
 SFX_MEMBERS_SCHEMA = "id LONG"
 SFX_DOCS_SCHEMA = "id LONG, text STRING"
 SFX_GRAMS_SCHEMA = "id LONG, pos LONG, gh LONG"
@@ -689,107 +620,87 @@ def suffix_index_apply_batch(
         _suffix_spans_from,
     )
 
-    batch = docs.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    new_docs = _new_rows(
-        batch, state.read("sfx_members", SFX_MEMBERS_SCHEMA), ["id"]
-    )
-    if new_docs is None:
-        return  # replayed or empty batch
-    _toks_new, grams_new = _suffix_grams(new_docs, "text", "id", min_len)
-    grams_new = grams_new.localCheckpoint(eager=True)
-    # a crash AFTER the postings/docs appends but BEFORE the members
-    # append replays this batch with its rows partially persisted:
-    # excluding the replaying ids from the "old" side (an O(batch)
-    # anti-join) and recomputing them fresh prevents double-counted
-    # gram occurrences (which would fabricate duplicates) and
-    # double-unioned texts; the storage appends below anti-join too,
-    # so the tables themselves stay duplicate-free
-    new_ids = new_docs.select("id")
-    postings_raw = state.read("sfx_grams", SFX_GRAMS_SCHEMA)
-    docs_raw = state.read("sfx_docs", SFX_DOCS_SCHEMA)
-    postings = postings_raw.join(new_ids, "id", "left_anti")
-    old_docs = docs_raw.join(new_ids, "id", "left_anti")
-    all_grams = postings.unionByName(grams_new).localCheckpoint(eager=False)
-    touched_gh = grams_new.select("gh").distinct()
-    dup_touched = (
-        all_grams.join(touched_gh, "gh")
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
-        .select("gh")
-    )
-    touched_docs = (
-        all_grams.join(dup_touched, "gh")
-        .select("id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    tg = all_grams.join(touched_docs, "id", "left_semi").select("gh").distinct()
-    relevant = (
-        all_grams.join(tg, "gh")
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
-        .select("gh")
-    )
-    cands = all_grams.join(relevant, "gh", "left_semi").select("id", "pos")
-    all_texts = old_docs.unionByName(new_docs)
-    toks = (
-        all_texts.join(cands.select("id").distinct(), "id", "left_semi")
-        .select("id", tokens("text").alias("_arr"))
-        .localCheckpoint(eager=False)
-    )
-    spans_new = _suffix_spans_from(cands, toks, min_len, max_match_len).join(
-        touched_docs, "id", "left_semi"
-    )
-    current = state.read("sfx_spans", SFX_SPANS_SCHEMA)
-    merged = current.join(touched_docs, "id", "left_anti").unionByName(
-        spans_new.select(
-            "id", "start_tok", "end_tok", "span_len",
-            "max_dup_len", "n_positions",
+    with _job_steps(docs.sparkSession, "suffix_index") as step:
+        step("new members")
+        batch = docs.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("text")
         )
-    )
-    state.write("sfx_spans", merged)
-    # appends anti-join the RAW reads (not the replay-cleaned views)
-    # so a partially-appended prior attempt re-adds only missing rows
-    state.append(
-        "sfx_grams",
-        grams_new.join(postings_raw, ["id", "pos", "gh"], "left_anti"),
-    )
-    state.append(
-        "sfx_docs", new_docs.join(docs_raw.select("id"), "id", "left_anti")
-    )
-    state.append("sfx_members", new_docs.select("id"))
-
-
-def suffix_stream_into_state(
-    docs: DataFrame,
-    state: ParquetState,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 10,
-    max_match_len: int = 256,
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a document stream through
-    :func:`suffix_index_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)`` — replay-proof with or without a
-    checkpoint, the streaming twin of the batch exact-substring
-    dedup."""
-    drain(
-        docs,
-        lambda batch, _batch_id: suffix_index_apply_batch(
-            batch,
-            state,
-            min_len=min_len,
-            max_match_len=max_match_len,
-            text_col=text_col,
-            id_col=id_col,
-        ),
-        checkpoint,
-    )
+        new_docs = _new_rows(
+            batch, state.read("sfx_members", SFX_MEMBERS_SCHEMA), ["id"]
+        )
+        if new_docs is None:
+            return  # replayed or empty batch
+        step("grams checkpoint")
+        _toks_new, grams_new = _suffix_grams(new_docs, "text", "id", min_len)
+        grams_new = grams_new.localCheckpoint(eager=True)
+        # a crash AFTER the postings/docs appends but BEFORE the members
+        # append replays this batch with its rows partially persisted:
+        # excluding the replaying ids from the "old" side (an O(batch)
+        # anti-join) and recomputing them fresh prevents double-counted
+        # gram occurrences (which would fabricate duplicates) and
+        # double-unioned texts; the storage appends below anti-join too,
+        # so the tables themselves stay duplicate-free
+        new_ids = new_docs.select("id")
+        postings_raw = state.read("sfx_grams", SFX_GRAMS_SCHEMA)
+        docs_raw = state.read("sfx_docs", SFX_DOCS_SCHEMA)
+        postings = postings_raw.join(new_ids, "id", "left_anti")
+        old_docs = docs_raw.join(new_ids, "id", "left_anti")
+        all_grams = postings.unionByName(grams_new).localCheckpoint(eager=False)
+        touched_gh = grams_new.select("gh").distinct()
+        dup_touched = (
+            all_grams.join(touched_gh, "gh")
+            .groupBy("gh")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") >= 2)
+            .select("gh")
+        )
+        step("touched docs checkpoint")
+        touched_docs = (
+            all_grams.join(dup_touched, "gh")
+            .select("id")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        tg = all_grams.join(touched_docs, "id", "left_semi").select("gh").distinct()
+        relevant = (
+            all_grams.join(tg, "gh")
+            .groupBy("gh")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") >= 2)
+            .select("gh")
+        )
+        cands = all_grams.join(relevant, "gh", "left_semi").select("id", "pos")
+        all_texts = old_docs.unionByName(new_docs)
+        toks = (
+            all_texts.join(cands.select("id").distinct(), "id", "left_semi")
+            .select("id", tokens("text").alias("_arr"))
+            .localCheckpoint(eager=False)
+        )
+        spans_new = _suffix_spans_from(cands, toks, min_len, max_match_len).join(
+            touched_docs, "id", "left_semi"
+        )
+        step("spans swap")
+        current = state.read("sfx_spans", SFX_SPANS_SCHEMA)
+        merged = current.join(touched_docs, "id", "left_anti").unionByName(
+            spans_new.select(
+                "id", "start_tok", "end_tok", "span_len",
+                "max_dup_len", "n_positions",
+            )
+        )
+        state.write("sfx_spans", merged)
+        # appends anti-join the RAW reads (not the replay-cleaned views)
+        # so a partially-appended prior attempt re-adds only missing rows
+        step("grams append")
+        state.append(
+            "sfx_grams",
+            grams_new.join(postings_raw, ["id", "pos", "gh"], "left_anti"),
+        )
+        step("docs append")
+        state.append(
+            "sfx_docs", new_docs.join(docs_raw.select("id"), "id", "left_anti")
+        )
+        step("members append")
+        state.append("sfx_members", new_docs.select("id"))
 
 
 DC_MEMBERS_SCHEMA = "id LONG"
@@ -863,27 +774,6 @@ def domain_caps_apply_batch(
     )
 
 
-def domain_caps_stream_into_state(
-    docs: DataFrame,
-    state: ParquetState,
-    cap: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a document stream through
-    :func:`domain_caps_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)`` — replay-proof with or without a
-    checkpoint, the streaming twin of the batch per-domain cap."""
-    drain(
-        docs,
-        lambda batch, _batch_id: domain_caps_apply_batch(
-            batch, state, cap=cap, url_col=url_col, id_col=id_col
-        ),
-        checkpoint,
-    )
-
-
 UK_MEMBERS_SCHEMA = "id LONG"
 UK_DOCS_SCHEMA = "id LONG, canon_url STRING"
 UK_KEPT_SCHEMA = "id LONG, canon_url STRING, n_dups LONG, kept BOOLEAN"
@@ -938,25 +828,6 @@ def url_keep_one_apply_batch(
     )
 
 
-def url_keep_one_stream_into_state(
-    docs: DataFrame,
-    state: ParquetState,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a document stream through
-    :func:`url_keep_one_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)``."""
-    drain(
-        docs,
-        lambda batch, _batch_id: url_keep_one_apply_batch(
-            batch, state, url_col=url_col, id_col=id_col
-        ),
-        checkpoint,
-    )
-
-
 PP_MEMBERS_SCHEMA = "id LONG"
 PP_PARAS_SCHEMA = "id LONG, pos INT, para STRING"
 PP_FIRST_SCHEMA = "para STRING, fid LONG, fpos INT"
@@ -994,104 +865,93 @@ def paragraph_index_apply_batch(
     reads exclude the replaying ids so a partial paras append cannot
     double-count an occurrence.
     """
-    new_docs = _new_rows(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
-        state.read("pp_members", PP_MEMBERS_SCHEMA),
-        ["id"],
-    )
-    if new_docs is None:
-        return  # replayed or empty batch
-    new_ids = new_docs.select("id")
-    new_paras = new_docs.select(
-        "id", F.posexplode(F.split("text", sep)).alias("pos", "para")
-    ).localCheckpoint(eager=True)
-    paras_raw = state.read("pp_paras", PP_PARAS_SCHEMA)
-    old_paras = paras_raw.join(new_ids, "id", "left_anti")
-    touched = new_paras.select("para").distinct().localCheckpoint(eager=True)
-    first_raw = state.read("pp_first", PP_FIRST_SCHEMA)
-    new_first = new_paras.groupBy("para").agg(
-        F.min(F.struct(F.col("id"), F.col("pos"))).alias("_f")
-    ).select("para", F.col("_f.id").alias("fid"), F.col("_f.pos").alias("fpos"))
-    merged_touched = (
-        first_raw.join(touched, "para", "left_semi")
-        .unionByName(new_first)
-        .groupBy("para")
-        .agg(F.min(F.struct(F.col("fid"), F.col("fpos"))).alias("_f"))
-        .select(
-            "para", F.col("_f.fid").alias("fid"), F.col("_f.fpos").alias("fpos")
+    with _job_steps(docs.sparkSession, "paragraph_index") as step:
+        step("new members")
+        new_docs = _new_rows(
+            docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
+            state.read("pp_members", PP_MEMBERS_SCHEMA),
+            ["id"],
         )
-    )
-    first_merged = (
-        first_raw.join(touched, "para", "left_anti")
-        .unionByName(merged_touched)
-        .localCheckpoint(eager=True)
-    )
-    affected = (
-        old_paras.join(touched, "para", "left_semi")
-        .select("id")
-        .unionByName(new_ids)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_affected_paras = (
-        old_paras.unionByName(new_paras)
-        .join(affected, "id", "left_semi")
-    )
-    flagged = all_affected_paras.join(first_merged, "para").select(
-        "id",
-        "pos",
-        "para",
-        ((F.col("id") == F.col("fid")) & (F.col("pos") == F.col("fpos"))).alias(
-            "keep"
-        ),
-    )
-    rebuilt = flagged.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_paras"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("keep"), F.struct("pos", "para"))
-                    )
-                ),
-                lambda s: s["para"],
+        if new_docs is None:
+            return  # replayed or empty batch
+        new_ids = new_docs.select("id")
+        step("paras checkpoint")
+        new_paras = new_docs.select(
+            "id", F.posexplode(F.split("text", sep)).alias("pos", "para")
+        ).localCheckpoint(eager=True)
+        paras_raw = state.read("pp_paras", PP_PARAS_SCHEMA)
+        old_paras = paras_raw.join(new_ids, "id", "left_anti")
+        step("touched checkpoint")
+        touched = new_paras.select("para").distinct().localCheckpoint(eager=True)
+        first_raw = state.read("pp_first", PP_FIRST_SCHEMA)
+        new_first = new_paras.groupBy("para").agg(
+            F.min(F.struct(F.col("id"), F.col("pos"))).alias("_f")
+        ).select("para", F.col("_f.id").alias("fid"), F.col("_f.pos").alias("fpos"))
+        merged_touched = (
+            first_raw.join(touched, "para", "left_semi")
+            .unionByName(new_first)
+            .groupBy("para")
+            .agg(F.min(F.struct(F.col("fid"), F.col("fpos"))).alias("_f"))
+            .select(
+                "para", F.col("_f.fid").alias("fid"), F.col("_f.fpos").alias("fpos")
+            )
+        )
+        step("ownership checkpoint")
+        first_merged = (
+            first_raw.join(touched, "para", "left_anti")
+            .unionByName(merged_touched)
+            .localCheckpoint(eager=True)
+        )
+        step("affected checkpoint")
+        affected = (
+            old_paras.join(touched, "para", "left_semi")
+            .select("id")
+            .unionByName(new_ids)
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        all_affected_paras = (
+            old_paras.unionByName(new_paras)
+            .join(affected, "id", "left_semi")
+        )
+        flagged = all_affected_paras.join(first_merged, "para").select(
+            "id",
+            "pos",
+            "para",
+            ((F.col("id") == F.col("fid")) & (F.col("pos") == F.col("fpos"))).alias(
+                "keep"
             ),
-            sep,
-        ).alias("text_clean"),
-    )
-    current = state.read("pp_kept", PP_KEPT_SCHEMA)
-    merged_kept = current.join(affected, "id", "left_anti").unionByName(
-        rebuilt
-    )
-    state.write("pp_kept", merged_kept)
-    state.write("pp_first", first_merged)
-    state.append(
-        "pp_paras",
-        new_paras.join(paras_raw.select("id", "pos"), ["id", "pos"], "left_anti"),
-    )
-    state.append("pp_members", new_ids)
-
-
-def paragraph_stream_into_state(
-    docs: DataFrame,
-    state: ParquetState,
-    sep: str = "\n",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a document stream through
-    :func:`paragraph_index_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)`` — replay-proof with or without a
-    checkpoint, the streaming twin of CCNet paragraph dedup."""
-    drain(
-        docs,
-        lambda batch, _batch_id: paragraph_index_apply_batch(
-            batch, state, sep=sep, text_col=text_col, id_col=id_col
-        ),
-        checkpoint,
-    )
+        )
+        rebuilt = flagged.groupBy("id").agg(
+            F.count(F.lit(1)).alias("n_paras"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.when(F.col("keep"), F.struct("pos", "para"))
+                        )
+                    ),
+                    lambda s: s["para"],
+                ),
+                sep,
+            ).alias("text_clean"),
+        )
+        current = state.read("pp_kept", PP_KEPT_SCHEMA)
+        merged_kept = current.join(affected, "id", "left_anti").unionByName(
+            rebuilt
+        )
+        step("kept swap")
+        state.write("pp_kept", merged_kept)
+        step("ownership swap")
+        state.write("pp_first", first_merged)
+        step("paras append")
+        state.append(
+            "pp_paras",
+            new_paras.join(paras_raw.select("id", "pos"), ["id", "pos"], "left_anti"),
+        )
+        step("members append")
+        state.append("pp_members", new_ids)
 
 
 CP_MEMBERS_SCHEMA = "partition STRING, file LONG"
@@ -1154,33 +1014,6 @@ def compaction_apply_batch(
     )
 
 
-def compaction_stream_into_state(
-    files: DataFrame,
-    state: ParquetState,
-    target_bytes: int,
-    partition_col: str = "partition",
-    file_col: str = "file",
-    size_col: str = "size_bytes",
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a file-listing stream through
-    :func:`compaction_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)`` — replay-proof with or without a
-    checkpoint, the streaming twin of the batch compaction planner."""
-    drain(
-        files,
-        lambda batch, _batch_id: compaction_apply_batch(
-            batch,
-            state,
-            target_bytes=target_bytes,
-            partition_col=partition_col,
-            file_col=file_col,
-            size_col=size_col,
-        ),
-        checkpoint,
-    )
-
-
 BLOOM_BITS_SCHEMA = "bit INT"
 
 
@@ -1205,41 +1038,20 @@ def bloom_index_apply_batch(
     exact join)."""
     from isilon_hadoop_tools_spark.functions.hashing import stable_hash32
 
-    k = F.col(key_col).cast("string")
-    bits = keys.select(
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(
-                        stable_hash32(k, seed_base + j), F.lit(m_bits)
-                    ).cast("int")
-                    for j in range(k_hashes)
-                ]
-            )
-        ).alias("bit")
-    ).distinct()
-    current = state.read("bloom_bits", BLOOM_BITS_SCHEMA)
-    state.write("bloom_bits", current.unionByName(bits).distinct())
-
-
-def bloom_stream_into_state(
-    keys: DataFrame,
-    state: ParquetState,
-    key_col: str,
-    m_bits: int = 8192,
-    k_hashes: int = 3,
-    seed_base: int = 97,
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a build-side key stream through
-    :func:`bloom_index_apply_batch` via ``foreachBatch`` with
-    ``trigger(availableNow)`` — replay-proof with or without a
-    checkpoint (the set-bit union is idempotent)."""
-    drain(
-        keys,
-        lambda batch, _batch_id: bloom_index_apply_batch(
-            batch, state, key_col,
-            m_bits=m_bits, k_hashes=k_hashes, seed_base=seed_base,
-        ),
-        checkpoint,
-    )
+    with _job_steps(keys.sparkSession, "bloom_index") as step:
+        step("bits union write")
+        k = F.col(key_col).cast("string")
+        bits = keys.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.pmod(
+                            stable_hash32(k, seed_base + j), F.lit(m_bits)
+                        ).cast("int")
+                        for j in range(k_hashes)
+                    ]
+                )
+            ).alias("bit")
+        ).distinct()
+        current = state.read("bloom_bits", BLOOM_BITS_SCHEMA)
+        state.write("bloom_bits", current.unionByName(bits).distinct())

@@ -1,35 +1,19 @@
-"""Custom stateful operators (SURVEY §2.9/§2.10): per-key exponential
-moving average — an ORDER-dependent aggregate no built-in streaming
-aggregation expresses (sum/min/max are order-free; EMA is a
-recurrence ema_t = a*x_t + (1-a)*ema_{t-1}).
+"""Per-key exponential moving average (SURVEY §2.10): an
+ORDER-dependent aggregate no built-in aggregation expresses
+(sum/min/max are order-free; EMA is a recurrence
+ema_t = a*x_t + (1-a)*ema_{t-1}).
 
-Two faces of the same logic:
-- :func:`ema_batch` — grouped-map ``applyInPandas`` (Arrow-batched,
-  one shuffle on the key), oracle-checkable via the closed form
-  ema_n = (1-a)^(n-1) x_1 + sum_{j>=2} a (1-a)^(n-j) x_j.
-- :func:`ema_stream` — ``applyInPandasWithState``: state = (ema, n)
-  per key, updated batch by batch; with watermark-driven timeout the
-  state evicts like any windowed aggregate. Asserted equal to the
-  batch answer over a multi-batch file stream in tests.
-
+:func:`ema_batch` runs it as a grouped-map ``applyInPandas``
+(Arrow-batched, one shuffle on the key), oracle-checkable via the
+closed form ema_n = (1-a)^(n-1) x_1 + sum_{j>=2} a (1-a)^(n-j) x_j.
 Rows sort by (ts, id) inside each group so ties are deterministic
-across engines and across batch/stream replays.
+across engines.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def _ema_update(xs: list[float], prior: float | None, alpha: float) -> float:
-    ema = prior
-    for x in xs:
-        ema = x if ema is None else alpha * x + (1 - alpha) * ema
-    return ema
 
 
 def ema_batch(
@@ -46,93 +30,12 @@ def ema_batch(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts_col, id_col])
-        ema = _ema_update(pdf[val_col].tolist(), None, alpha)
+        xs = pdf[val_col].tolist()
+        ema = xs[0]
+        for x in xs[1:]:
+            ema = alpha * x + (1 - alpha) * ema
         return pd.DataFrame(
             {key_col: [pdf[key_col].iloc[0]], "n_events": [len(pdf)], "ema": [ema]}
         )
 
     return df.groupBy(key_col).applyInPandas(fn, schema)
-
-
-def ema_stream(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    val_col: str,
-    alpha: float = 0.3,
-) -> DataFrame:
-    """Streaming twin: per-key (ema, n) state carried across
-    micro-batches with ``applyInPandasWithState``; each batch emits
-    the key's updated running EMA (update semantics)."""
-    out_schema = f"{key_col} LONG, n_events LONG, ema DOUBLE"
-    state_schema = "ema DOUBLE, n LONG"
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ema, n = state.get
-        else:
-            ema, n = None, 0
-        rows = pd.concat(list(pdfs)).sort_values([ts_col, id_col])
-        ema = _ema_update(rows[val_col].tolist(), ema, alpha)
-        n += len(rows)
-        state.update((ema, n))
-        yield pd.DataFrame({key_col: [key[0]], "n_events": [n], "ema": [ema]})
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def ema_stream_tws(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    val_col: str,
-    alpha: float = 0.3,
-) -> DataFrame:
-    """The same per-key EMA on Spark 4's ``transformWithStateInPandas``
-    (SPARK-49564): typed value state via a ``StatefulProcessor``
-    instead of the tuple-state ``applyInPandasWithState`` contract.
-    The newer API adds composable state variables (value/list/map),
-    per-state TTL, and timers; this twin exercises the migration path
-    and is asserted equal to :func:`ema_stream` and :func:`ema_batch`
-    in tests.
-
-    Requires ``google.protobuf`` (the transformWithState worker
-    protocol is protobuf-framed); environments without it should use
-    :func:`ema_stream`, which is wire-format-free.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _EmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ema_n", "ema DOUBLE, n LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prior = self._state.get() if self._state.exists() else None
-            ema, n = (prior[0], prior[1]) if prior is not None else (None, 0)
-            batch = pd.concat(list(rows)).sort_values([ts_col, id_col])
-            ema = _ema_update(batch[val_col].tolist(), ema, alpha)
-            n += len(batch)
-            self._state.update((ema, n))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "ema": [ema]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_EmaProcessor(),
-        outputStructType=f"{key_col} LONG, n_events LONG, ema DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )

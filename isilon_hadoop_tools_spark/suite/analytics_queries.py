@@ -1858,9 +1858,10 @@ def orders_bloom_index_stream(
 
     from isilon_hadoop_tools_spark.operators.skew import bloom_probe_cond
     from isilon_hadoop_tools_spark.plans.state import ParquetState
+    from isilon_hadoop_tools_spark.streaming.events import drain
     from isilon_hadoop_tools_spark.streaming.neardup import (
         BLOOM_BITS_SCHEMA,
-        bloom_stream_into_state,
+        bloom_index_apply_batch,
     )
 
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -1874,7 +1875,11 @@ def orders_bloom_index_stream(
         .filter(F.col("o_totalprice") > 400000)
         .select("o_orderkey")
     )
-    bloom_stream_into_state(src, state, "o_orderkey")
+    drain(
+        src,
+        lambda batch, _id: bloom_index_apply_batch(batch, state, "o_orderkey"),
+        None,
+    )
     bits = {
         r["bit"]
         for r in state.read("bloom_bits", BLOOM_BITS_SCHEMA).collect()

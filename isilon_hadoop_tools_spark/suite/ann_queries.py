@@ -65,9 +65,10 @@ def embedding_ivf_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_train,
         quantize_vectors,
     )
+    from isilon_hadoop_tools_spark.streaming.events import drain
     from isilon_hadoop_tools_spark.streaming.neardup import (
         IVF_POSTINGS_SCHEMA,
-        ivf_stream_into_state,
+        ivf_index_apply_batch,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -82,7 +83,9 @@ def embedding_ivf_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(schema)
         .parquet(f"{sf_dir}/embeddings.*")  # file source needs a glob
     )
-    ivf_stream_into_state(stream, state, cents)
+    drain(
+        stream, lambda batch, _id: ivf_index_apply_batch(batch, state, cents), None
+    )
     return state.read("ivf_postings", IVF_POSTINGS_SCHEMA).select(
         "list_id", F.col("vid").alias("vec_id"), "dist"
     )

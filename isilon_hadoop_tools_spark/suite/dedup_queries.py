@@ -577,14 +577,20 @@ def minhash_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must hash-match the batch LSH candidate
     answer — the same oracle as ``dedup_minhash_lsh_candidates``, so
     one missed cross-batch collision or wrong n_bands fails."""
-    from isilon_hadoop_tools_spark import streaming
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        minhash_index_apply_batch,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     stream = _sliced_stream(spark, docs, "minhash_index_stream", sf_dir)
     state = _fresh_state(spark, "minhash_index_stream")
-    streaming.minhash_stream_into_state(
-        stream, state, text_col="text", id_col="doc_id",
-        num_hashes=8, bands=4,
+    drain(
+        stream,
+        lambda batch, _id: minhash_index_apply_batch(
+            batch, state, num_hashes=8, bands=4
+        ),
+        None,
     )
     return state.read("lsh_pairs", "id_a LONG, id_b LONG, n_bands LONG")
 

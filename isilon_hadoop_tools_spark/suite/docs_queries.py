@@ -2828,7 +2828,11 @@ def paragraph_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-doc
     snapshot must hash-match the batch `corpus_paragraph_dedup`
     oracle on the same corpus."""
-    from isilon_hadoop_tools_spark import streaming
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        PP_KEPT_SCHEMA,
+        paragraph_index_apply_batch,
+    )
 
     i = F.col("doc_id")
     fx = _t(spark, sf_dir, "documents").select(
@@ -2846,11 +2850,9 @@ def paragraph_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, fx, "paragraph_index_stream", sf_dir, residues=(2, 1, 0)
     )
     state = _fresh_state(spark, "paragraph_index_stream")
-    streaming.paragraph_stream_into_state(
-        stream, state, text_col="text", id_col="doc_id"
+    drain(
+        stream, lambda batch, _id: paragraph_index_apply_batch(batch, state), None
     )
-    from isilon_hadoop_tools_spark.streaming.neardup import PP_KEPT_SCHEMA
-
     return state.read("pp_kept", PP_KEPT_SCHEMA)
 
 
@@ -2867,17 +2869,22 @@ def suffix_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     `doc_suffix_dup_spans` brute-force oracle on the same corpus —
     one missed cross-batch duplicate or a stale untouched-doc span
     fails the value hash."""
-    from isilon_hadoop_tools_spark import streaming
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        SFX_SPANS_SCHEMA,
+        suffix_index_apply_batch,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     stream = _sliced_stream(spark, docs, "suffix_index_stream", sf_dir)
     state = _fresh_state(spark, "suffix_index_stream")
-    streaming.suffix_stream_into_state(
-        stream, state, text_col="text", id_col="doc_id",
-        min_len=_DUP_SPAN_N,
+    drain(
+        stream,
+        lambda batch, _id: suffix_index_apply_batch(
+            batch, state, min_len=_DUP_SPAN_N
+        ),
+        None,
     )
-    from isilon_hadoop_tools_spark.streaming.neardup import SFX_SPANS_SCHEMA
-
     return state.read("sfx_spans", SFX_SPANS_SCHEMA)
 
 
@@ -3172,16 +3179,20 @@ def domain_caps_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs — decisions recompute only for touched domains, and the
     decision snapshot after one drain must hash-match the batch cap
     semantics (lowest 20 ids per domain) over the whole corpus."""
-    from isilon_hadoop_tools_spark import streaming
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        DC_KEPT_SCHEMA,
+        domain_caps_apply_batch,
+    )
 
     urls = _url_fixture(_t(spark, sf_dir, "documents"))
     stream = _sliced_stream(spark, urls, "domain_caps_stream", sf_dir)
     state = _fresh_state(spark, "domain_caps_index_stream")
-    streaming.domain_caps_stream_into_state(
-        stream, state, cap=20, url_col="url", id_col="doc_id"
+    drain(
+        stream,
+        lambda batch, _id: domain_caps_apply_batch(batch, state, cap=20),
+        None,
     )
-    from isilon_hadoop_tools_spark.streaming.neardup import DC_KEPT_SCHEMA
-
     return state.read("dc_kept", DC_KEPT_SCHEMA)
 
 
@@ -3206,16 +3217,18 @@ def url_keep_one_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     group representatives and grow n_dups); decisions recompute only
     for touched canonical groups, and the snapshot after one drain
     must hash-match the batch keep-one oracle."""
-    from isilon_hadoop_tools_spark import streaming
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        UK_KEPT_SCHEMA,
+        url_keep_one_apply_batch,
+    )
 
     urls = _url_dedup_fixture(_t(spark, sf_dir, "documents"))
     stream = _sliced_stream(spark, urls, "url_keep_one_stream", sf_dir)
     state = _fresh_state(spark, "url_keep_one_index_stream")
-    streaming.url_keep_one_stream_into_state(
-        stream, state, url_col="url", id_col="doc_id"
+    drain(
+        stream, lambda batch, _id: url_keep_one_apply_batch(batch, state), None
     )
-    from isilon_hadoop_tools_spark.streaming.neardup import UK_KEPT_SCHEMA
-
     return state.read("uk_kept", UK_KEPT_SCHEMA)
 
 

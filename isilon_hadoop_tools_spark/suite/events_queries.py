@@ -194,9 +194,7 @@ def events_user_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom order-dependent aggregate (§2.10): per-user exponential
     moving average via grouped-map ``applyInPandas`` (Arrow batches,
     one shuffle on the key). No built-in aggregate expresses the
-    recurrence; the oracle uses its closed form. The streaming twin
-    (``applyInPandasWithState``) is equivalence-tested in
-    tests/test_stateful.py."""
+    recurrence; the oracle uses its closed form."""
     from isilon_hadoop_tools_spark.streaming.stateful import ema_batch
 
     ev = _t(spark, sf_dir, "events")
@@ -752,8 +750,11 @@ def compaction_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     later batch RESORTS it (size-desc order changes), displacing the
     previous bin assignments — and the plan snapshot after one drain
     must hash-match the batch planner over the whole listing."""
-    from isilon_hadoop_tools_spark import streaming
-    from isilon_hadoop_tools_spark.streaming.neardup import CP_PLAN_SCHEMA
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        CP_PLAN_SCHEMA,
+        compaction_apply_batch,
+    )
 
     ev = _t(spark, sf_dir, "events")
     files = ev.groupBy(
@@ -768,8 +769,12 @@ def compaction_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, files, "compaction_stream", sf_dir, key="file", residues=(2, 1, 0)
     )
     state = _fresh_state(spark, "compaction_index_stream")
-    streaming.compaction_stream_into_state(
-        stream, state, target_bytes=65536
+    drain(
+        stream,
+        lambda batch, _id: compaction_apply_batch(
+            batch, state, target_bytes=65536
+        ),
+        None,
     )
     return state.read("cp_plan", CP_PLAN_SCHEMA)
 

@@ -944,6 +944,7 @@ def multimodal_unified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from isilon_hadoop_tools_spark import multimodal as M
+    from isilon_hadoop_tools_spark.streaming.neardup import _job_steps
 
     docs = _t(spark, sf_dir, "documents")
 
@@ -959,45 +960,43 @@ def multimodal_unified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans with a trivial plan. Same rows, same band join, same
     # declared result (oracle-verified).
     def fp(which: str):
-        sc = spark.sparkContext
-        sc.setJobDescription(f"unified_near_dups: {which} fingerprints")
-        if which == "text":
-            out = dedup.simhash(docs, "text", "doc_id", bits=32).select(
-                F.lit("text").alias("modality"),
-                "id",
-                F.col("simhash").alias("fhash"),
-            )
-        elif which == "image":
-            out = M.bmp_ahash(
-                _bmp_payload_df(spark, sf_dir, base_mod=200),
-                "payload",
-                "doc_id",
-            ).select(
-                F.lit("image").alias("modality"),
-                F.col("doc_id").alias("id"),
-                F.col("ahash").alias("fhash"),
-            )
-        elif which == "audio":
-            out = M.wav_goertzel_hash(
-                _wav_long_payload_df(spark, sf_dir), "payload", "doc_id"
-            ).select(
-                F.lit("audio").alias("modality"),
-                F.col("doc_id").alias("id"),
-                F.col("ahash").alias("fhash"),
-            )
-        else:
-            out = M.y4m_video_hash(
-                _y4m_payload_df(spark, sf_dir, base_mod=200),
-                "payload",
-                "doc_id",
-            ).select(
-                F.lit("video").alias("modality"),
-                F.col("doc_id").alias("id"),
-                F.col("vhash").alias("fhash"),
-            )
-        out = out.localCheckpoint(eager=True)
-        sc.setJobDescription(None)
-        return out
+        with _job_steps(spark, "unified_near_dups") as step:
+            step(f"{which} fingerprints")
+            if which == "text":
+                out = dedup.simhash(docs, "text", "doc_id", bits=32).select(
+                    F.lit("text").alias("modality"),
+                    "id",
+                    F.col("simhash").alias("fhash"),
+                )
+            elif which == "image":
+                out = M.bmp_ahash(
+                    _bmp_payload_df(spark, sf_dir, base_mod=200),
+                    "payload",
+                    "doc_id",
+                ).select(
+                    F.lit("image").alias("modality"),
+                    F.col("doc_id").alias("id"),
+                    F.col("ahash").alias("fhash"),
+                )
+            elif which == "audio":
+                out = M.wav_goertzel_hash(
+                    _wav_long_payload_df(spark, sf_dir), "payload", "doc_id"
+                ).select(
+                    F.lit("audio").alias("modality"),
+                    F.col("doc_id").alias("id"),
+                    F.col("ahash").alias("fhash"),
+                )
+            else:
+                out = M.y4m_video_hash(
+                    _y4m_payload_df(spark, sf_dir, base_mod=200),
+                    "payload",
+                    "doc_id",
+                ).select(
+                    F.lit("video").alias("modality"),
+                    F.col("doc_id").alias("id"),
+                    F.col("vhash").alias("fhash"),
+                )
+            return out.localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         text, image, audio, video = pool.map(
@@ -1035,7 +1034,10 @@ def multimodal_unified_index_stream(
     equal the union of the two batch per-modality answers — composed
     from their registered oracle strings."""
     from isilon_hadoop_tools_spark import multimodal as M
-    from isilon_hadoop_tools_spark import streaming
+    from isilon_hadoop_tools_spark.streaming.events import drain
+    from isilon_hadoop_tools_spark.streaming.neardup import (
+        tagged_index_apply_batch,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     stream = _sliced_stream(spark, docs, "unified_index_stream", sf_dir)
@@ -1059,8 +1061,12 @@ def multimodal_unified_index_stream(
 
     params = {"text": (32, 3, 4), "image": (36, 4, 6)}
     state = _fresh_state(spark, "multimodal_unified_index_stream")
-    streaming.tagged_stream_into_state(
-        stream, state, params, fingerprint
+    drain(
+        stream,
+        lambda batch, _id: tagged_index_apply_batch(
+            fingerprint(batch), state, params
+        ),
+        None,
     )
     return state.read(
         "tnear_pairs",

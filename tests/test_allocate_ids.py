@@ -4,10 +4,7 @@ re-expression of the reference's serial counter probe
 
 from __future__ import annotations
 
-from isilon_hadoop_tools_spark.operators.allocate_ids import (
-    allocate_ids,
-    allocate_ids_scalable,
-)
+from isilon_hadoop_tools_spark.operators.allocate_ids import allocate_ids
 
 
 def test_allocate_contiguous_no_taken(spark):
@@ -36,32 +33,3 @@ def test_allocate_dedups_names(spark):
     rows = allocate_ids(names, "name", start=1).collect()
     assert len(rows) == 2
     assert {r["id"] for r in rows} == {1, 2}
-
-
-def test_allocate_scalable_dense_and_ordered(spark):
-    n = 500
-    names = spark.createDataFrame(
-        [(f"user{i:04d}",) for i in range(n)], "name STRING"
-    )
-    rows = allocate_ids_scalable(names, "name", start=1025, out_col="uid").collect()
-    assert len(rows) == n
-    by_name = {r["name"]: r["uid"] for r in rows}
-    # dense: exactly [start, start+n)
-    assert sorted(by_name.values()) == list(range(1025, 1025 + n))
-    # order-aligned: sorted names get ascending IDs
-    ordered = [by_name[k] for k in sorted(by_name)]
-    assert ordered == list(range(1025, 1025 + n))
-
-
-def test_allocate_scalable_matches_simple(spark):
-    names = spark.createDataFrame(
-        [(f"n{i:03d}",) for i in range(50)], "name STRING"
-    )
-    simple = {
-        r["name"]: r["id"] for r in allocate_ids(names, "name", start=7).collect()
-    }
-    scalable = {
-        r["name"]: r["id"]
-        for r in allocate_ids_scalable(names, "name", start=7).collect()
-    }
-    assert simple == scalable

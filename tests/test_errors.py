@@ -49,16 +49,6 @@ def test_exception_hierarchy():
     assert issubclass(E.ErrorAlgebraError, IsilonHadoopToolsSparkError)
 
 
-def test_strict_messages_raises_undecodable(spark):
-    with pytest.raises(E.UndecodableErrorBody):
-        E.strict_messages(_df(spark, ["not JSON"]))
-
-
-def test_strict_messages_raises_malformed(spark):
-    with pytest.raises(E.MalformedErrorBody):
-        E.strict_messages(_df(spark, ["{}"]))
-
-
 def test_parse_messages_explodes(spark):
     body = json.dumps({"errors": [{"message": "a"}, {"message": "b"}]})
     out = E.parse_messages(_df(spark, [body, "not JSON"]))

@@ -21,7 +21,6 @@ from isilon_hadoop_tools_spark.functions.text import (
     stopword_ratio,
     token_count,
     tokens,
-    word_shingles,
 )
 
 
@@ -116,12 +115,6 @@ def test_bpe_token_count_runs_and_counts(spark):
     # idx=0 or it raises at execution time
     # "hello, world42!" -> hello | , | world | 42 | !
     assert _one(spark, bpe_token_count("t"), t="hello, world42!") == 5
-
-
-def test_word_shingles(spark):
-    out = _one(spark, word_shingles("t", 3), t="a b c d")
-    assert out == ["a b c", "b c d"]
-    assert _one(spark, word_shingles("t", 3), t="a b") == []
 
 
 def test_char_ngrams(spark):

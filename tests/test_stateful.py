@@ -1,30 +1,21 @@
-"""Custom stateful operator tests: the applyInPandasWithState EMA
-stream must equal the applyInPandas batch EMA across micro-batches;
-plus the pandas_udf cosine twin vs the JVM expression."""
+"""Per-key EMA: the grouped-map ``applyInPandas`` recurrence over
+(ts, id)-ordered values, checked by hand."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
-import uuid
-
-from pyspark.sql import functions as F
 
 from conftest import T0, write_event_batch
-from isilon_hadoop_tools_spark.operators import similarity
-from isilon_hadoop_tools_spark.sources import tpch
-from isilon_hadoop_tools_spark.streaming.stateful import ema_batch, ema_stream
-
-from conftest import SMOKE_SF_DIR
+from isilon_hadoop_tools_spark.streaming.stateful import ema_batch
 
 ALPHA = 0.3
 
 
-def _ema_dir(tmp_path):
-    """Keys (reusing event_id as the user key) spread across batches:
-    key 1 sees values 1,2 then 3; key 2 sees 5."""
-    import datetime as dt
-
-    d = str(tmp_path / "ema_stream")
+def test_ema_batch_matches_hand_recurrence(spark, tmp_path):
+    # keys (reusing event_id as the user key) spread across two files:
+    # key 1 sees values 1,2 then 3; key 2 sees 5
+    d = str(tmp_path / "ema")
     os.makedirs(d)
     m = dt.timedelta(minutes=1)
     write_event_batch(d, "b1.parquet", [
@@ -35,99 +26,14 @@ def _ema_dir(tmp_path):
     write_event_batch(d, "b2.parquet", [
         (1, T0 + 2 * m, "a", 3.0),
     ])
-    return d
-
-
-def test_ema_stream_equals_batch_across_microbatches(spark, tmp_path):
-    d = _ema_dir(tmp_path)
-    schema = "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    name = "ema" + uuid.uuid4().hex[:8]
-    q = (
-        ema_stream(stream, "event_id", "ts", "event_id", "value", ALPHA)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    updates = spark.table(name).collect()
-    # final state per key = the update with the highest n_events
-    final = {}
-    for r in updates:
-        if r["event_id"] not in final or r["n_events"] > final[r["event_id"]][0]:
-            final[r["event_id"]] = (r["n_events"], r["ema"])
-
     batch = {
         r["event_id"]: (r["n_events"], r["ema"])
         for r in ema_batch(
             spark.read.parquet(d), "event_id", "ts", "event_id", "value", ALPHA
         ).collect()
     }
-    assert set(final) == set(batch) == {1, 2}
-    for k in batch:
-        assert final[k][0] == batch[k][0]
-        assert abs(final[k][1] - batch[k][1]) < 1e-9
+    assert set(batch) == {1, 2}
+    assert batch[1][0] == 3
     # recurrence by hand: 1 -> 0.3*2+0.7 = 1.3 -> 0.3*3+0.7*1.3 = 1.81
     assert abs(batch[1][1] - 1.81) < 1e-9
     assert batch[2] == (1, 5.0)
-
-
-def test_pandas_udf_cosine_matches_jvm(spark):
-    emb = tpch.load_table(spark, "embeddings", SMOKE_SF_DIR).limit(50)
-    pairs = (
-        emb.select(F.col("vec_id").alias("ia"), F.col("embedding").cast("array<double>").alias("va"))
-        .crossJoin(
-            emb.select(F.col("vec_id").alias("ib"), F.col("embedding").cast("array<double>").alias("vb"))
-        )
-        .filter(F.col("ia") < F.col("ib"))
-        .limit(200)
-    )
-    cos_py = similarity.cosine_pandas()
-    out = pairs.select(
-        similarity.cosine(F.col("va"), F.col("vb")).alias("jvm"),
-        cos_py(F.col("va"), F.col("vb")).alias("py"),
-    ).collect()
-    assert out
-    for r in out:
-        assert abs(r["jvm"] - r["py"]) < 1e-9
-
-
-def test_ema_transform_with_state_equals_batch(spark, tmp_path):
-    import pytest
-
-    # transformWithState's worker protocol needs protobuf (absent in
-    # some minimal containers); the operator is gated on it
-    pytest.importorskip("google.protobuf.descriptor")
-    from isilon_hadoop_tools_spark.streaming.stateful import ema_stream_tws
-
-    d = _ema_dir(tmp_path)
-    schema = "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    name = "tws" + uuid.uuid4().hex[:8]
-    q = (
-        ema_stream_tws(stream, "event_id", "ts", "event_id", "value", ALPHA)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # final state per key = the update with the highest n_events
-    last = {}
-    for r in spark.table(name).collect():
-        if r["event_id"] not in last or r["n_events"] > last[r["event_id"]][0]:
-            last[r["event_id"]] = (r["n_events"], r["ema"])
-    batch = ema_batch(
-        spark.read.parquet(d), "event_id", "ts", "event_id", "value", ALPHA
-    )
-    for b in batch.collect():
-        n, ema = last[b["event_id"]]
-        assert n == b["n_events"]
-        assert abs(ema - b["ema"]) < 1e-9

@@ -27,6 +27,7 @@ from isilon_hadoop_tools_spark.operators.urls import (
     url_keep_one,
 )
 from isilon_hadoop_tools_spark.plans.state import ParquetState
+from isilon_hadoop_tools_spark.streaming.events import drain
 from isilon_hadoop_tools_spark.streaming.neardup import (
     CP_FILES_SCHEMA,
     CP_PLAN_SCHEMA,
@@ -39,12 +40,10 @@ from isilon_hadoop_tools_spark.streaming.neardup import (
     compaction_apply_batch,
     domain_caps_apply_batch,
     minhash_index_apply_batch,
-    minhash_stream_into_state,
     paragraph_index_apply_batch,
     simhash_index_apply_batch,
     simhash_stream_into_state,
     suffix_index_apply_batch,
-    suffix_stream_into_state,
     tagged_index_apply_batch,
     url_keep_one_apply_batch,
 )
@@ -178,8 +177,12 @@ MINHASH = _Applier(
     apply=lambda batch, state: minhash_index_apply_batch(
         batch, state, num_hashes=8, bands=4
     ),
-    stream=lambda stream, state, ckpt: minhash_stream_into_state(
-        stream, state, num_hashes=8, bands=4, checkpoint=ckpt
+    stream=lambda stream, state, ckpt: drain(
+        stream,
+        lambda batch, _id: minhash_index_apply_batch(
+            batch, state, num_hashes=8, bands=4
+        ),
+        ckpt,
     ),
     read=_lsh_pairs,
     answer=_lsh_truth,
@@ -265,17 +268,17 @@ def _drain_restarts(spark, tmp_path, idx: _Applier):
     ckpt = str(tmp_path / "ckpt")
     state = ParquetState(spark, str(tmp_path / "state"))
 
-    def drain(ck):
+    def restart(ck):
         idx.stream(file_stream(spark, DOCS_SCHEMA, in_dir), state, ck)
 
     for stage, rows in enumerate(idx.batches):
         _write_doc_batch(in_dir, f"b{stage}.parquet", rows)
-        drain(ckpt)
+        restart(ckpt)
     truth = idx.answer(spark, _all_rows(idx))
     assert idx.read(state) == truth
-    drain(ckpt)  # idle restart: no new files, no state change
+    restart(ckpt)  # idle restart: no new files, no state change
     assert idx.read(state) == truth
-    drain(None)  # uncheckpointed replay: the anti-join makes it a no-op
+    restart(None)  # uncheckpointed replay: the anti-join makes it a no-op
     assert idx.read(state) == truth
 
 
@@ -337,7 +340,10 @@ def test_minhash_partial_posting_append_does_not_inflate_bands(
 
 @pytest.mark.parametrize(
     "applier",
-    ["simhash", "minhash", "tagged", "domain_caps", "url_keep_one", "compaction"],
+    [
+        "simhash", "minhash", "tagged", "domain_caps", "url_keep_one",
+        "compaction", "suffix", "paragraph",
+    ],
 )
 def test_band_index_restores_job_description_on_error(
     spark, tmp_path, monkeypatch, applier
@@ -367,6 +373,8 @@ def test_band_index_restores_job_description_on_error(
         "domain_caps": (first_batch(DOMAIN_CAPS), "dc_docs", "domain_caps"),
         "url_keep_one": (first_batch(URL_KEEP_ONE), "uk_docs", "url_keep_one"),
         "compaction": (first_batch(COMPACTION), "cp_files", "compaction"),
+        "suffix": (first_batch(SUFFIX), "sfx_grams", "suffix_index"),
+        "paragraph": (first_batch(PARAGRAPH), "pp_paras", "paragraph_index"),
     }[applier]
     append = ParquetState.append
     sc = spark.sparkContext
@@ -418,7 +426,7 @@ def test_ivf_stream_matches_batch_assignment_and_replay_noop(
     )
     from isilon_hadoop_tools_spark.streaming.neardup import (
         IVF_POSTINGS_SCHEMA,
-        ivf_stream_into_state,
+        ivf_index_apply_batch,
     )
 
     in_dir = str(tmp_path / "in")
@@ -442,7 +450,11 @@ def test_ivf_stream_matches_batch_assignment_and_replay_noop(
     }
     state = ParquetState(spark, str(tmp_path / "state"))
     for _ in range(2):  # second drain must be a replay no-op
-        ivf_stream_into_state(file_stream(spark, VEC_SCHEMA, in_dir), state, cents)
+        drain(
+            file_stream(spark, VEC_SCHEMA, in_dir),
+            lambda batch, _id: ivf_index_apply_batch(batch, state, cents),
+            None,
+        )
     got = {
         r["vid"]: (r["list_id"], r["dist"])
         for r in state.read("ivf_postings", IVF_POSTINGS_SCHEMA).collect()
@@ -465,7 +477,7 @@ def test_ivf_stream_checkpointed_restart_ingests_only_new(spark, tmp_path):
     )
     from isilon_hadoop_tools_spark.streaming.neardup import (
         IVF_POSTINGS_SCHEMA,
-        ivf_stream_into_state,
+        ivf_index_apply_batch,
     )
 
     in_dir = str(tmp_path / "in")
@@ -482,15 +494,17 @@ def test_ivf_stream_checkpointed_restart_ingests_only_new(spark, tmp_path):
     )
     state = ParquetState(spark, str(tmp_path / "state"))
 
-    def drain():
-        ivf_stream_into_state(
-            file_stream(spark, VEC_SCHEMA, in_dir), state, cents, checkpoint=ckpt
+    def drain_new():
+        drain(
+            file_stream(spark, VEC_SCHEMA, in_dir),
+            lambda batch, _id: ivf_index_apply_batch(batch, state, cents),
+            ckpt,
         )
 
     _write_vec_batch(in_dir, "b0.parquet", b0)
-    drain()
+    drain_new()
     _write_vec_batch(in_dir, "b1.parquet", b1)
-    drain()
+    drain_new()
     truth = {
         r["vid"]: (r["list_id"], r["dist"])
         for r in kmeans_assign(
@@ -713,7 +727,11 @@ def test_suffix_stream_drain_twice_equals_batch(spark, tmp_path):
     schema = spark.read.parquet(os.path.join(src, "b0.parquet")).schema
     for _ in range(2):
         stream = file_stream(spark, schema, os.path.join(src, "b*.parquet"))
-        suffix_stream_into_state(stream, state, min_len=4)
+        drain(
+            stream,
+            lambda batch, _id: suffix_index_apply_batch(batch, state, min_len=4),
+            None,
+        )
     assert SUFFIX.read(state) == SUFFIX.answer(spark, _all_rows(SUFFIX))
 
 
@@ -1025,7 +1043,7 @@ def test_bloom_index_stream_converges_and_stays_bounded(spark, tmp_path):
     )
     from isilon_hadoop_tools_spark.streaming.neardup import (
         BLOOM_BITS_SCHEMA,
-        bloom_stream_into_state,
+        bloom_index_apply_batch,
     )
 
     d = str(tmp_path / "keys")
@@ -1038,8 +1056,12 @@ def test_bloom_index_stream_converges_and_stays_bounded(spark, tmp_path):
         )
     state = ParquetState(spark, str(tmp_path / "state"))
     for _ in range(2):  # replay without checkpoint: must converge
-        bloom_stream_into_state(
-            file_stream(spark, "k long", d), state, "k", m_bits=256
+        drain(
+            file_stream(spark, "k long", d),
+            lambda batch, _id: bloom_index_apply_batch(
+                batch, state, "k", m_bits=256
+            ),
+            None,
         )
     got = {r["bit"] for r in
            state.read("bloom_bits", BLOOM_BITS_SCHEMA).collect()}

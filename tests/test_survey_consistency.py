@@ -215,6 +215,95 @@ def test_no_module_keeps_unused_imports():
     assert not unused, f"module-level imports never referenced: {unused}"
 
 
+# Public package definitions that no query, tool, workload or entry
+# point reaches, each kept on purpose.
+KEPT_UNREACHED = {
+    "snapshot_gc": "fault recovery: collects a crashed writer's orphans (SURVEY SC10k)",
+    "set_commit_backend": "selects the HDFS commit protocol (SURVEY SC10l)",
+    "snapshot_history": "the history read the snapshot tests check commits with",
+    "supported_features": "port of the reference's OneFS feature gate (F13)",
+    "revision_at_least": "port of the reference's OneFS revision gate (F14)",
+    "license_status": "port of the reference's OneFS license read (S6)",
+    "licenses_df": "port of the reference's OneFS license listing (S6)",
+    "UndecodableErrorBody": "port of the reference's error taxonomy (onefs.py:244-250)",
+    "oriented_wedges": "the hub-graph audit pins it",
+    "dedup_within_watermark": "the dedup_wm shape of the restart matrix the fast gate runs",
+}
+
+
+def _reached_names(tree, skip_imports: bool) -> set:
+    # Names, attributes and imported names of a module, except each
+    # definition's mentions of itself; docstrings and ``__all__``
+    # strings are constants, so they never count.
+    import ast
+
+    out = set()
+    for top in tree.body:
+        if skip_imports and isinstance(top, (ast.Import, ast.ImportFrom)):
+            continue
+        names = set()
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                names.update(a.name for a in node.names)
+        names.discard(getattr(top, "name", None))
+        out |= names
+    return out
+
+
+def test_every_public_definition_is_reached():
+    # A public top-level definition of the package must be reached
+    # from the package, tools/, perfbench/ (not its tests), bench.py or
+    # __spark_entry__.py; tests alone do not keep code alive. Package
+    # __init__ re-exports do not count as reaches; @query functions
+    # and the pyproject console scripts are entry points themselves.
+    import ast
+    import tomllib
+
+    pyproject = tomllib.loads((REPO / "pyproject.toml").read_text())
+    scripts = {v.split(":")[1] for v in pyproject["project"]["scripts"].values()}
+
+    def is_query(node) -> bool:
+        for d in node.decorator_list:
+            f = d.func if isinstance(d, ast.Call) else d
+            if getattr(f, "id", getattr(f, "attr", None)) == "query":
+                return True
+        return False
+
+    pkg = REPO / "isilon_hadoop_tools_spark"
+    defs, reached = {}, set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        reached |= _reached_names(tree, skip_imports=path.name == "__init__.py")
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")
+                and not is_query(node)
+                and node.name not in scripts
+            ):
+                defs[node.name] = f"{path.relative_to(REPO)}:{node.lineno}"
+    entry_points = [
+        *sorted((REPO / "tools").glob("*.py")),
+        *(p for p in sorted((REPO / "perfbench").glob("*.py"))
+          if not p.name.startswith("test_")),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+    ]
+    for path in entry_points:
+        reached |= _reached_names(ast.parse(path.read_text()), skip_imports=False)
+    unreached = {
+        name: where for name, where in defs.items()
+        if name not in reached and name not in KEPT_UNREACHED
+    }
+    assert not unreached, f"definitions only tests reach, or none: {unreached}"
+    stale = sorted(n for n in KEPT_UNREACHED if n not in defs or n in reached)
+    assert not stale, f"KEPT_UNREACHED names now gone or reached: {stale}"
+
+
 def test_engine_modules_build_driver_frames_through_local_df():
     # createDataFrame over Python rows plans as a Scan ExistingRDD that
     # round-trips Python workers on every job; sources.local.local_df
