@@ -7,16 +7,21 @@ filtering/dedup runs on cheap metadata, and decode only touches rows
 that survive).
 
 Decode / feature-extraction run as Arrow-batched ``mapInPandas``
-stages. Compressed-codec calls are STUBBED with deterministic fakes
-(this container ships no image/audio libraries): every stub marks the
-single line where ``PIL.Image.open`` / ``librosa.load`` would plug
-in, and everything around it — schema contract, Arrow batch shape,
-partitioning — is real and tested. Two codecs ARE real, one per
-modality: :func:`decode_resize_ppm` parses uncompressed P6 PPM
-images with pure numpy (header parse, frombuffer, nearest-neighbor
-resample), and :func:`decode_wav_features` walks RIFF/WAVE chunks
-and extracts PCM16 signal features — no stub anywhere in either
-path.
+stages, all through one runner, :func:`_per_payload`: each stage is a
+per-payload function (payload bytes -> output rows) and the schema it
+emits. Seven codecs are REAL, pure numpy/stdlib with no stub in the
+path: P6 PPM (:func:`decode_resize_ppm`), RIFF/WAVE PCM16
+(:func:`_wav_pcm16`), BMP (:func:`bmp_decode_rgb`), PNG
+(:func:`png_decode_rgb`), GIF (:func:`gif_decode_rgb`), YUV4MPEG2
+(:func:`y4m_decode`) and baseline JPEG (:func:`jpeg_decode_rgb`). The
+four RGB image decoders return one (h, w, 3) top-down array, so one
+feature row (:func:`_rgb_features`) and one luminance mosaic
+(:func:`_ahash`, :func:`_dhash`) serve every container. The remaining
+stages (``*_stub``) are deterministic fakes (the engine depends on no
+PIL/librosa/pyav): each marks the single line where
+``PIL.Image.open`` / ``librosa.load`` would plug in, and everything
+around it — schema contract, Arrow batch shape, partitioning — is
+real and tested.
 
 Cross-engine note: payload hashing/sniffing goes through ``hex()``
 (identical in Spark and DuckDB) because the oracle's md5 only accepts
@@ -26,8 +31,12 @@ strings; a Spark-only deployment would hash the binary directly.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -89,6 +98,106 @@ def binary_dedup(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _per_payload(
+    df: DataFrame,
+    bin_col: str,
+    id_col: str,
+    schema: str,
+    one: Callable[[bytes], list[tuple]],
+) -> DataFrame:
+    """The one Arrow codec stage: every decoder, hash and stub below
+    runs through this ``mapInPandas``.
+
+    ``one(raw)`` maps one payload to its output rows, each a tuple of
+    the ``schema`` columns (``"name TYPE, ..."``, the id excluded);
+    the stage prepends the id, takes the pandas column names from the
+    schema, and keeps payload bytes in the scan partition: one-to-many
+    fan-out happens inside the kernel and nothing shuffles. A
+    malformed payload raises the decoder's ``ValueError`` on the
+    worker.
+    """
+    columns = [id_col] + [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            rows = [
+                (doc_id, *row)
+                for doc_id, raw in zip(batch[id_col], batch[bin_col])
+                for row in one(raw)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.select(id_col, bin_col).mapInPandas(run, f"{id_col} LONG, {schema}")
+
+
+_RGB_FEATURES = (
+    "width INT, height INT, n_pixels LONG, "
+    "sum_r LONG, sum_g LONG, sum_b LONG, top_left LONG"
+)
+
+
+def _rgb_features(pix) -> list[tuple]:
+    """The exact-integer feature row of every RGB image codec, from an
+    (h, w, 3) top-down array: width, height, n_pixels, the channel
+    sums, and ``top_left`` = r·65536 + g·256 + b of pixel (0, 0) — a
+    wrong row flip, channel order or filter prediction flips it."""
+    h, w, _ = pix.shape
+    r, g, b = (pix[..., c].astype(np.int64) for c in range(3))
+    top_left = int(r[0, 0]) * 65536 + int(g[0, 0]) * 256 + int(b[0, 0])
+    return [(w, h, w * h, int(r.sum()), int(g.sum()), int(b.sum()), top_left)]
+
+
+def _mosaic(gray, rows: int, cols: int):
+    """Nearest-neighbor ``rows``×``cols`` sample of the last two axes
+    of ``gray``: cell (gy, gx) is pixel (gy·h // rows, gx·w // cols)
+    — integer arithmetic, so any engine reproduces it."""
+    h, w = gray.shape[-2:]
+    gy = np.arange(rows) * h // rows
+    gx = np.arange(cols) * w // cols
+    return gray[..., gy[:, None], gx]
+
+
+def _pack_bits(bits) -> int:
+    """Bits in row-major order, bit i worth 2^i, as one integer."""
+    bits = np.asarray(bits, dtype=np.int64)
+    return int((bits << np.arange(bits.size, dtype=np.int64).reshape(bits.shape)).sum())
+
+
+def _ahash(gray, grid: int) -> int:
+    """The aHash mosaic contract: bit = "cell brighter than its
+    mosaic's mean" as the division-free ``grid²·cell > Σcells``, per
+    trailing (h, w) plane, planes concatenated in order."""
+    cells = _mosaic(gray, grid, grid)
+    return _pack_bits(grid * grid * cells > cells.sum(axis=(-2, -1), keepdims=True))
+
+
+def _dhash(gray, grid: int) -> int:
+    """The dHash contract: a grid×(grid+1) mosaic, bit (gy, gx) =
+    ``cell[gy, gx+1] > cell[gy, gx]``."""
+    cells = _mosaic(gray, grid, grid + 1)
+    return _pack_bits(cells[..., 1:] > cells[..., :-1])
+
+
+def _image_hash_stage(
+    df: DataFrame, bin_col: str, id_col: str, decode, grid: int, kind: str
+) -> DataFrame:
+    """``decode`` each payload to RGB, hash its luminance (the channel
+    sum r+g+b, no division) with the ``kind`` (``ahash``/``dhash``)
+    mosaic. Output: ``id``, ``width``, ``height``, ``<kind>``."""
+    if grid * grid >= 63:
+        raise ValueError(f"grid {grid} overflows a signed-64 hash")
+    hash_of = _ahash if kind == "ahash" else _dhash
+
+    def one(raw: bytes) -> list[tuple]:
+        pix = decode(raw)
+        h, w, _ = pix.shape
+        return [(w, h, hash_of(pix.astype(np.int64).sum(axis=2), grid))]
+
+    return _per_payload(
+        df, bin_col, id_col, f"width INT, height INT, {kind} LONG", one
+    )
+
+
 def _fake_dims(size: int) -> tuple[int, int, int]:
     """Deterministic stand-in for decoded image dimensions."""
     return (size % 640 + 1, (size * 7) % 480 + 1, 3)
@@ -102,25 +211,13 @@ def decode_image_stub(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     body of ``decode_one`` with ``PIL.Image.open(io.BytesIO(raw))``
     and returns genuine (width, height, channels).
     """
-    schema = f"{id_col} LONG, width INT, height INT, channels INT"
+    def decode_one(raw: bytes) -> list[tuple]:
+        # >>> real decoder plugs in here (PIL/libvips) <<<
+        return [_fake_dims(len(raw))]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def decode_one(raw: bytes) -> tuple[int, int, int]:
-            # >>> real decoder plugs in here (PIL/libvips) <<<
-            return _fake_dims(len(raw))
-
-        for batch in batches:
-            dims = [decode_one(raw) for raw in batch[bin_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: batch[id_col],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "channels": [d[2] for d in dims],
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(decode, schema)
+    return _per_payload(
+        df, bin_col, id_col, "width INT, height INT, channels INT", decode_one
+    )
 
 
 def sample_frames_stub(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
@@ -131,28 +228,17 @@ def sample_frames_stub(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     replaces ``frames_of`` with a decoder loop (pyav/ffmpeg) yielding
     actual frame tensors/bytes.
     """
-    schema = f"{id_col} LONG, frame_idx INT, frame_hash STRING"
+    def frames_of(raw: bytes) -> list[tuple]:
+        # >>> real frame decoder plugs in here <<<
+        hexstr = raw.hex().upper()
+        return [
+            (i, hashlib.md5(f"{hexstr}:{i}".encode()).hexdigest())
+            for i in range(1, len(raw) % 5 + 2)
+        ]
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def frames_of(raw: bytes) -> list[tuple[int, str]]:
-            # >>> real frame decoder plugs in here <<<
-            hexstr = raw.hex().upper()
-            n = len(raw) % 5 + 1
-            return [
-                (i, hashlib.md5(f"{hexstr}:{i}".encode()).hexdigest())
-                for i in range(1, n + 1)
-            ]
-
-        for batch in batches:
-            ids, idxs, hashes = [], [], []
-            for doc_id, raw in zip(batch[id_col], batch[bin_col]):
-                for i, h in frames_of(raw):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(h)
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame_hash": hashes})
-
-    return df.select(id_col, bin_col).mapInPandas(sample, schema)
+    return _per_payload(
+        df, bin_col, id_col, "frame_idx INT, frame_hash STRING", frames_of
+    )
 
 
 def resize_image_stub(
@@ -168,40 +254,24 @@ def resize_image_stub(
     real bytes. Output: id, ``src_w``, ``src_h``, ``out_w``,
     ``out_h``, ``resized_hash``.
     """
-    schema = (
-        f"{id_col} LONG, src_w INT, src_h INT, out_w INT, out_h INT, "
-        "resized_hash STRING"
+    def resize_one(raw: bytes) -> list[tuple]:
+        # >>> real decoder+resampler plugs in here (PIL/libvips) <<<
+        w, h, _ = _fake_dims(len(raw))
+        scale = min(1.0, target / max(w, h))
+        # floor(x + 0.5), not round(): Python rounds half-to-even,
+        # SQL half-away — they disagree on exact .5 products
+        ow = max(1, int(w * scale + 0.5))
+        oh = max(1, int(h * scale + 0.5))
+        tag = hashlib.md5(f"{raw.hex().upper()}:{ow}x{oh}".encode()).hexdigest()
+        return [(w, h, ow, oh, tag)]
+
+    return _per_payload(
+        df,
+        bin_col,
+        id_col,
+        "src_w INT, src_h INT, out_w INT, out_h INT, resized_hash STRING",
+        resize_one,
     )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def resize_one(raw: bytes) -> tuple[int, int, int, int, str]:
-            # >>> real decoder+resampler plugs in here (PIL/libvips) <<<
-            w, h, _ = _fake_dims(len(raw))
-            longest = max(w, h)
-            scale = min(1.0, target / longest)
-            # floor(x + 0.5), not round(): Python rounds half-to-even,
-            # SQL half-away — they disagree on exact .5 products
-            ow = max(1, int(w * scale + 0.5))
-            oh = max(1, int(h * scale + 0.5))
-            tag = hashlib.md5(
-                f"{raw.hex().upper()}:{ow}x{oh}".encode()
-            ).hexdigest()
-            return (w, h, ow, oh, tag)
-
-        for batch in batches:
-            out = [resize_one(raw) for raw in batch[bin_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: batch[id_col],
-                    "src_w": [o[0] for o in out],
-                    "src_h": [o[1] for o in out],
-                    "out_w": [o[2] for o in out],
-                    "out_h": [o[3] for o in out],
-                    "resized_hash": [o[4] for o in out],
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(resize, schema)
 
 
 def decode_resize_ppm(
@@ -211,137 +281,73 @@ def decode_resize_ppm(
     numpy and nearest-neighbor resize to fit a ``target`` x ``target``
     box (never upscaling).
 
-    This is the one genuinely-exercised codec path: the header
-    (``P6\\n<w> <h>\\n<maxval>\\n``) is parsed from the payload bytes,
-    the pixel buffer is ``np.frombuffer``-ed and reshaped, and the
-    resample picks source pixel ``(y*h//oh, x*w//ow)`` — integer
-    arithmetic, so any engine reproduces it exactly. Output is the
-    gate-comparable exploded pixel form ``(id, y, x, r, g, b)``.
-
-    Same Arrow ``mapInPandas`` contract as the stubbed codecs —
-    payload bytes stay in the scan partition, fan-out happens inside
-    the kernel, nothing shuffles.
+    The header (``P6\\n<w> <h>\\n<maxval>\\n``) is parsed from the
+    payload bytes, the pixel buffer is ``np.frombuffer``-ed and
+    reshaped, and the resample picks source pixel ``(y*h//oh,
+    x*w//ow)`` — integer arithmetic, so any engine reproduces it
+    exactly. Output is the gate-comparable exploded pixel form
+    ``(id, y, x, r, g, b)``, fanned out inside :func:`_per_payload`.
     """
-    schema = f"{id_col} LONG, y INT, x INT, r INT, g INT, b INT"
+    def one(raw: bytes) -> list[tuple]:
+        if raw[:2] != b"P6":
+            raise ValueError("not a P6 PPM payload")
+        idx, tokens = 2, []
+        while len(tokens) < 3:
+            while raw[idx : idx + 1].isspace():
+                idx += 1
+            start = idx
+            while not raw[idx : idx + 1].isspace():
+                idx += 1
+            tokens.append(int(raw[start:idx]))
+        idx += 1  # the single whitespace byte after maxval
+        w, h, _maxval = tokens
+        arr = np.frombuffer(
+            raw, dtype=np.uint8, count=w * h * 3, offset=idx
+        ).reshape(h, w, 3)
+        scale = min(1.0, target / max(w, h))
+        # floor(x + 0.5): SQL-compatible half-away rounding
+        ow = max(1, int(w * scale + 0.5))
+        oh = max(1, int(h * scale + 0.5))
+        out = arr[np.ix_((np.arange(oh) * h) // oh, (np.arange(ow) * w) // ow)]
+        return [
+            (y, x, *(int(v) for v in out[y, x]))
+            for y in range(oh)
+            for x in range(ow)
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(doc_id, raw: bytes):
-            if raw[:2] != b"P6":
-                raise ValueError("not a P6 PPM payload")
-            idx, tokens = 2, []
-            while len(tokens) < 3:
-                while raw[idx : idx + 1].isspace():
-                    idx += 1
-                start = idx
-                while not raw[idx : idx + 1].isspace():
-                    idx += 1
-                tokens.append(int(raw[start:idx]))
-            idx += 1  # the single whitespace byte after maxval
-            w, h, _maxval = tokens
-            arr = np.frombuffer(
-                raw, dtype=np.uint8, count=w * h * 3, offset=idx
-            ).reshape(h, w, 3)
-            scale = min(1.0, target / max(w, h))
-            # floor(x + 0.5): SQL-compatible half-away rounding
-            ow = max(1, int(w * scale + 0.5))
-            oh = max(1, int(h * scale + 0.5))
-            out = arr[np.ix_((np.arange(oh) * h) // oh, (np.arange(ow) * w) // ow)]
-            for y in range(oh):
-                for x in range(ow):
-                    r, g, b = out[y, x]
-                    yield (doc_id, y, x, int(r), int(g), int(b))
-
-        for batch in batches:
-            rows = [
-                row
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-                for row in one(doc_id, raw)
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "y", "x", "r", "g", "b"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _per_payload(
+        df, bin_col, id_col, "y INT, x INT, r INT, g INT, b INT", one
+    )
 
 
 def decode_wav_features(
     df: DataFrame, bin_col: str, id_col: str
 ) -> DataFrame:
     """REAL audio decoder (no stub): parse binary RIFF/WAVE PCM16
-    payloads and extract per-clip signal features.
-
-    A genuine chunk walk — verify the ``RIFF``/``WAVE`` magics, then
-    iterate ``<id, size, body>`` chunks (word-aligned, unknown chunks
-    skipped) to find ``fmt `` (sample rate, PCM check) and ``data``
-    (``np.frombuffer('<i2')``). Features: sample count, peak
-    amplitude, strict zero crossings (``s[i]*s[i+1] < 0``), and RMS
-    with SQL-compatible half-away rounding (``floor(x*1e4 + 0.5)``,
-    never Python's half-even ``round``).
-
-    Same Arrow ``mapInPandas`` contract as every codec stage: payload
-    bytes stay in the scan partition, one output row per clip,
-    nothing shuffles.
+    payloads (:func:`_wav_pcm16`) and extract per-clip signal
+    features: sample count, peak amplitude, strict zero crossings
+    (``s[i]*s[i+1] < 0``), and RMS with SQL-compatible half-away
+    rounding (``floor(x*1e4 + 0.5)``, never Python's half-even
+    ``round``). One output row per clip.
     """
-    schema = (
-        f"{id_col} LONG, sample_rate INT, n_samples LONG, "
-        "peak LONG, n_cross LONG, rms DOUBLE"
+    def one(raw: bytes) -> list[tuple]:
+        rate, s = _wav_pcm16(raw)
+        rms = math.sqrt(float(np.mean(s * s)))
+        return [(
+            int(rate),
+            len(s),
+            int(np.max(np.abs(s))),
+            int(np.sum(s[:-1] * s[1:] < 0)),
+            math.floor(rms * 10000 + 0.5) / 10000,
+        )]
+
+    return _per_payload(
+        df,
+        bin_col,
+        id_col,
+        "sample_rate INT, n_samples LONG, peak LONG, n_cross LONG, rms DOUBLE",
+        one,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        import struct
-
-        import numpy as np
-
-        def one(raw: bytes):
-            if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            pos, rate, data = 12, None, None
-            while pos + 8 <= len(raw):
-                cid = raw[pos : pos + 4]
-                (size,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
-                if pos + 8 + size > len(raw):
-                    raise ValueError(
-                        f"chunk {cid!r} declares {size} bytes past end of payload"
-                    )
-                body = raw[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    fmt, _nch, rate, _br, _ba, bits = struct.unpack(
-                        "<HHIIHH", body[:16]
-                    )
-                    if fmt != 1 or bits != 16:
-                        raise ValueError("only PCM16 supported")
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)  # chunks are word-aligned
-            if rate is None or data is None:
-                raise ValueError("missing fmt /data chunk")
-            s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-            rms = math.sqrt(float(np.mean(s * s)))
-            return (
-                int(rate),
-                len(s),
-                int(np.max(np.abs(s))),
-                int(np.sum(s[:-1] * s[1:] < 0)),
-                math.floor(rms * 10000 + 0.5) / 10000,
-            )
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sample_rate", "n_samples",
-                    "peak", "n_cross", "rms",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
 
 
 def extract_features_stub(
@@ -353,109 +359,67 @@ def extract_features_stub(
 
     STUB: component ``pos`` is the md5-derived 32-bit hash of
     (hex payload, pos) scaled into [0, 1) and rounded — deterministic
-    and SQL-recomputable. A real deployment replaces ``feature_one``
+    and SQL-recomputable. A real deployment replaces ``features_of``
     with an image/audio embedding model over the decoded tensor; the
     Spark-side contract (one vector row fan-out per payload, Arrow
     batches, downstream ANN-ready) is unchanged.
     """
-    schema = f"{id_col} LONG, pos INT, fval DOUBLE"
+    def features_of(raw: bytes) -> list[tuple]:
+        # >>> real embedding model plugs in here <<<
+        hexstr = raw.hex().upper()
+        tags = [hashlib.md5(f"{hexstr}:{p}".encode()).hexdigest() for p in range(dim)]
+        return [(p, round(int(t[:8], 16) / 4294967296.0, 6)) for p, t in enumerate(tags)]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def feature_one(raw: bytes, pos: int) -> float:
-            # >>> real embedding model plugs in here <<<
-            h = int(
-                hashlib.md5(f"{raw.hex().upper()}:{pos}".encode()).hexdigest()[:8],
-                16,
-            )
-            return round(h / 4294967296.0, 6)
+    return _per_payload(df, bin_col, id_col, "pos INT, fval DOUBLE", features_of)
 
-        for batch in batches:
-            ids, poss, vals = [], [], []
-            for doc_id, raw in zip(batch[id_col], batch[bin_col]):
-                for p in range(dim):
-                    ids.append(doc_id)
-                    poss.append(p)
-                    vals.append(feature_one(raw, p))
-            yield pd.DataFrame({id_col: ids, "pos": poss, "fval": vals})
 
-    return df.select(id_col, bin_col).mapInPandas(extract, schema)
+def bmp_decode_rgb(raw: bytes):
+    """REAL BMP decoder (the container-format image flavor):
+    BITMAPFILEHEADER magic + data offset, BITMAPINFOHEADER geometry
+    (24-bit BI_RGB only), then the pixel array honoring the two
+    details every naive reader gets wrong: rows are stored BOTTOM-UP
+    and padded to 4-byte boundaries, pixels are BGR. Returns an
+    (h, w, 3) uint8 RGB array, top-down, the shape
+    ``png_``/``gif_``/``jpeg_decode_rgb`` return. Malformed payloads
+    (bad magic, short header, non-24-bit, compressed, top-down or
+    degenerate, truncated pixel array) raise ``ValueError`` instead of
+    yielding silent garbage."""
+    if raw[:2] != b"BM":
+        raise ValueError("not a BMP payload")
+    if len(raw) < 54:
+        raise ValueError("truncated BMP header")
+    (data_off,) = struct.unpack("<I", raw[10:14])
+    width, height = struct.unpack("<ii", raw[18:26])
+    (bpp,) = struct.unpack("<H", raw[28:30])
+    (comp,) = struct.unpack("<I", raw[30:34])
+    if bpp != 24 or comp != 0:
+        raise ValueError("only 24-bit BI_RGB supported")
+    if width <= 0 or height <= 0:
+        raise ValueError("top-down/degenerate BMP not supported")
+    stride = (width * 3 + 3) // 4 * 4
+    end = data_off + stride * height
+    if end > len(raw):
+        raise ValueError("pixel array exceeds payload")
+    arr = np.frombuffer(raw[data_off:end], dtype=np.uint8).reshape(height, stride)
+    # strip row padding, flip bottom-up -> top-down, BGR -> RGB
+    return arr[:, : width * 3].reshape(height, width, 3)[::-1, :, ::-1]
 
 
 def decode_bmp_features(
     df: DataFrame, bin_col: str, id_col: str
 ) -> DataFrame:
-    """Third REAL codec (image, container-format flavor): genuine BMP
-    parsing — BITMAPFILEHEADER magic + data offset, BITMAPINFOHEADER
-    geometry (24-bit BI_RGB only), then the pixel array honoring the
-    two details every naive reader gets wrong: rows are stored
-    BOTTOM-UP and padded to 4-byte boundaries, pixels are BGR.
-
-    Output per image (all exact ints, oracle-checkable):
+    """Third REAL codec (image, container-format flavor):
+    :func:`bmp_decode_rgb` per payload, then the exact-integer image
+    feature row (all ints, oracle-checkable):
     ``id, width, height, n_pixels, sum_r, sum_g, sum_b, top_left``
     where ``top_left`` encodes the top-left pixel as r·65536 + g·256
     + b — a wrong row flip or channel order flips it immediately.
-
-    Same Arrow ``mapInPandas`` contract as every codec stage: payload
-    bytes stay in the scan partition, one output row per image,
-    nothing shuffles. Malformed payloads (bad magic, non-24-bit,
-    compressed, truncated pixel array) raise instead of yielding
-    silent garbage.
+    Malformed payloads raise instead of yielding silent garbage.
     """
-    schema = (
-        f"{id_col} LONG, width INT, height INT, n_pixels LONG, "
-        "sum_r LONG, sum_g LONG, sum_b LONG, top_left LONG"
+    return _per_payload(
+        df, bin_col, id_col, _RGB_FEATURES,
+        lambda raw: _rgb_features(bmp_decode_rgb(raw)),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def one(raw: bytes):
-            if raw[:2] != b"BM":
-                raise ValueError("not a BMP payload")
-            if len(raw) < 54:
-                raise ValueError("truncated BMP header")
-            (data_off,) = struct.unpack("<I", raw[10:14])
-            width, height = struct.unpack("<ii", raw[18:26])
-            (bpp,) = struct.unpack("<H", raw[28:30])
-            (comp,) = struct.unpack("<I", raw[30:34])
-            if bpp != 24 or comp != 0:
-                raise ValueError("only 24-bit BI_RGB supported")
-            if width <= 0 or height <= 0:
-                raise ValueError("top-down/degenerate BMP not supported")
-            stride = (width * 3 + 3) // 4 * 4
-            end = data_off + stride * height
-            if end > len(raw):
-                raise ValueError("pixel array exceeds payload")
-            arr = np.frombuffer(raw[data_off:end], dtype=np.uint8).reshape(
-                height, stride
-            )
-            # strip row padding, split BGR, flip bottom-up -> top-down
-            pix = arr[:, : width * 3].reshape(height, width, 3)[::-1]
-            b = pix[..., 0].astype(np.int64)
-            g = pix[..., 1].astype(np.int64)
-            r = pix[..., 2].astype(np.int64)
-            top_left = int(r[0, 0]) * 65536 + int(g[0, 0]) * 256 + int(b[0, 0])
-            return (
-                width, height, width * height,
-                int(r.sum()), int(g.sum()), int(b.sum()), top_left,
-            )
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "top_left",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
 
 
 def bmp_ahash(
@@ -470,61 +434,16 @@ def bmp_ahash(
     SimHash path uses (`operators/dedup.py` `simhash_near_pairs`
     shape) for image dedup at corpus scale.
 
-    Integer-exact cross-engine contract: cell luminance is the raw
-    channel sum r+g+b (no /3) at the sampled pixel
-    (gx·w // grid, gy·h // grid), and the mean threshold is the
+    Integer-exact cross-engine contract (:func:`_ahash`): cell
+    luminance is the raw channel sum r+g+b (no /3) at the sampled
+    pixel (gx·w // grid, gy·h // grid), and the mean threshold is the
     division-free comparison ``grid²·gray > Σgray`` — no floats
     anywhere, so the oracle reproduces every bit. Default grid=6
     (36 bits) keeps the hash far from BIGINT's sign bit.
 
     Output: ``id``, ``width``, ``height``, ``ahash``.
     """
-    if grid * grid >= 63:
-        raise ValueError(f"grid {grid} overflows a signed-64 hash")
-    schema = f"{id_col} LONG, width INT, height INT, ahash LONG"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def one(raw: bytes):
-            if raw[:2] != b"BM" or len(raw) < 54:
-                raise ValueError("not a BMP payload")
-            (data_off,) = struct.unpack("<I", raw[10:14])
-            width, height = struct.unpack("<ii", raw[18:26])
-            (bpp,) = struct.unpack("<H", raw[28:30])
-            (comp,) = struct.unpack("<I", raw[30:34])
-            if bpp != 24 or comp != 0 or width <= 0 or height <= 0:
-                raise ValueError("only bottom-up 24-bit BI_RGB supported")
-            stride = (width * 3 + 3) // 4 * 4
-            if data_off + stride * height > len(raw):
-                raise ValueError("pixel array exceeds payload")
-            arr = np.frombuffer(
-                raw[data_off : data_off + stride * height], dtype=np.uint8
-            ).reshape(height, stride)
-            pix = arr[:, : width * 3].reshape(height, width, 3)[::-1]
-            gray = pix.astype(np.int64).sum(axis=2)  # r+g+b per pixel
-            gx = np.arange(grid) * width // grid
-            gy = np.arange(grid) * height // grid
-            cells = gray[np.ix_(gy, gx)]  # grid x grid mosaic
-            total = int(cells.sum())
-            bits = (grid * grid * cells > total).astype(np.int64)
-            weights = 1 << np.arange(
-                grid * grid, dtype=np.int64
-            ).reshape(grid, grid)
-            return width, height, int((bits * weights).sum())
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "ahash"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _image_hash_stage(df, bin_col, id_col, bmp_decode_rgb, grid, "ahash")
 
 
 def bmp_dhash(
@@ -537,57 +456,13 @@ def bmp_dhash(
     aHash bits wholesale). Production image-dedup stacks use both:
     candidates from either hash, verify on the pair.
 
-    Same REAL BMP decode and the same integer-exact contract: the
-    mosaic is a nearest-neighbor (grid+1)×grid luminance sample
-    (channel sums, no division) and bit (gy, gx) is the strict
-    comparison gray[gy, gx+1] > gray[gy, gx]. Output: ``id``,
-    ``width``, ``height``, ``dhash`` (grid² bits).
+    Same REAL BMP decode and the same integer-exact contract
+    (:func:`_dhash`): the mosaic is a nearest-neighbor (grid+1)×grid
+    luminance sample (channel sums, no division) and bit (gy, gx) is
+    the strict comparison gray[gy, gx+1] > gray[gy, gx]. Output:
+    ``id``, ``width``, ``height``, ``dhash`` (grid² bits).
     """
-    if grid * grid >= 63:
-        raise ValueError(f"grid {grid} overflows a signed-64 hash")
-    schema = f"{id_col} LONG, width INT, height INT, dhash LONG"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def one(raw: bytes):
-            if raw[:2] != b"BM" or len(raw) < 54:
-                raise ValueError("not a BMP payload")
-            (data_off,) = struct.unpack("<I", raw[10:14])
-            width, height = struct.unpack("<ii", raw[18:26])
-            (bpp,) = struct.unpack("<H", raw[28:30])
-            (comp,) = struct.unpack("<I", raw[30:34])
-            if bpp != 24 or comp != 0 or width <= 0 or height <= 0:
-                raise ValueError("only bottom-up 24-bit BI_RGB supported")
-            stride = (width * 3 + 3) // 4 * 4
-            if data_off + stride * height > len(raw):
-                raise ValueError("pixel array exceeds payload")
-            arr = np.frombuffer(
-                raw[data_off : data_off + stride * height], dtype=np.uint8
-            ).reshape(height, stride)
-            pix = arr[:, : width * 3].reshape(height, width, 3)[::-1]
-            gray = pix.astype(np.int64).sum(axis=2)
-            gx = np.arange(grid + 1) * width // (grid + 1)
-            gy = np.arange(grid) * height // grid
-            cells = gray[np.ix_(gy, gx)]  # grid rows x (grid+1) cols
-            bits = (cells[:, 1:] > cells[:, :-1]).astype(np.int64)
-            weights = 1 << np.arange(
-                grid * grid, dtype=np.int64
-            ).reshape(grid, grid)
-            return width, height, int((bits * weights).sum())
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "dhash"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _image_hash_stage(df, bin_col, id_col, bmp_decode_rgb, grid, "dhash")
 
 
 def _paeth(left: int, up: int, ul: int) -> int:
@@ -611,11 +486,6 @@ def png_encode_rgb(pix, row_filters=None) -> bytes:
 
     Fixture/generator AND a legitimate sink primitive (raw tensor →
     compressed image payload). Pure stdlib ``zlib`` + ``struct``."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     pix = np.asarray(pix, dtype=np.int64)
     h, w, ch = pix.shape
     if ch != 3:
@@ -685,11 +555,6 @@ def png_decode_rgb(raw: bytes):
     oversized pixel stream, unknown filter type — raise
     ``ValueError`` instead of yielding garbage, the same typed-reject
     contract as the WAV/BMP codecs."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if raw[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     pos = 8
@@ -787,40 +652,10 @@ def decode_png_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     Same Arrow ``mapInPandas`` shape as every codec stage: payload
     bytes stay in the scan partition, one output row per image,
     nothing shuffles."""
-    schema = (
-        f"{id_col} LONG, width INT, height INT, n_pixels LONG, "
-        "sum_r LONG, sum_g LONG, sum_b LONG, top_left LONG"
+    return _per_payload(
+        df, bin_col, id_col, _RGB_FEATURES,
+        lambda raw: _rgb_features(png_decode_rgb(raw)),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            pix = png_decode_rgb(raw)
-            h, w, _ = pix.shape
-            r = pix[..., 0].astype(np.int64)
-            g = pix[..., 1].astype(np.int64)
-            b = pix[..., 2].astype(np.int64)
-            top_left = int(r[0, 0]) * 65536 + int(g[0, 0]) * 256 + int(b[0, 0])
-            return (
-                w, h, w * h,
-                int(r.sum()), int(g.sum()), int(b.sum()), top_left,
-            )
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "top_left",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
 
 
 def png_ahash(df: DataFrame, bin_col: str, id_col: str, grid: int = 6) -> DataFrame:
@@ -833,37 +668,7 @@ def png_ahash(df: DataFrame, bin_col: str, id_col: str, grid: int = 6) -> DataFr
     IDENTICAL and feed one shared banded hamming join regardless of
     container format. Output: ``id``, ``width``, ``height``,
     ``ahash``."""
-    if grid * grid >= 63:
-        raise ValueError(f"grid {grid} overflows a signed-64 hash")
-    schema = f"{id_col} LONG, width INT, height INT, ahash LONG"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            pix = png_decode_rgb(raw)
-            height, width, _ = pix.shape
-            gray = pix.astype(np.int64).sum(axis=2)  # r+g+b per pixel
-            gx = np.arange(grid) * width // grid
-            gy = np.arange(grid) * height // grid
-            cells = gray[np.ix_(gy, gx)]
-            total = int(cells.sum())
-            bits = (grid * grid * cells > total).astype(np.int64)
-            weights = 1 << np.arange(
-                grid * grid, dtype=np.int64
-            ).reshape(grid, grid)
-            return width, height, int((bits * weights).sum())
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "ahash"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _image_hash_stage(df, bin_col, id_col, png_decode_rgb, grid, "ahash")
 
 
 def _lzw_compress(indices, min_code_size: int) -> bytes:
@@ -1014,10 +819,6 @@ def gif_encode(indices, palette) -> bytes:
     stream in 255-byte sub-blocks, trailer. ``indices`` is an (h, w)
     array of palette indices; ``palette`` an (n, 3) uint8 array
     (padded to 256 entries)."""
-    import struct
-
-    import numpy as np
-
     idx = np.asarray(indices, dtype=np.int64)
     h, w = idx.shape
     pal = np.zeros((256, 3), dtype=np.uint8)
@@ -1050,10 +851,6 @@ def gif_decode_rgb(raw: bytes):
     image, LZW stream errors, pixel-count mismatch, missing image)
     raise ``ValueError`` — the typed-reject contract of the
     WAV/BMP/PNG codecs."""
-    import struct
-
-    import numpy as np
-
     if raw[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     if len(raw) < 13:
@@ -1137,40 +934,10 @@ def decode_gif_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     sub-block stitch flips a sum. Arrow ``mapInPandas``; payloads
     stay in the scan partition, one row per image, nothing
     shuffles."""
-    schema = (
-        f"{id_col} LONG, width INT, height INT, n_pixels LONG, "
-        "sum_r LONG, sum_g LONG, sum_b LONG, top_left LONG"
+    return _per_payload(
+        df, bin_col, id_col, _RGB_FEATURES,
+        lambda raw: _rgb_features(gif_decode_rgb(raw)),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            pix = gif_decode_rgb(raw)
-            h, w, _ = pix.shape
-            r = pix[..., 0].astype(np.int64)
-            g = pix[..., 1].astype(np.int64)
-            b = pix[..., 2].astype(np.int64)
-            top_left = int(r[0, 0]) * 65536 + int(g[0, 0]) * 256 + int(b[0, 0])
-            return (
-                w, h, w * h,
-                int(r.sum()), int(g.sum()), int(b.sum()), top_left,
-            )
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "top_left",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
 
 
 def gif_ahash(df: DataFrame, bin_col: str, id_col: str, grid: int = 6) -> DataFrame:
@@ -1181,47 +948,16 @@ def gif_ahash(df: DataFrame, bin_col: str, id_col: str, grid: int = 6) -> DataFr
     fingerprints regardless of container, so ONE banded hamming index
     serves a mixed BMP/PNG/GIF corpus. Output: ``id``, ``width``,
     ``height``, ``ahash``."""
-    if grid * grid >= 63:
-        raise ValueError(f"grid {grid} overflows a signed-64 hash")
-    schema = f"{id_col} LONG, width INT, height INT, ahash LONG"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            pix = gif_decode_rgb(raw)
-            height, width, _ = pix.shape
-            gray = pix.astype(np.int64).sum(axis=2)
-            gx = np.arange(grid) * width // grid
-            gy = np.arange(grid) * height // grid
-            cells = gray[np.ix_(gy, gx)]
-            total = int(cells.sum())
-            bits = (grid * grid * cells > total).astype(np.int64)
-            weights = 1 << np.arange(
-                grid * grid, dtype=np.int64
-            ).reshape(grid, grid)
-            return width, height, int((bits * weights).sum())
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "ahash"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _image_hash_stage(df, bin_col, id_col, gif_decode_rgb, grid, "ahash")
 
 
 def _wav_pcm16(raw: bytes):
-    """Shared RIFF/WAVE PCM16 walk (the `decode_wav_features`
-    contract): returns (sample_rate, int64 numpy samples); typed
-    ValueError on malformed payloads."""
-    import struct
-
-    import numpy as np
-
+    """The RIFF/WAVE PCM16 decoder behind :func:`decode_wav_features`
+    and :func:`wav_goertzel_hash`: verify the ``RIFF``/``WAVE``
+    magics, then iterate ``<id, size, body>`` chunks (word-aligned,
+    unknown chunks skipped) to find ``fmt `` (sample rate, PCM check)
+    and ``data`` (``np.frombuffer('<i2')``). Returns (sample_rate,
+    int64 numpy samples); typed ValueError on malformed payloads."""
     if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, rate, data = 12, None, None
@@ -1261,8 +997,6 @@ def goertzel_tables(
     function feeds the Arrow kernel and the oracle's literal VALUES
     list). ``scale`` = 1000 keeps the worst-case energy (16 taps ·
     32768 amplitude · scale)² · 2 ≈ 5.5e17 inside int64."""
-    import math
-
     out = []
     for k in range(1, bands + 1):
         for i in range(frame):
@@ -1300,8 +1034,6 @@ def wav_goertzel_hash(
 
     Output: ``id``, ``sample_rate``, ``n_samples``, ``ahash``.
     """
-    import numpy as np
-
     tabs = goertzel_tables(frame, bands, scale)
     cmat = np.zeros((bands, frame), dtype=np.int64)
     smat = np.zeros((bands, frame), dtype=np.int64)
@@ -1309,36 +1041,23 @@ def wav_goertzel_hash(
         cmat[k - 1, i] = c
         smat[k - 1, i] = s
     need = frames * frame
-    schema = f"{id_col} LONG, sample_rate INT, n_samples LONG, ahash LONG"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(raw: bytes):
-            rate, x = _wav_pcm16(raw)
-            if len(x) < need:
-                raise ValueError(
-                    f"clip has {len(x)} samples, fingerprint needs {need}"
-                )
-            xs = x[:need].reshape(frames, frame)
-            cc = xs @ cmat.T  # (frames, bands) exact int64
-            ss = xs @ smat.T
-            e = cc * cc + ss * ss
-            bits = (e[1:] > e[:-1]).astype(np.int64)  # (frames-1, bands)
-            idx = np.arange((frames - 1) * bands, dtype=np.int64).reshape(
-                frames - 1, bands
+    def one(raw: bytes) -> list[tuple]:
+        rate, x = _wav_pcm16(raw)
+        if len(x) < need:
+            raise ValueError(
+                f"clip has {len(x)} samples, fingerprint needs {need}"
             )
-            return rate, len(x), int((bits << idx).sum())
+        xs = x[:need].reshape(frames, frame)
+        cc = xs @ cmat.T  # (frames, bands) exact int64
+        ss = xs @ smat.T
+        e = cc * cc + ss * ss
+        # bit (f, k): band k's energy rose from frame f to f + 1
+        return [(rate, len(x), _pack_bits(e[1:] > e[:-1]))]
 
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_rate", "n_samples", "ahash"],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _per_payload(
+        df, bin_col, id_col, "sample_rate INT, n_samples LONG, ahash LONG", one
+    )
 
 
 def y4m_encode(frames) -> bytes:
@@ -1347,8 +1066,6 @@ def y4m_encode(frames) -> bytes:
     frame a ``FRAME\\n`` marker + planar YUV420 data (full-res Y,
     quarter-res U and V fixed at neutral 128). ``frames`` is a
     (n, h, w) uint8 luminance array."""
-    import numpy as np
-
     fr = np.asarray(frames, dtype=np.uint8)
     n, h, w = fr.shape
     if h % 2 or w % 2:
@@ -1372,8 +1089,6 @@ def y4m_decode(raw: bytes):
     — bad magic, missing W/H, odd dims, non-420 colorspace, bad frame
     marker, truncated planes, zero frames — raises a typed
     ValueError rather than yielding garbage."""
-    import numpy as np
-
     nl = raw.find(b"\n")
     if nl < 0 or not raw.startswith(b"YUV4MPEG2"):
         raise ValueError("not a YUV4MPEG2 payload")
@@ -1409,8 +1124,6 @@ def y4m_decode(raw: bytes):
         pos += ysize + 2 * csize
     if not frames:
         raise ValueError("stream contains no frames")
-    import numpy as np
-
     return np.stack(frames)
 
 
@@ -1421,38 +1134,23 @@ def y4m_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     contract as the image codecs, so the oracle checks every decoded
     byte analytically. Output: ``id, width, height, n_frames,
     sum_y, first_tl, last_tl``."""
-    schema = (
-        f"{id_col} LONG, width INT, height INT, n_frames INT, "
-        "sum_y LONG, first_tl INT, last_tl INT"
+    def one(raw: bytes) -> list[tuple]:
+        fr = y4m_decode(raw)
+        n, h, w = fr.shape
+        return [(
+            w, h, n,
+            int(fr.astype(np.int64).sum()),
+            int(fr[0, 0, 0]),
+            int(fr[-1, 0, 0]),
+        )]
+
+    return _per_payload(
+        df,
+        bin_col,
+        id_col,
+        "width INT, height INT, n_frames INT, sum_y LONG, first_tl INT, last_tl INT",
+        one,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            fr = y4m_decode(raw)
-            n, h, w = fr.shape
-            return (
-                w, h, n,
-                int(fr.astype(np.int64).sum()),
-                int(fr[0, 0, 0]),
-                int(fr[-1, 0, 0]),
-            )
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "n_frames",
-                    "sum_y", "first_tl", "last_tl",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
 
 
 def y4m_video_hash(
@@ -1466,38 +1164,14 @@ def y4m_video_hash(
     frames × grid 2, feeding the SAME banded hamming join as text /
     image / audio fingerprints: one index design, four modalities.
     Output: ``id``, ``n_frames``, ``vhash``."""
-    schema = f"{id_col} LONG, n_frames INT, vhash LONG"
+    def one(raw: bytes) -> list[tuple]:
+        fr = y4m_decode(raw).astype(np.int64)
+        n = fr.shape[0]
+        if n * grid * grid >= 63:
+            raise ValueError("video hash overflows a signed-64 int")
+        return [(n, _ahash(fr, grid))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            fr = y4m_decode(raw).astype(np.int64)
-            n, h, w = fr.shape
-            if n * grid * grid >= 63:
-                raise ValueError("video hash overflows a signed-64 int")
-            gx = np.arange(grid) * w // grid
-            gy = np.arange(grid) * h // grid
-            cells = fr[np.ix_(range(n), gy, gx)]  # (n, grid, grid)
-            tot = cells.reshape(n, -1).sum(axis=1)  # per-frame sum
-            bits = (
-                grid * grid * cells > tot[:, None, None]
-            ).astype(np.int64)
-            idx = np.arange(n * grid * grid, dtype=np.int64).reshape(
-                n, grid, grid
-            )
-            return n, int((bits << idx).sum())
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_frames", "vhash"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _per_payload(df, bin_col, id_col, "n_frames INT, vhash LONG", one)
 
 
 # ---------------------------------------------------------------------------
@@ -1519,10 +1193,6 @@ def _dct_matrix():
     Tᵀ·F·T. For a constant block the only nonzero coefficient is
     DC = 8·(v−128) up to ~1e-13 float error, which integer rounding
     absorbs — the exactness property the fixtures lean on."""
-    import math
-
-    import numpy as np
-
     t = np.zeros((8, 8))
     for u in range(8):
         c = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
@@ -1573,10 +1243,6 @@ def jpeg_encode_rgb(pix, quant=None) -> bytes:
     self-declared Huffman tables, DC diff coding, AC run-length with
     EOB/ZRL, and 0xFF byte stuffing. Fixture generator AND a
     legitimate sink primitive, like ``png_encode_rgb``."""
-    import struct
-
-    import numpy as np
-
     pix = np.asarray(pix, dtype=np.float64)
     h, w, ch = pix.shape
     if ch != 3 or h % 8 or w % 8:
@@ -1710,10 +1376,6 @@ def jpeg_decode_rgb(raw: bytes):
     within a couple of grey levels for arbitrary images (float DCT +
     integer quantization are the only loss sources at q=1).
     """
-    import struct
-
-    import numpy as np
-
     if raw[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2
@@ -1920,40 +1582,10 @@ def decode_jpeg_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     Same Arrow ``mapInPandas`` shape as every codec stage: payload
     bytes stay in the scan partition, one output row per image,
     nothing shuffles."""
-    schema = (
-        f"{id_col} LONG, width INT, height INT, n_pixels LONG, "
-        "sum_r LONG, sum_g LONG, sum_b LONG, top_left LONG"
+    return _per_payload(
+        df, bin_col, id_col, _RGB_FEATURES,
+        lambda raw: _rgb_features(jpeg_decode_rgb(raw)),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            pix = jpeg_decode_rgb(raw)
-            h, w, _ = pix.shape
-            r = pix[..., 0].astype(np.int64)
-            g = pix[..., 1].astype(np.int64)
-            b = pix[..., 2].astype(np.int64)
-            top_left = int(r[0, 0]) * 65536 + int(g[0, 0]) * 256 + int(b[0, 0])
-            return (
-                w, h, w * h,
-                int(r.sum()), int(g.sum()), int(b.sum()), top_left,
-            )
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "top_left",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
 
 
 def jpeg_ahash(df: DataFrame, bin_col: str, id_col: str, grid: int = 6) -> DataFrame:
@@ -1964,34 +1596,4 @@ def jpeg_ahash(df: DataFrame, bin_col: str, id_col: str, grid: int = 6) -> DataF
     JPEG, PNG, GIF, or BMP of identical pixels produces the IDENTICAL
     fingerprint and all four containers feed one shared banded
     hamming join. Output: ``id``, ``width``, ``height``, ``ahash``."""
-    if grid * grid >= 63:
-        raise ValueError(f"grid {grid} overflows a signed-64 hash")
-    schema = f"{id_col} LONG, width INT, height INT, ahash LONG"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def one(raw: bytes):
-            pix = jpeg_decode_rgb(raw)
-            height, width, _ = pix.shape
-            gray = pix.astype(np.int64).sum(axis=2)
-            gx = np.arange(grid) * width // grid
-            gy = np.arange(grid) * height // grid
-            cells = gray[np.ix_(gy, gx)]
-            total = int(cells.sum())
-            bits = (grid * grid * cells > total).astype(np.int64)
-            weights = 1 << np.arange(
-                grid * grid, dtype=np.int64
-            ).reshape(grid, grid)
-            return width, height, int((bits * weights).sum())
-
-        for batch in batches:
-            rows = [
-                (doc_id, *one(raw))
-                for doc_id, raw in zip(batch[id_col], batch[bin_col])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "ahash"]
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(run, schema)
+    return _image_hash_stage(df, bin_col, id_col, jpeg_decode_rgb, grid, "ahash")

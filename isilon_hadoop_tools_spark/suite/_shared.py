@@ -13,9 +13,12 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Optional
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from isilon_hadoop_tools_spark import multimodal as M
 from isilon_hadoop_tools_spark.functions.hashing import (
     stable_hash32,
     stable_hash32_sql,
@@ -1724,43 +1727,34 @@ def _le_hex(col, nbytes: int):
     )
 
 
-def _wav_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _wav_payload_df(
+    spark: SparkSession,
+    sf_dir: str,
+    base_mod: int | None = None,
+    n_samples: int | None = None,
+) -> DataFrame:
     """Per-document RIFF/WAVE PCM16 payloads as REAL binary: a full
     44-byte canonical header (RIFF size, fmt chunk with rate 8000,
-    mono, 16-bit, data chunk size) followed by n = doc_id%16+4
-    deterministic int16 samples ((doc_id*17 + i*13) % 65536, two's
-    complement) — built entirely with JVM expressions (hex/unhex),
-    no UDF."""
+    mono, 16-bit, data chunk size) followed by n deterministic int16
+    samples ((base*17 + i*13) % 65536, two's complement) — built
+    entirely with JVM expressions (hex/unhex), no UDF. By default
+    n = doc_id%16+4 and base = doc_id. The fingerprint fixture passes
+    ``n_samples`` (144 = 9 Goertzel frames) and ``base_mod``
+    (base = doc_id % base_mod): docs sharing a base get
+    BYTE-IDENTICAL audio (the audio-dedup fixture)."""
     docs = _doc_ids(spark, sf_dir)
-    n = (F.pmod("doc_id", F.lit(16)) + F.lit(4)).cast("long")
+    base = (
+        F.pmod("doc_id", F.lit(base_mod)) if base_mod else F.col("doc_id")
+    ).cast("long")
+    n = (
+        F.lit(n_samples) if n_samples else F.pmod("doc_id", F.lit(16)) + F.lit(4)
+    ).cast("long")
     ds = n * 2
     sample_hex = F.array_join(
         F.transform(
             F.sequence(F.lit(0), (n - 1).cast("int")),
-            lambda p: F.concat(
-                F.lpad(
-                    F.hex(
-                        F.pmod(
-                            F.col("doc_id") * 17 + p.cast("long") * 13,
-                            F.lit(65536),
-                        ).bitwiseAND(F.lit(255))
-                    ),
-                    2,
-                    "0",
-                ),
-                F.lpad(
-                    F.hex(
-                        F.shiftright(
-                            F.pmod(
-                                F.col("doc_id") * 17 + p.cast("long") * 13,
-                                F.lit(65536),
-                            ),
-                            8,
-                        ).bitwiseAND(F.lit(255))
-                    ),
-                    2,
-                    "0",
-                ),
+            lambda p: _le_hex(
+                F.pmod(base * 17 + p.cast("long") * 13, F.lit(65536)), 2
             ),
         ),
         "",
@@ -1781,77 +1775,77 @@ def _wav_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", payload.alias("payload"))
 
 
+def _encoded_payload_df(
+    spark: SparkSession, sf_dir: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """The one Arrow encode stage behind the codec fixtures that need
+    a real ``multimodal`` encoder (compression, like LZW, zlib or DCT,
+    is not expressible as JVM column expressions, unlike the BMP, WAV
+    and PPM fixtures): ``encode(doc_id)`` returns one document's
+    payload. It runs over :func:`_doc_ids`, so synthesis runs at
+    shuffle width."""
+    def gen(batches):
+        for batch in batches:
+            payloads = [encode(int(doc_id)) for doc_id in batch["doc_id"]]
+            yield pd.DataFrame({"doc_id": batch["doc_id"], "payload": payloads})
+
+    return _doc_ids(spark, sf_dir).mapInPandas(gen, "doc_id LONG, payload BINARY")
+
+
+def _base(doc_id: int, base_mod: int | None) -> int:
+    """A fixture's pixel/sample key: doc_id, or doc_id % base_mod when
+    set — the duplicate knob (docs sharing a base get byte-identical
+    content)."""
+    return doc_id % base_mod if base_mod else doc_id
+
+
+def _linear_rgb(base: int, w: int, h: int):
+    """The BMP fixture's pixel model as an (h, w, 3) RGB array:
+    channels linear in (base, x, y), so the oracle recomputes every
+    decoded feature analytically."""
+    y, x = np.mgrid[0:h, 0:w]
+    return np.stack(
+        [
+            (base + 3 * x + 7 * y) % 256,
+            (base * 2 + 5 * x + 11 * y) % 256,
+            (base * 3 + 13 * x + 17 * y) % 256,
+        ],
+        axis=-1,
+    )
+
+
+def _block_gray(base: int):
+    """BLOCK-CONSTANT GRAY (h, w, 3): dims ``w = 8·(base%3+1),
+    h = 8·(base%2+1)``, 8x8 block (bx, by) filled with ``v = (base +
+    37·bx + 73·by) % 256`` on all three channels — the regime where
+    baseline JPEG under an all-ones quant table round-trips pixels
+    EXACTLY (constant blocks put all energy in the DC coefficient,
+    which quantizes losslessly; gray pixels pin the chroma planes at
+    exactly 128), so the oracle recomputes every decoded byte
+    analytically despite the lossy format."""
+    by, bx = np.mgrid[0 : base % 2 + 1, 0 : base % 3 + 1]
+    v = (base + 37 * bx + 73 * by) % 256
+    pix = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1)
+    return np.stack([pix] * 3, axis=-1)
+
+
 def _y4m_payload_df(
     spark: SparkSession, sf_dir: str, base_mod: int | None = None
 ) -> DataFrame:
     """Per-document REAL YUV4MPEG2 payloads (8x4, 8 frames, C420,
     neutral chroma) written by ``multimodal.y4m_encode``; luminance
     ``Y(f, x, y) = (base + 3x + 7y + 11f) % 256`` so the oracle
-    recomputes every decoded byte analytically. ``base = doc_id %
-    base_mod`` is the duplicate-video knob."""
-    from isilon_hadoop_tools_spark import multimodal as M
+    recomputes every decoded byte analytically. ``base`` is
+    :func:`_base` (the duplicate-video knob)."""
+    y, x = np.mgrid[0:4, 0:8]
 
-    docs = _doc_ids(spark, sf_dir)
-    mod = base_mod
+    def encode(doc_id: int) -> bytes:
+        base = _base(doc_id, base_mod)
+        return M.y4m_encode(
+            np.stack([(base + 3 * x + 7 * y + 11 * f) % 256 for f in range(8)])
+        )
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        y, x = np.mgrid[0:4, 0:8]
-        for batch in batches:
-            payloads = []
-            for doc_id in batch["doc_id"]:
-                base = int(doc_id) % mod if mod else int(doc_id)
-                frames = np.stack(
-                    [(base + 3 * x + 7 * y + 11 * f) % 256 for f in range(8)]
-                ).astype(np.uint8)
-                payloads.append(M.y4m_encode(frames))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(gen, "doc_id LONG, payload BINARY")
-
-
-def _wav_long_payload_df(
-    spark: SparkSession, sf_dir: str, base_mod: int = 200, n_samples: int = 144
-) -> DataFrame:
-    """Fingerprint-length RIFF/WAVE PCM16 payloads: same canonical
-    header and two's-complement sample family as ``_wav_payload_df``
-    but ``n_samples`` fixed at 144 (9 Goertzel frames) and the sample
-    generator keyed on ``base = doc_id % base_mod`` — docs sharing a
-    base get BYTE-IDENTICAL audio (the audio-dedup fixture)."""
-    docs = _doc_ids(spark, sf_dir)
-    base = F.pmod("doc_id", F.lit(base_mod)).cast("long")
-    n = F.lit(n_samples).cast("long")
-    ds = n * 2
-    val = lambda p: F.pmod(base * 17 + p.cast("long") * 13, F.lit(65536))  # noqa: E731
-    sample_hex = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_samples - 1)),
-            lambda p: F.concat(
-                F.lpad(F.hex(val(p).bitwiseAND(F.lit(255))), 2, "0"),
-                F.lpad(
-                    F.hex(F.shiftright(val(p), 8).bitwiseAND(F.lit(255))),
-                    2,
-                    "0",
-                ),
-            ),
-        ),
-        "",
-    )
-    ascii_hex = lambda s: F.hex(F.encode(F.lit(s), "utf-8"))  # noqa: E731
-    header_hex = F.concat(
-        ascii_hex("RIFF"), _le_hex(ds + 36, 4), ascii_hex("WAVE"),
-        ascii_hex("fmt "), _le_hex(F.lit(16), 4),
-        _le_hex(F.lit(1), 2), _le_hex(F.lit(1), 2),
-        _le_hex(F.lit(8000), 4), _le_hex(F.lit(16000), 4),
-        _le_hex(F.lit(2), 2), _le_hex(F.lit(16), 2),
-        ascii_hex("data"), _le_hex(ds, 4),
-    )
-    payload = F.unhex(F.concat(header_hex, sample_hex))
-    return docs.select("doc_id", payload.alias("payload"))
+    return _encoded_payload_df(spark, sf_dir, encode)
 
 
 def _audio_near_dups_oracle(
@@ -1861,10 +1855,8 @@ def _audio_near_dups_oracle(
     (literal VALUES from ``multimodal.goertzel_tables`` — one source
     of constants for both engines), exact-integer energies from the
     analytic sample formula, energy-derivative bits, banded pairs."""
-    from isilon_hadoop_tools_spark.multimodal import goertzel_tables
-
     tabs = ", ".join(
-        f"({k}, {i}, {c}, {s})" for k, i, c, s in goertzel_tables(frame, bands)
+        f"({k}, {i}, {c}, {s})" for k, i, c, s in M.goertzel_tables(frame, bands)
     )
     need = frame * frames
     return f"""
@@ -2589,79 +2581,38 @@ def _bmp_payload_from(
 def _gif_payload_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document REAL GIF87a payloads: logical screen descriptor +
     global 256-color palette + LZW-compressed index stream written by
-    ``multimodal.gif_encode`` in an Arrow ``mapInPandas`` stage.
-    Pixel index at (x, y) is ``(base + 3x + 7y) % 256`` and the
-    palette maps index i to ``(i, 255 - i, (7i + 13) % 256)`` — both
-    analytic, so the oracle recomputes every decoded byte THROUGH the
-    palette indirection without ever seeing the payload."""
-    from isilon_hadoop_tools_spark import multimodal as M
+    ``multimodal.gif_encode``. Pixel index at (x, y) is
+    ``(doc_id + 3x + 7y) % 256`` and the palette maps index i to
+    ``(i, 255 - i, (7i + 13) % 256)`` — both analytic, so the oracle
+    recomputes every decoded byte THROUGH the palette indirection
+    without ever seeing the payload."""
+    i = np.arange(256)
+    pal = np.stack([i, 255 - i, (7 * i + 13) % 256], axis=-1)
 
-    docs = _doc_ids(spark, sf_dir)
+    def encode(doc_id: int) -> bytes:
+        y, x = np.mgrid[0 : doc_id % 4 + 2, 0 : doc_id % 6 + 2]
+        return M.gif_encode((doc_id + 3 * x + 7 * y) % 256, pal)
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(256)
-        pal = np.stack([i, 255 - i, (7 * i + 13) % 256], axis=-1)
-        for batch in batches:
-            payloads = []
-            for doc_id in batch["doc_id"]:
-                base = int(doc_id)
-                w, h = base % 6 + 2, base % 4 + 2
-                y, x = np.mgrid[0:h, 0:w]
-                idx = (base + 3 * x + 7 * y) % 256
-                payloads.append(M.gif_encode(idx, pal))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(gen, "doc_id LONG, payload BINARY")
+    return _encoded_payload_df(spark, sf_dir, encode)
 
 
 def _gif_bmp_twin_payload_df(
     spark: SparkSession, sf_dir: str, base_mod: int = 200
 ) -> DataFrame:
     """GIF payloads carrying EXACTLY the BMP fixture's pixel model
-    (dims ``w = base%5+2, h = base%3+2``, the same linear channel
-    formulas): each tiny image's distinct colors become its palette
-    (≤ 24 ≤ 256 entries, sorted for determinism), so a GIF and a BMP
-    of the same ``base`` decode to byte-identical pixel arrays from
-    byte-DIFFERENT containers — the mixed-corpus dedup fixture."""
-    from isilon_hadoop_tools_spark import multimodal as M
+    (dims ``w = base%5+2, h = base%3+2``, :func:`_linear_rgb`): each
+    tiny image's distinct colors become its palette (≤ 24 ≤ 256
+    entries, sorted for determinism), so a GIF and a BMP of the same
+    ``base`` decode to byte-identical pixel arrays from byte-DIFFERENT
+    containers — the mixed-corpus dedup fixture."""
+    def encode(doc_id: int) -> bytes:
+        base = doc_id % base_mod
+        pix = _linear_rgb(base, base % 5 + 2, base % 3 + 2)
+        # palette sorted lexicographically; idx = each pixel's entry
+        pal, idx = np.unique(pix.reshape(-1, 3), axis=0, return_inverse=True)
+        return M.gif_encode(idx.reshape(pix.shape[:2]), pal)
 
-    docs = _doc_ids(spark, sf_dir)
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for doc_id in batch["doc_id"]:
-                base = int(doc_id) % base_mod
-                w, h = base % 5 + 2, base % 3 + 2
-                y, x = np.mgrid[0:h, 0:w]
-                pix = np.stack(
-                    [
-                        (base + 3 * x + 7 * y) % 256,
-                        (base * 2 + 5 * x + 11 * y) % 256,
-                        (base * 3 + 13 * x + 17 * y) % 256,
-                    ],
-                    axis=-1,
-                )
-                flat = pix.reshape(-1, 3)
-                pal = np.unique(flat, axis=0)  # sorted lexicographically
-                lut = {tuple(c): i for i, c in enumerate(pal)}
-                idx = np.array(
-                    [lut[tuple(c)] for c in flat], dtype=np.int64
-                ).reshape(h, w)
-                payloads.append(M.gif_encode(idx, pal))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(gen, "doc_id LONG, payload BINARY")
+    return _encoded_payload_df(spark, sf_dir, encode)
 
 
 def _png_payload_df(
@@ -2669,45 +2620,19 @@ def _png_payload_df(
 ) -> DataFrame:
     """Per-document REAL PNG payloads: signature + CRC-correct
     IHDR/IDAT/IEND with zlib-compressed scanlines, written by
-    ``multimodal.png_encode_rgb`` in an Arrow ``mapInPandas`` stage
-    (compression is not expressible as JVM column expressions, unlike
-    the BMP fixture). Dimensions w = base%6+2, h = base%4+2; channel
-    formulas are the SAME linear-in-(base, x, y) family as the BMP
-    fixture, so the oracle recomputes every decoded feature
-    analytically; each row y is filtered with type (base + y) % 5,
-    which exercises all five unfilter paths across the corpus.
-    ``base`` is doc_id, or doc_id % base_mod when set (the
-    duplicate-image knob)."""
-    from isilon_hadoop_tools_spark import multimodal as M
+    ``multimodal.png_encode_rgb``. Dimensions w = base%6+2,
+    h = base%4+2; channels are the BMP fixture's
+    :func:`_linear_rgb`, so the oracle recomputes every decoded
+    feature analytically; each row y is filtered with type
+    (base + y) % 5, which exercises all five unfilter paths across the
+    corpus. ``base`` is :func:`_base` (the duplicate-image knob)."""
+    def encode(doc_id: int) -> bytes:
+        base = _base(doc_id, base_mod)
+        h = base % 4 + 2
+        filters = [(base + y) % 5 for y in range(h)]
+        return M.png_encode_rgb(_linear_rgb(base, base % 6 + 2, h), filters)
 
-    docs = _doc_ids(spark, sf_dir)
-    mod = base_mod
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for doc_id in batch["doc_id"]:
-                base = int(doc_id) % mod if mod else int(doc_id)
-                w, h = base % 6 + 2, base % 4 + 2
-                y, x = np.mgrid[0:h, 0:w]
-                pix = np.stack(
-                    [
-                        (base + 3 * x + 7 * y) % 256,
-                        (base * 2 + 5 * x + 11 * y) % 256,
-                        (base * 3 + 13 * x + 17 * y) % 256,
-                    ],
-                    axis=-1,
-                )
-                filters = [(base + yy) % 5 for yy in range(h)]
-                payloads.append(M.png_encode_rgb(pix, filters))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(gen, "doc_id LONG, payload BINARY")
+    return _encoded_payload_df(spark, sf_dir, encode)
 
 
 def _jpeg_payload_df(
@@ -2715,40 +2640,29 @@ def _jpeg_payload_df(
 ) -> DataFrame:
     """Per-document REAL baseline JFIF payloads written by
     ``multimodal.jpeg_encode_rgb`` (markers + canonical DHT + DCT +
-    Huffman entropy coding) in an Arrow ``mapInPandas`` stage. The
-    pixel model is BLOCK-CONSTANT GRAY — dims ``w = 8·(base%3+1),
-    h = 8·(base%2+1)``, 8x8 block (bx, by) filled with ``v = (base +
-    37·bx + 73·by) % 256`` on all three channels — the regime where
-    baseline JPEG under an all-ones quant table round-trips pixels
-    EXACTLY (constant blocks put all energy in the DC coefficient,
-    which quantizes losslessly; gray pixels pin the chroma planes at
-    exactly 128), so the oracle recomputes every decoded byte
-    analytically despite the lossy format. ``base`` is doc_id, or
-    doc_id % base_mod when set (the duplicate-image knob)."""
-    from isilon_hadoop_tools_spark import multimodal as M
+    Huffman entropy coding) over the :func:`_block_gray` pixel model,
+    where baseline JPEG decodes exactly. ``base`` is :func:`_base`
+    (the duplicate-image knob)."""
+    return _encoded_payload_df(
+        spark, sf_dir,
+        lambda doc_id: M.jpeg_encode_rgb(_block_gray(_base(doc_id, base_mod))),
+    )
 
-    docs = _doc_ids(spark, sf_dir)
-    mod = base_mod
 
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
+def _jpeg_png_twin_payload_df(
+    spark: SparkSession, sf_dir: str, base_mod: int = 200
+) -> DataFrame:
+    """Mixed-container payloads over ONE :func:`_block_gray` pixel
+    model (the regime where baseline JPEG decodes exactly): even
+    doc_ids encode as real JPEG, odd as real PNG — byte-different
+    containers (DCT+Huffman vs zlib+filters) of byte-identical
+    pixels whenever ``doc_id % base_mod`` collides, so the duplicate
+    structure crosses the container boundary."""
+    def encode(doc_id: int) -> bytes:
+        pix = _block_gray(doc_id % base_mod)
+        return M.jpeg_encode_rgb(pix) if doc_id % 2 == 0 else M.png_encode_rgb(pix)
 
-        for batch in batches:
-            payloads = []
-            for doc_id in batch["doc_id"]:
-                base = int(doc_id) % mod if mod else int(doc_id)
-                wb, hb = base % 3 + 1, base % 2 + 1
-                by, bx = np.mgrid[0:hb, 0:wb]
-                v = (base + 37 * bx + 73 * by) % 256
-                pix = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1)
-                rgb = np.stack([pix] * 3, axis=-1)
-                payloads.append(M.jpeg_encode_rgb(rgb))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(gen, "doc_id LONG, payload BINARY")
+    return _encoded_payload_df(spark, sf_dir, encode)
 
 
 _CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]

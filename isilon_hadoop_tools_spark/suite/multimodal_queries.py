@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from isilon_hadoop_tools_spark import multimodal as M
 from isilon_hadoop_tools_spark.operators import dedup, similarity
 
 from isilon_hadoop_tools_spark.suite._shared import (
@@ -22,13 +23,13 @@ from isilon_hadoop_tools_spark.suite._shared import (
     _gif_bmp_twin_payload_df,
     _gif_payload_df,
     _jpeg_payload_df,
+    _jpeg_png_twin_payload_df,
     _payload_df,
     _png_payload_df,
     _ppm_payload_df,
     _sliced_stream,
     _t,
     _unified_near_dups_oracle,
-    _wav_long_payload_df,
     _wav_payload_df,
     _y4m_payload_df,
     query,
@@ -52,8 +53,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over opaque binary payloads: byte size, content
     hash, magic-byte MIME sniffing — all JVM expressions, the payload
     never crosses into Python."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     out = M.attach_metadata(_payload_df(spark, sf_dir), "payload")
     return out.select(
         "doc_id",
@@ -76,8 +75,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_binary_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact binary dedup by content hash (fingerprint -> min id),
     the multimodal twin of ``dedup_exact_docs``."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.binary_dedup(_payload_df(spark, sf_dir), "payload", "doc_id")
 
 
@@ -96,8 +93,6 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched mapInPandas decode stage (stubbed codec): the
     schema contract, batch iteration, and column plumbing are real;
     the decoder body is a deterministic fake the oracle reproduces."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_image_stub(_payload_df(spark, sf_dir), "payload", "doc_id")
 
 
@@ -118,8 +113,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling stage for video-like payloads (stubbed decoder):
     one output row per sampled frame, exercising the one-to-many
     mapInPandas shape the real pyav/ffmpeg loop would use."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.sample_frames_stub(_payload_df(spark, sf_dir), "payload", "doc_id")
 
 
@@ -151,8 +144,6 @@ def multimodal_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aspect-preserving resize stage for image-like payloads (stubbed
     resampler): fit-to-64-box without upscaling, Arrow-batched
     mapInPandas with the real schema/batch contract."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.resize_image_stub(_payload_df(spark, sf_dir), "payload", "doc_id")
 
 
@@ -174,8 +165,6 @@ def multimodal_feature_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extraction stage (stubbed embedding model): payload ->
     8-dim feature vector in the exploded gate form, the ANN-ready
     fan-out a real image/audio encoder produces."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.extract_features_stub(
         _payload_df(spark, sf_dir), "payload", "doc_id", dim=8
     )
@@ -226,8 +215,6 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     header parse, buffer offset, reshape, or resample index
     hash-fails. Covers both the downscale and the never-upscale
     branches (source dims straddle the target box)."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_resize_ppm(
         _ppm_payload_df(spark, sf_dir), "payload", "doc_id", target=_PPM_TARGET
     )
@@ -260,8 +247,6 @@ def multimodal_y4m_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane slice), with dimensions, frame count, total luminance, and
     first/last top-left pixels recomputed analytically by the oracle;
     a wrong plane offset, frame split, or header parse hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.y4m_features(
         _y4m_payload_df(spark, sf_dir), "payload", "doc_id"
     )
@@ -312,7 +297,6 @@ def multimodal_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole-complete). One index design now serves text, images,
     audio, and video; the oracle brute-forces all qualifying pairs
     from the analytic luminance model."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     hashes = M.y4m_video_hash(
@@ -335,11 +319,12 @@ def multimodal_audio_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically from the SAME quantized tables, then brute-forces
     all qualifying pairs — one wrong tap constant, frame split, or
     derivative comparison hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     hashes = M.wav_goertzel_hash(
-        _wav_long_payload_df(spark, sf_dir), "payload", "doc_id"
+        _wav_payload_df(spark, sf_dir, base_mod=200, n_samples=144),
+        "payload",
+        "doc_id",
     )
     return hamming_band_pairs(
         hashes.select("doc_id", "ahash"), "ahash", "doc_id",
@@ -384,8 +369,6 @@ def multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     features. The oracle recomputes every feature analytically from
     the sample generator, so a wrong chunk offset, endianness, or
     two's-complement decode hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_wav_features(
         _wav_payload_df(spark, sf_dir), "payload", "doc_id"
     )
@@ -431,8 +414,6 @@ def multimodal_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette entry, or sub-block stitch hash-fails. A genuinely
     different compression family from PNG's DEFLATE: dictionary
     codes, not Huffman+LZ77."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_gif_features(
         _gif_payload_df(spark, sf_dir), "payload", "doc_id"
     )
@@ -485,7 +466,6 @@ def multimodal_mixed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     container-agnostic oracle brute-forces all qualifying pairs from
     the analytic pixel model: a single cross-codec decode divergence
     or missed cross-container candidate pair hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     block = (F.col("doc_id") / 200).cast("long") % 2
@@ -539,8 +519,6 @@ def multimodal_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes widths, per-channel sums, and the top-left
     pixel analytically, so one wrong filter prediction, CRC skip, or
     channel order hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_png_features(
         _png_payload_df(spark, sf_dir), "payload", "doc_id"
     )
@@ -579,8 +557,6 @@ def multimodal_bmp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes widths, per-channel sums, and the top-left
     pixel analytically, so a wrong stride, row flip, or channel order
     hash-fails immediately."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_bmp_features(
         _bmp_payload_df(spark, sf_dir), "payload", "doc_id"
     )
@@ -628,8 +604,6 @@ def multimodal_bmp_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance feeds the same banded pair join the SimHash text path
     uses. The oracle recomputes all 36 bits analytically from the
     pixel generator."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.bmp_ahash(_bmp_payload_df(spark, sf_dir), "payload", "doc_id")
 
 
@@ -678,7 +652,6 @@ def multimodal_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation is complete). The oracle brute-forces ALL
     <= 4-hamming pairs, so a single pair missed by the banding — or a
     single wrong fingerprint bit — hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     hashes = M.bmp_ahash(
@@ -731,8 +704,6 @@ def multimodal_bmp_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell strictly brighter — edge structure instead of absolute
     brightness, so global exposure shifts don't flip the hash. All 36
     bits recomputed analytically by the oracle."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.bmp_dhash(_bmp_payload_df(spark, sf_dir), "payload", "doc_id")
 
 
@@ -844,7 +815,6 @@ def multimodal_hash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash" production stacking claim. Evaluated on the ``doc_id <
     _BANDING_EVAL_DOCS`` prefix, so it keeps running as the corpus
     grows."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import (
         hamming_recall_eval,
     )
@@ -915,7 +885,6 @@ def multimodal_png_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode defect or missed band candidate hash-fails. With
     ``png_ahash`` sharing ``bmp_ahash``'s mosaic contract, one band
     index serves a mixed BMP/PNG corpus."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     hashes = M.png_ahash(
@@ -943,7 +912,6 @@ def multimodal_unified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force oracles, composed from their registered strings."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.streaming.neardup import _job_steps
 
     docs = _t(spark, sf_dir, "documents")
@@ -980,7 +948,9 @@ def multimodal_unified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             elif which == "audio":
                 out = M.wav_goertzel_hash(
-                    _wav_long_payload_df(spark, sf_dir), "payload", "doc_id"
+                    _wav_payload_df(spark, sf_dir, base_mod=200, n_samples=144),
+                    "payload",
+                    "doc_id",
                 ).select(
                     F.lit("audio").alias("modality"),
                     F.col("doc_id").alias("id"),
@@ -1033,7 +1003,6 @@ def multimodal_unified_index_stream(
     final pair state must
     equal the union of the two batch per-modality answers — composed
     from their registered oracle strings."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.streaming.events import drain
     from isilon_hadoop_tools_spark.streaming.neardup import (
         tagged_index_apply_batch,
@@ -1113,8 +1082,6 @@ def multimodal_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     chroma pinned at 128), so the oracle checks every decoded byte
     analytically — one wrong Huffman code, dezigzag slot, or IDCT
     scale factor hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
     return M.decode_jpeg_features(
         _jpeg_payload_df(spark, sf_dir), "payload", "doc_id"
     )
@@ -1165,7 +1132,6 @@ def multimodal_jpeg_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-forces all qualifying pairs from the analytic block model.
     With `jpeg_ahash` sharing the mosaic contract, one band index now
     serves a mixed BMP/PNG/GIF/JPEG corpus."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     hashes = M.jpeg_ahash(
@@ -1175,43 +1141,6 @@ def multimodal_jpeg_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashes.select("doc_id", "ahash"), "ahash", "doc_id",
         bits=36, max_hamming=4, bands=6,
     )
-
-
-def _jpeg_png_twin_payload_df(
-    spark: SparkSession, sf_dir: str, base_mod: int = 200
-) -> DataFrame:
-    """Mixed-container payloads over ONE block-constant-gray pixel
-    model (the regime where baseline JPEG decodes exactly): even
-    doc_ids encode as real JPEG, odd as real PNG — byte-different
-    containers (DCT+Huffman vs zlib+filters) of byte-identical
-    pixels whenever ``doc_id % base_mod`` collides, so the duplicate
-    structure crosses the container boundary."""
-    from isilon_hadoop_tools_spark import multimodal as M
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for doc_id in batch["doc_id"]:
-                base = int(doc_id) % base_mod
-                wb, hb = base % 3 + 1, base % 2 + 1
-                by, bx = np.mgrid[0:hb, 0:wb]
-                v = (base + 37 * bx + 73 * by) % 256
-                pix = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1)
-                rgb = np.stack([pix] * 3, axis=-1)
-                if int(doc_id) % 2 == 0:
-                    payloads.append(M.jpeg_encode_rgb(rgb))
-                else:
-                    payloads.append(M.png_encode_rgb(rgb))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(gen, "doc_id LONG, payload BINARY")
 
 
 @query(
@@ -1230,7 +1159,6 @@ def multimodal_jpeg_png_near_dups(
     pixel-exact. The oracle is container-agnostic (literally
     `multimodal_jpeg_near_dups`'s registered string: the pixel model
     is identical), so any cross-codec divergence hash-fails."""
-    from isilon_hadoop_tools_spark import multimodal as M
     from isilon_hadoop_tools_spark.operators.dedup import hamming_band_pairs
 
     payloads = _jpeg_png_twin_payload_df(spark, sf_dir, base_mod=200)

@@ -216,6 +216,29 @@ def _bmp_bytes(width, height, px):
     return header + body
 
 
+def _bmp_from_pix(pix) -> bytes:
+    """A BMP holding an (h, w, 3) top-down RGB array."""
+    h, w, _ = pix.shape
+    return _bmp_bytes(w, h, lambda x, y: tuple(int(v) for v in pix[y, x]))
+
+
+def _gif_from_pix(pix) -> bytes:
+    """A GIF whose palette is the array's distinct colors."""
+    import numpy as np
+
+    pal, idx = np.unique(pix.reshape(-1, 3), axis=0, return_inverse=True)
+    return M.gif_encode(idx.reshape(pix.shape[:2]), pal)
+
+
+# container -> (encoder of an (h, w, 3) RGB array, features stage, aHash stage)
+_CONTAINERS = {
+    "bmp": (_bmp_from_pix, M.decode_bmp_features, M.bmp_ahash),
+    "png": (M.png_encode_rgb, M.decode_png_features, M.png_ahash),
+    "gif": (_gif_from_pix, M.decode_gif_features, M.gif_ahash),
+    "jpeg": (M.jpeg_encode_rgb, M.decode_jpeg_features, M.jpeg_ahash),
+}
+
+
 def test_decode_bmp_features_known_image(spark):
     from isilon_hadoop_tools_spark.multimodal import decode_bmp_features
 
@@ -242,12 +265,15 @@ def test_decode_bmp_features_rejects_malformed(spark):
     good = _bmp_bytes(2, 2, lambda x, y: (1, 2, 3))
     bad_magic = b"XX" + good[2:]
     truncated = good[:-4]  # pixel array shorter than stride*height
-    for payload in (bad_magic, truncated):
+    short_header = good[:40]
+    for payload in (bad_magic, truncated, short_header):
         df = spark.createDataFrame(
             [(1, bytearray(payload))], "doc_id LONG, payload BINARY"
         )
-        with pytest.raises(PythonException):
-            decode_bmp_features(df, "payload", "doc_id").collect()
+        # the features and both hashes share one parser: all reject
+        for stage in (decode_bmp_features, M.bmp_ahash, M.bmp_dhash):
+            with pytest.raises(PythonException):
+                stage(df, "payload", "doc_id").collect()
 
 
 def test_binary_file_source_to_bmp_pipeline(spark, tmp_path):
@@ -509,14 +535,17 @@ def test_decode_png_features_matches_bmp_contract(spark):
         assert r["sum_g"] == int(pix[..., 1].sum())
         assert r["sum_b"] == int(pix[..., 2].sum())
         assert r["top_left"] == 0 * 65536 + 1 * 256 + 2
+    # the same pixels through the BMP and GIF containers: the same row
+    for name in ("bmp", "gif"):
+        encode, features, _ = _CONTAINERS[name]
+        df = spark.createDataFrame([(1, encode(pix))], SCHEMA)
+        assert features(df, "payload", "doc_id").collect() == [out[1]], name
 
 
 def test_png_ahash_matches_bmp_ahash_on_identical_pixels(spark):
     # the cross-container contract: identical pixels produce identical
-    # fingerprints whether they arrive as BMP or PNG, so one band
+    # fingerprints whether they arrive as BMP, PNG or GIF, so one band
     # index serves a mixed corpus
-    import struct
-
     import numpy as np
 
     from isilon_hadoop_tools_spark import multimodal as M
@@ -524,44 +553,20 @@ def test_png_ahash_matches_bmp_ahash_on_identical_pixels(spark):
     rng = np.random.default_rng(11)
     pix = rng.integers(0, 256, (5, 7, 3))  # top-down RGB
 
-    def bmp_bytes(p):
-        h, w, _ = p.shape
-        stride = (w * 3 + 3) // 4 * 4
-        body = bytearray()
-        for y in range(h - 1, -1, -1):  # bottom-up rows
-            row = bytearray()
-            for x in range(w):
-                r, g, b = (int(v) for v in p[y, x])
-                row += bytes([b, g, r])  # BGR
-            row += bytes(stride - 3 * w)
-            body += row
-        header = (
-            b"BM"
-            + struct.pack("<I", 54 + len(body))
-            + b"\x00\x00\x00\x00"
-            + struct.pack("<I", 54)
-            + struct.pack("<I", 40)
-            + struct.pack("<ii", w, h)
-            + struct.pack("<H", 1)
-            + struct.pack("<H", 24)
-            + struct.pack("<I", 0)
-            + struct.pack("<I", len(body))
-            + struct.pack("<ii", 2835, 2835)
-            + struct.pack("<II", 0, 0)
-        )
-        return bytes(header + body)
-
     bdf = spark.createDataFrame(
-        [(1, bmp_bytes(pix))], "doc_id LONG, payload BINARY"
+        [(1, _bmp_from_pix(pix))], "doc_id LONG, payload BINARY"
     )
     pdf = spark.createDataFrame(
         [(1, M.png_encode_rgb(pix, [0, 1, 2, 3, 4]))],
         "doc_id LONG, payload BINARY",
     )
+    gdf = spark.createDataFrame([(1, _gif_from_pix(pix))], SCHEMA)
     bh = M.bmp_ahash(bdf, "payload", "doc_id").collect()[0]
     ph = M.png_ahash(pdf, "payload", "doc_id").collect()[0]
+    gh = M.gif_ahash(gdf, "payload", "doc_id").collect()[0]
     assert (bh["width"], bh["height"]) == (ph["width"], ph["height"]) == (7, 5)
     assert bh["ahash"] == ph["ahash"]
+    assert gh == ph
 
 
 def test_png_grayscale_decode_hand_vectors():
@@ -762,6 +767,11 @@ def test_gif_ahash_matches_bmp_ahash_on_identical_pixels(spark):
     bits = (36 * cells > cells.sum()).astype(np.int64)
     expect = int((bits * (1 << np.arange(36).reshape(6, 6))).sum())
     assert got["ahash"] == expect
+    # the same pixels as BMP and PNG hash to the same value
+    for name in ("bmp", "png"):
+        encode, _, ahash = _CONTAINERS[name]
+        df = spark.createDataFrame([(1, encode(pix))], SCHEMA)
+        assert ahash(df, "payload", "doc_id").collect() == [got], name
 
 
 def test_wav_goertzel_hash_gain_invariant_and_rejects_short(spark):
@@ -981,26 +991,39 @@ def test_jpeg_malformed_payloads_raise():
 
 
 def test_jpeg_png_cross_codec_identical_ahash(spark):
-    """The cross-container dedup property extended to the DCT format:
-    a JPEG and a PNG of the SAME pixels produce the IDENTICAL mosaic
-    aHash, so one band index serves a mixed corpus — possible only
-    because the block-constant regime decodes exactly."""
-    rows = []
-    for doc_id, base in ((1, 42), (2, 42), (3, 99)):
-        rows.append((doc_id, bytearray(M.jpeg_encode_rgb(_block_gray(base)))))
-    jdf = spark.createDataFrame(rows, "doc_id long, payload binary")
-    prows = []
-    for doc_id, base in ((1, 42), (2, 42), (3, 99)):
-        prows.append(
-            (doc_id, bytearray(M.png_encode_rgb(_block_gray(base))))
+    """The cross-container dedup property extended to the DCT format,
+    as one table over all four image containers: a JPEG, PNG, GIF and
+    BMP of the SAME block-gray pixels decode to the IDENTICAL feature
+    row and mosaic aHash, so one band index serves a mixed corpus —
+    possible for JPEG only because the block-constant regime decodes
+    exactly."""
+    bases = ((1, 42), (2, 42), (3, 99))
+    feats, hashes = {}, {}
+    for name, (encode, features, ahash) in _CONTAINERS.items():
+        df = spark.createDataFrame(
+            [(doc_id, bytearray(encode(_block_gray(base)))) for doc_id, base in bases],
+            "doc_id long, payload binary",
         )
-    pdf = spark.createDataFrame(prows, "doc_id long, payload binary")
-    jh = {r["doc_id"]: r["ahash"]
-          for r in M.jpeg_ahash(jdf, "payload", "doc_id").collect()}
-    ph = {r["doc_id"]: r["ahash"]
-          for r in M.png_ahash(pdf, "payload", "doc_id").collect()}
+        feats[name] = {
+            r["doc_id"]: r for r in features(df, "payload", "doc_id").collect()
+        }
+        hashes[name] = {
+            r["doc_id"]: r["ahash"] for r in ahash(df, "payload", "doc_id").collect()
+        }
+    jh, ph = hashes["jpeg"], hashes["png"]
     assert jh == ph
     assert jh[1] == jh[2] != jh[3]
+    assert hashes["bmp"] == hashes["gif"] == jh
+    for doc_id, base in bases:
+        pix = _block_gray(base)
+        h, w, _ = pix.shape
+        v = int(pix.sum()) // 3  # gray: every channel sums alike
+        expect = (w, h, w * h, v, v, v, int(pix[0, 0, 0]) * 65793)
+        for name in _CONTAINERS:
+            r = feats[name][doc_id]
+            got = (r["width"], r["height"], r["n_pixels"], r["sum_r"],
+                   r["sum_g"], r["sum_b"], r["top_left"])
+            assert got == expect, name
 
 
 def test_hash_recall_query_evaluates_id_prefix_sample(spark, monkeypatch):

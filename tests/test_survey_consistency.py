@@ -323,6 +323,29 @@ def test_engine_modules_build_driver_frames_through_local_df():
     assert not calls, f"createDataFrame calls, use local_df: {calls}"
 
 
+def test_codec_stages_share_one_map_in_pandas():
+    # multimodal.py's decoders and hashes run through _per_payload, and
+    # the suite's encoded payload fixtures through _encoded_payload_df:
+    # a second mapInPandas call in either is a copied stage runner.
+    import ast
+
+    pkg = REPO / "isilon_hadoop_tools_spark"
+
+    def calls(paths):
+        return [
+            f"{path.relative_to(REPO)}:{node.lineno}"
+            for path in paths
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mapInPandas"
+        ]
+
+    for paths in ([pkg / "multimodal.py"], sorted((pkg / "suite").rglob("*.py"))):
+        found = calls(paths)
+        assert len(found) == 1, f"mapInPandas calls, want exactly one: {found}"
+
+
 def test_survey_2_12_row_ids_unique():
     # r12 VERDICT: the §2.12 table used `L16g` for two different rows
     # (JPEG codec + audio fingerprint); the row id is how rounds refer

@@ -598,6 +598,7 @@ def curvature() -> int:
         from isilon_hadoop_tools_spark.operators.dedup import (
             hamming_band_pairs,
         )
+        from isilon_hadoop_tools_spark.suite._shared import _block_gray
 
         n = 10_000 * c
         ids = spark.range(n).select(F.col("id").alias("doc_id"))
@@ -609,13 +610,8 @@ def curvature() -> int:
             for batch in batches:
                 payloads = []
                 for doc_id in batch["doc_id"]:
-                    base = int(doc_id) % 200
                     salt = (int(doc_id) // 10_000) * 0x5B % 256
-                    wb, hb = base % 3 + 1, base % 2 + 1
-                    by, bx = np.mgrid[0:hb, 0:wb]
-                    v = ((base + 37 * bx + 73 * by) % 256) ^ salt
-                    pix = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1)
-                    rgb = np.stack([pix] * 3, axis=-1).astype(np.uint8)
+                    rgb = (_block_gray(int(doc_id) % 200) ^ salt).astype(np.uint8)
                     if int(doc_id) % 2 == 0:
                         payloads.append(M.jpeg_encode_rgb(rgb))
                     else:
